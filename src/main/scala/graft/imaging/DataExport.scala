@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   * the Spark surface.
   *
   * Scale shape: both artifacts are per-DATASET (one global row, one
-  * frame-meta row per frame of one dataset), so the single-file
-  * coalesce and the one-row JSON collect are bounded by dataset size,
-  * never corpus size — the plan behind them is the pushed-down
-  * needle-query plan of [[ImagingDb.getFramesMeta]].
+  * frame-meta row per frame of one dataset), and both are computed
+  * from that dataset's own frames — [[ImagingDb.getFramesMeta]] and
+  * [[globalMetaRow]] join the frames to the one target row before
+  * aggregating, so no step aggregates the whole catalog.
   */
 object DataExport {
 
@@ -27,12 +27,14 @@ object DataExport {
     "bit_depth")
 
   /** Per-dataset global metadata as one row, in the
-    * validate_global_meta column set.
+    * validate_global_meta column set: frames_global over the target
+    * dataset's own frames.
     */
   def globalMetaRow(spark: SparkSession, dir: String,
       datasetSerial: String): DataFrame =
-    ImagingOps.globalMeta(spark, dir)
-      .filter(col("dataset_serial") === datasetSerial)
+    ImagingModel.framesGlobalOf(ImagingDb.framesOf(spark, dir, datasetSerial),
+      broadcast(ImagingModel.dataSet(spark, dir)
+        .filter(col("dataset_serial") === datasetSerial)))
       .select("dataset_serial", GlobalMetaKeys: _*)
 
   /** Write `frames_meta.csv` (directory with a single part file —

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MapType, StringType}
 
+import graft.tables.Tables
+
 /** The reference's user-facing call surface, parameterized — the API a
   * czbiohub/imagingDB user would call after switching engines. Each
   * method builds the same DataFrame plan as the fixed-parameter
@@ -67,10 +69,10 @@ object ImagingDb {
   }
 
   /** Multi-criterion dataset search, ordered by serial. A
-    * `metaContains` criterion joins through the dataset-cardinality
-    * frames_global metadata (left-semi — datasets qualify, rows don't
-    * multiply), evaluating the JSON predicate on the metadata side
-    * exactly like the reference's JSONB containment.
+    * `metaContains` criterion keeps the datasets with frames whose
+    * dataset-level JSON matches, like the reference's JSONB containment;
+    * the JSON predicate runs once per dataset left by the cheap criteria
+    * ([[metaMatchIds]]), never on a frame row.
     */
   def getDatasets(spark: SparkSession, dir: String,
       criteria: SearchCriteria = SearchCriteria()): DataFrame = {
@@ -86,13 +88,24 @@ object ImagingDb {
     criteria.description.foreach(d =>
       ds = ds.filter(col("description").contains(d)))
     criteria.metaContains.foreach { case (k, v) =>
-      val matching = framesGlobal(spark, dir)
-        .filter(metaContainsPredicate(col("metadata_json"), k, v))
-        .select(col("dataset_id").as("meta_ds_id"))
-      ds = ds.join(matching, col("id") === col("meta_ds_id"), "left_semi")
+      val ids = metaMatchIds(ds, k, v)
+      ds = ds.filter(col("id").isin(ids: _*))
+        .join(Tables.lineitem(spark, dir).select("l_orderkey"),
+          col("id") === col("l_orderkey"), "left_semi")
     }
     ds.orderBy("dataset_serial")
   }
+
+  /** Ids of the frames=true datasets of the data_set slice `ds` whose
+    * dataset-level JSON maps `key` to `value`, collected on the driver.
+    * Literals cannot carry the parse into a frames plan, as filtering
+    * frames_global did: Catalyst inferred it onto every lineitem row.
+    */
+  private[imaging] def metaMatchIds(ds: DataFrame, key: String,
+      value: String): Array[Long] =
+    ds.filter(col("frames"))
+      .filter(metaContainsPredicate(datasetMetaJson(col("id")), key, value))
+      .select("id").collect().map(_.getLong(0))
 
   /** The JSONB-containment predicate of a `metaContains` criterion.
     * The key goes in as a map-lookup LITERAL, never interpolated into
@@ -135,6 +148,20 @@ object ImagingDb {
     f
   }
 
+  /** One dataset's data_set row as (ds_id, dataset_serial). */
+  private def target(spark: SparkSession, dir: String,
+      datasetSerial: String): DataFrame =
+    dataSet(spark, dir).filter(col("dataset_serial") === datasetSerial)
+      .select(col("id").as("ds_id"), col("dataset_serial"))
+
+  /** One dataset's frames: the frames fact joined to its broadcast
+    * data_set row, so every per-dataset request reads the same shape.
+    */
+  private[imaging] def framesOf(spark: SparkSession, dir: String,
+      datasetSerial: String): DataFrame =
+    frames(spark, dir).join(broadcast(target(spark, dir, datasetSerial)),
+      col("frames_global_id") === col("ds_id"))
+
   /** Frames of one dataset sliced on any combination of channel
     * names/indices, slices, times and positions (None = unconstrained,
     * as in the reference's pos_ids/time_ids/... kwargs).
@@ -147,14 +174,9 @@ object ImagingDb {
       sliceIds: Option[Seq[Int]] = None,
       timeIds: Option[Seq[Int]] = None,
       posIds: Option[Seq[Int]] = None): DataFrame = {
-    val target = dataSet(spark, dir)
-      .filter(col("dataset_serial") === datasetSerial)
-      .select(col("id").as("ds_id"), col("dataset_serial"))
-    val f = applyFrameFilters(
-      frames(spark, dir)
-        .join(broadcast(target), col("frames_global_id") === col("ds_id")),
+    applyFrameFilters(framesOf(spark, dir, datasetSerial),
       channels, channelNames, channelIds, sliceIds, timeIds, posIds)
-    f.select("dataset_serial", "channel_idx", "slice_idx", "time_idx",
+      .select("dataset_serial", "channel_idx", "slice_idx", "time_idx",
         "pos_idx", "channel_name", "file_name", "sha256")
       .orderBy("file_name", "sha256")
   }
@@ -178,27 +200,14 @@ object ImagingDb {
       sliceIds: Option[Seq[Int]] = None,
       timeIds: Option[Seq[Int]] = None,
       posIds: Option[Seq[Int]] = None): DataFrame = {
-    val target = dataSet(spark, dir)
-      .filter(col("dataset_serial") === datasetSerial)
-      .select(col("id").as("ds_id"), col("dataset_serial"))
-    val f0 = frames(spark, dir)
-      .join(broadcast(target), col("frames_global_id") === col("ds_id"))
+    val f0 = framesOf(spark, dir, datasetSerial)
     val f = applyFrameFilters(f0, channels, channelNames, channelIds,
       sliceIds, timeIds, posIds)
-    val g = f0.groupBy(col("frames_global_id").as("g_id"))
-      .agg(count(lit(1)).as("nbr_frames"),
-        countDistinct(col("slice_idx")).as("nbr_slices"),
-        countDistinct(col("channel_idx")).as("nbr_channels"),
-        countDistinct(col("time_idx")).as("nbr_timepoints"),
-        countDistinct(col("pos_idx")).as("nbr_positions"))
-    // aliased: the frames table has a PER-FRAME metadata_json; the
-    // output's metadata_json is the DATASET-level JSONB, matching the
-    // reference's _get_global_meta
-    val meta = framesGlobal(spark, dir)
-      .select(col("dataset_id").as("m_id"),
-        col("metadata_json").as("global_json"))
-    f.join(broadcast(g), col("frames_global_id") === col("g_id"))
-      .join(broadcast(meta), col("frames_global_id") === col("m_id"))
+    // the output's metadata_json is the DATASET-level JSONB of the
+    // reference's _get_global_meta, not the frames' per-frame one
+    val g = globalsOf(f0)
+      .withColumn("global_json", datasetMetaJson(col("frames_global_id")))
+    f.join(broadcast(g), Seq("frames_global_id"))
       .select(col("dataset_serial"), col("file_name"), col("channel_idx"),
         col("channel_name"), col("slice_idx"), col("time_idx"),
         col("pos_idx"), col("sha256"), col("nbr_frames"),
@@ -224,17 +233,13 @@ object ImagingDb {
       sliceIds: Option[Seq[Int]] = None,
       timeIds: Option[Seq[Int]] = None,
       posIds: Option[Seq[Int]] = None): DataFrame = {
-    val target = dataSet(spark, dir)
-      .filter(col("dataset_serial") === datasetSerial)
-      .select(col("id").as("ds_id"), col("dataset_serial"),
-        concat(lit("raw_frames/"), col("dataset_serial")).as("storage_dir"))
-    val f = applyFrameFilters(
-      frames(spark, dir)
-        .join(broadcast(target), col("frames_global_id") === col("ds_id")),
+    val frameFiles = applyFrameFilters(framesOf(spark, dir, datasetSerial),
       channels, channelNames, channelIds, sliceIds, timeIds, posIds)
-    val frameFiles = f.select("dataset_serial", "storage_dir", "file_name")
+      .select(col("dataset_serial"),
+        concat(lit("raw_frames/"), col("dataset_serial")).as("storage_dir"),
+        col("file_name"))
     val wholeFiles = fileGlobal(spark, dir)
-      .join(broadcast(target.drop("storage_dir")),
+      .join(broadcast(target(spark, dir, datasetSerial)),
         col("dataset_id") === col("ds_id"))
       .select("dataset_serial", "storage_dir", "file_name")
     frameFiles.unionByName(wholeFiles)

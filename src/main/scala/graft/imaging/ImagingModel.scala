@@ -1,6 +1,6 @@
 package graft.imaging
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.tables.Tables
@@ -143,20 +143,15 @@ object ImagingModel {
   private def bitmapCard(c: String) =
     expr(s"cast(bit_count(bit_or(shiftleft(1L, $c))) as bigint)")
 
-  /** frames_global: per-dataset stack metadata recomputed from frames
-    * (what file_splitter.py assembles at upload time).
+  /** The one frames_global aggregate: per-dataset stack counts of the
+    * frames `f`, one row per `frames_global_id`. Exact distinct counts
+    * as 64-bit membership bitmaps: four countDistincts would go through
+    * RewriteDistinctAggregates' Expand (4x the fact rows + a shuffle),
+    * and collect_set falls out of codegen into ObjectHashAggregate. The
+    * grid indices are < 64 by construction (§3: c%4, z%8, t=line-1,
+    * p%6); for an unbounded domain swap in size(collect_set(...)).
     */
-  def framesGlobal(spark: SparkSession, dir: String): DataFrame = {
-    val f = frames(spark, dir)
-    val d = dataSet(spark, dir).select("id", "dataset_serial")
-    // Exact distinct counts as 64-bit membership bitmaps
-    // (bit_count(bit_or(1 << idx))): four countDistincts on one groupBy
-    // would go through RewriteDistinctAggregates' Expand (4x the fact
-    // rows + an extra shuffle), and collect_set would fall out of
-    // whole-stage codegen into ObjectHashAggregate. The grid indices of
-    // this model are < 64 by construction (§3: c%4, z%8, t=line-1, p%6),
-    // so one long of agg state per dimension is exact; for an unbounded
-    // index domain swap in size(collect_set(...)).
+  def globalsOf(f: DataFrame): DataFrame =
     f.groupBy(col("frames_global_id"))
       .agg(
         count(lit(1)).as("nbr_frames"),
@@ -164,7 +159,34 @@ object ImagingModel {
         bitmapCard("channel_idx").as("nbr_channels"),
         bitmapCard("time_idx").as("nbr_timepoints"),
         bitmapCard("pos_idx").as("nbr_positions"))
-      .join(d, col("frames_global_id") === col("id"))
+
+  /** frames_global.metadata_json (the dataset-level JSONB the
+    * reference's jsonb_queries.ipynb searches by protein) as a function
+    * of the dataset id alone, mirrored verbatim in the oracle CTE.
+    */
+  def datasetMetaJson(id: Column): Column =
+    concat(lit("{\"protein_name\":\""),
+      element_at(array(proteinNames.map(lit): _*), (id % 12 + 1).cast("int")),
+      lit("\",\"well\":\""),
+      lit("ABCDEFGH").substr((id % 8).cast("int") + 1, lit(1)),
+      ((id % 12) + 1).cast("string"),
+      lit("\"}"))
+
+  /** frames_global: per-dataset stack metadata recomputed from frames
+    * (what file_splitter.py assembles at upload time).
+    */
+  def framesGlobal(spark: SparkSession, dir: String): DataFrame =
+    framesGlobalOf(frames(spark, dir), dataSet(spark, dir))
+      .drop("dataset_serial")
+
+  /** frames_global rows plus `dataset_serial` for the datasets of the
+    * data_set slice `ds`, from their frames `f`: the whole catalog for
+    * [[framesGlobal]], one dataset's own frames for a per-dataset lookup.
+    */
+  def framesGlobalOf(f: DataFrame, ds: DataFrame): DataFrame =
+    globalsOf(f)
+      .join(ds.select("id", "dataset_serial"),
+        col("frames_global_id") === col("id"))
       .select(
         col("frames_global_id").as("id"),
         col("nbr_frames"),
@@ -174,20 +196,9 @@ object ImagingModel {
         col("nbr_timepoints"), col("nbr_positions"),
         lit("uint16").as("bit_depth"),
         concat(lit("raw_frames/"), col("dataset_serial")).as("storage_dir"),
-        // dataset-level JSONB twin (frames_global.py metadata_json —
-        // the field the reference's jsonb_queries.ipynb searches by
-        // protein): deterministic per dataset, mirrored verbatim in
-        // the oracle CTE
-        concat(lit("{\"protein_name\":\""),
-          element_at(array(proteinNames.map(lit): _*),
-            (col("frames_global_id") % 12 + 1).cast("int")),
-          lit("\",\"well\":\""),
-          expr("substring('ABCDEFGH', " +
-            "cast(frames_global_id % 8 as int) + 1, 1)"),
-          ((col("frames_global_id") % 12) + 1).cast("string"),
-          lit("\"}")).as("metadata_json"),
-        col("frames_global_id").as("dataset_id"))
-  }
+        datasetMetaJson(col("frames_global_id")).as("metadata_json"),
+        col("frames_global_id").as("dataset_id"),
+        col("dataset_serial"))
 
   /** The deterministic protein rotation behind frames_global's
     * metadata_json (publicly known tagged-line targets; TOPOR is the

@@ -115,14 +115,7 @@ object ImagingOps {
     val f = frames(spark, dir)
       .filter(col("frames_global_id") === targetId)
       .join(broadcast(targetDs), col("frames_global_id") === col("ds_id"))
-    val g = f.groupBy(col("frames_global_id").as("g_id"))
-      .agg(
-        count(lit(1)).as("nbr_frames"),
-        countDistinct(col("slice_idx")).as("nbr_slices"),
-        countDistinct(col("channel_idx")).as("nbr_channels"),
-        countDistinct(col("time_idx")).as("nbr_timepoints"),
-        countDistinct(col("pos_idx")).as("nbr_positions"))
-    f.join(broadcast(g), col("frames_global_id") === col("g_id"))
+    f.join(broadcast(globalsOf(f)), Seq("frames_global_id"))
       .select(col("dataset_serial"), col("file_name"), col("channel_idx"),
         col("channel_name"), col("slice_idx"), col("time_idx"),
         col("pos_idx"), col("sha256"), col("nbr_frames"),
@@ -161,9 +154,7 @@ object ImagingOps {
     * file_splitter.py assembles it at upload.
     */
   def globalMeta(spark: SparkSession, dir: String): DataFrame =
-    framesGlobal(spark, dir)
-      .join(broadcast(dataSet(spark, dir).select(col("id").as("ds_id"),
-        col("dataset_serial"))), col("dataset_id") === col("ds_id"))
+    framesGlobalOf(frames(spark, dir), dataSet(spark, dir))
       .select("dataset_serial", "nbr_frames", "im_width", "im_height",
         "nbr_slices", "nbr_channels", "im_colors", "nbr_timepoints",
         "nbr_positions", "bit_depth", "storage_dir")
@@ -173,25 +164,21 @@ object ImagingOps {
     * cell 4: `session.query(DataSet).join(FramesGlobal).join(Frames)
     * .filter(FramesGlobal.metadata_json.contains({"protein_name":
     * "TOPOR"}))` — every dataset whose stack-level JSONB carries the
-    * given key/value. The JSON predicate evaluates on the
-    * dataset-cardinality frames_global side (one row per dataset,
-    * never the frames fact), then the tiny dimension broadcasts for
-    * the serial — at 100 TB the filter runs on the metadata table
-    * scan exactly like the reference's JSONB GIN probe.
+    * given key/value. As in [[ImagingDb.getDatasets]], the JSON
+    * predicate runs on the data_set dimension and the matching ids
+    * reach the frames scan as literals, so only their frames are
+    * counted and no frame row ever parses JSON.
     */
   def metaSearch(spark: SparkSession, dir: String,
-      protein: String = "TOPOR"): DataFrame =
-    framesGlobal(spark, dir)
-      .select(col("dataset_id"),
-        get_json_object(col("metadata_json"), "$.protein_name")
-          .as("protein_name"),
+      protein: String = "TOPOR"): DataFrame = {
+    val ids = ImagingDb.metaMatchIds(dataSet(spark, dir), "protein_name",
+      protein)
+    val f = frames(spark, dir).filter(col("frames_global_id").isin(ids: _*))
+    framesGlobalOf(f, broadcast(dataSet(spark, dir)))
+      .select(col("dataset_serial"), lit(protein).as("protein_name"),
         col("nbr_frames"))
-      .filter(col("protein_name") === protein)
-      .join(broadcast(dataSet(spark, dir)
-        .select(col("id").as("ds_id"), col("dataset_serial"))),
-        col("dataset_id") === col("ds_id"))
-      .select("dataset_serial", "protein_name", "nbr_frames")
       .orderBy("dataset_serial")
+  }
 
   /** Distinct metadata-JSON values for a key —
     * notebooks/jsonb_queries.ipynb cell 6: `query(FramesGlobal
@@ -522,14 +509,9 @@ object ImagingOps {
   def storageRollup(spark: SparkSession, dir: String): DataFrame = {
     // Pre-aggregate per (project, microscope) first — one shuffle over the
     // big side; the rollup's Expand then triples only the tiny aggregate,
-    // not the fact table. Frame counts come straight from `frames`
-    // rather than through framesGlobal: framesGlobal's nbr_frames IS
-    // frames.groupBy(dataset).count(), but routing through it pays its
-    // internal dataSet join (for storage_dir this query never reads) —
-    // one whole orders scan + broadcast join of pure overhead here.
-    val perScope = frames(spark, dir)
-      .groupBy("frames_global_id")
-      .agg(count(lit(1)).as("nbr_frames"))
+    // not the fact table. Frame counts come from [[globalsOf]], not
+    // framesGlobal, whose dataSet join (for storage_dir) it never reads.
+    val perScope = globalsOf(frames(spark, dir))
       .join(broadcast(dataSet(spark, dir).select(col("id").as("ds_id"),
         expr("split_part(dataset_serial, '-', 1)").as("prj_key"),
         col("microscope").as("scope_key"))),

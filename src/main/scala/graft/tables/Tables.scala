@@ -29,7 +29,7 @@ object Tables {
     * stale plans (r14 ADVICE). One listing level matches the flat
     * layout every table here uses (part files directly under
     * `<name>.parquet/`); nested partition subdirectories would need a
-    * recursive walk, asserted against below. A superseded signature's
+    * recursive walk, so [[signature]] rejects them. A superseded signature's
     * entry for the same (dir, name) is evicted, so rewritten tables
     * don't accumulate dead plans.
     *
@@ -60,33 +60,45 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     require(names.contains(name), s"unknown table: $name")
     val path = s"$dir/$name.parquet"
-    val sig = try {
-      val p = new org.apache.hadoop.fs.Path(path)
+    signature(spark, path).fold(spark.read.parquet(path)) { sig =>
+      val cache = cacheFor(spark)
+      val key = (dir, name, sig)
+      cache.get(key).flatMap(r => Option(r.get())).getOrElse {
+        val df = spark.read.parquet(path)
+        // evict superseded signatures of the same table before caching
+        cache.keys.filter(k => k._1 == dir && k._2 == name && k != key)
+          .foreach(cache.remove)
+        cache.put(key, new java.lang.ref.SoftReference(df))
+        df
+      }
+    }
+  }
+
+  /** The staleness signature of a table path: an order-mixing (FNV-1a)
+    * fold of its own (mtime, length) and its direct children's sorted
+    * (name, mtime, length) triples, so equal (mtime, length) pairs never
+    * cancel and a rename changes it. None when the path cannot be
+    * listed: such a load is never cached. A nested directory fails
+    * loudly instead of getting a signature blind to its contents.
+    */
+  private def signature(spark: SparkSession, path: String): Option[Long] = {
+    def mix(h: Long, x: Long) = (h ^ x) * 0x100000001b3L
+    val p = new org.apache.hadoop.fs.Path(path)
+    try {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val st = fs.getFileStatus(p)
-      var s = st.getModificationTime ^ java.lang.Long.rotateLeft(st.getLen, 32)
-      if (st.isDirectory) {
-        fs.listStatus(p).foreach { c =>
-          require(!c.isDirectory,
-            s"$path: nested directory ${c.getPath.getName} — the one-level " +
-              "staleness signature assumes a flat part-file layout")
-          s ^= java.lang.Long.rotateLeft(c.getModificationTime, 17) ^
-            java.lang.Long.rotateLeft(c.getLen, 43)
-        }
-      }
-      s
-    } catch { case _: Exception => -1L }
-    val cache = cacheFor(spark)
-    val key = (dir, name, sig)
-    val hit = cache.get(key).flatMap(r => Option(r.get()))
-    hit.getOrElse {
-      val df = spark.read.parquet(path)
-      // evict superseded signatures of the same table before caching
-      cache.keys.filter(k => k._1 == dir && k._2 == name && k != key)
-        .foreach(cache.remove)
-      cache.put(key, new java.lang.ref.SoftReference(df))
-      df
-    }
+      val kids =
+        if (st.isDirectory) fs.listStatus(p).sortBy(_.getPath.getName)
+        else Array.empty[org.apache.hadoop.fs.FileStatus]
+      kids.foreach(c => require(!c.isDirectory,
+        s"$path: nested directory ${c.getPath.getName} — the one-level " +
+          "staleness signature assumes a flat part-file layout"))
+      Some(kids.foldLeft(mix(mix(0xcbf29ce484222325L, st.getModificationTime),
+          st.getLen)) { (h, c) =>
+        mix(mix(c.getPath.getName.foldLeft(h)((h, ch) => mix(h, ch.toLong)),
+          c.getModificationTime), c.getLen)
+      })
+    } catch { case _: java.io.IOException => None }
   }
 
   /** Physical-layout drift guard for timestamp-like columns (the r6

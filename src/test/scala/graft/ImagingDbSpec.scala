@@ -1,12 +1,15 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.imaging.{ImagingDb, ImagingModel}
+import graft.imaging.{DataExport, ImagingDb, ImagingModel, ImagingOps}
 import graft.imaging.ImagingDb.SearchCriteria
+import graft.tools.PlanAudit
 
-class ImagingDbSpec extends AnyFunSuite {
+class ImagingDbSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import TestSpark.{sfDir, spark}
 
   private lazy val someSerial = ImagingModel
@@ -203,5 +206,59 @@ class ImagingDbSpec extends AnyFunSuite {
       assert(parsed.columns.contains(k), s"missing global key $k")
       assert(parsed.filter(col(k).isNull).count() === 0)
     }
+  }
+
+  test("getDatasets(metaContains) parses no JSON over lineitem rows") {
+    val q = ImagingDb.getDatasets(spark, sfDir, SearchCriteria(
+      projectId = Some("PRJ3"), metaContains = Some(("protein_name", "TOPOR"))))
+    val plan = q.queryExecution.executedPlan
+    assert(PlanAudit.jsonOverScan(plan, "lineitem").isEmpty, plan.treeString)
+  }
+
+  test("getFramesMeta aggregates only the target dataset's frames") {
+    val plan = ImagingDb.getFramesMeta(spark, sfDir, someSerial)
+      .queryExecution.executedPlan
+    val aggs = collect(plan) { case a: BaseAggregateExec => a }
+    assert(aggs.nonEmpty)
+    // every aggregate's input passes through the one-serial filter
+    aggs.foreach(a => assert(a.treeString.contains(someSerial),
+      s"aggregate over all datasets:\n${a.treeString}"))
+  }
+
+  test("per-dataset globals equal the whole-catalog frames_global rows") {
+    val global = ImagingModel.framesGlobal(spark, sfDir)
+      .join(ImagingModel.dataSet(spark, sfDir).select(
+        col("id").as("ds_id"), col("dataset_serial")),
+        col("dataset_id") === col("ds_id"))
+    val globalCols = Seq("nbr_frames", "nbr_slices", "nbr_channels",
+      "nbr_timepoints", "nbr_positions", "metadata_json")
+    val serials = global.filter(col("nbr_frames") > 1)
+      .orderBy("dataset_serial").select("dataset_serial")
+      .collect().map(_.getString(0))
+    assert(serials.length >= 4)
+    val meta = ImagingOps.globalMeta(spark, sfDir)
+    serials.indices.by(serials.length / 4).map(serials).foreach { s =>
+      val expected = global.filter(col("dataset_serial") === s)
+        .select(globalCols.map(col): _*).collect().toSeq
+      assert(expected.length === 1)
+      val all = ImagingDb.getFramesMeta(spark, sfDir, s)
+      // sliced on the time point of its first frame, so never empty
+      val t = all.head().getAs[Int]("time_idx")
+      Seq(all, ImagingDb.getFramesMeta(spark, sfDir, s, timeIds = Some(Seq(t))))
+        .foreach(fm => assert(fm.select(globalCols.map(col): _*).distinct()
+          .collect().toSeq === expected, s))
+      assert(DataExport.globalMetaRow(spark, sfDir, s).collect().toSeq ===
+        meta.filter(col("dataset_serial") === s)
+          .select("dataset_serial", DataExport.GlobalMetaKeys: _*)
+          .collect().toSeq, s)
+    }
+  }
+
+  test("getFilenames returns one whole file for a frames=false dataset") {
+    val serial = ImagingModel.dataSet(spark, sfDir).filter(!col("frames"))
+      .orderBy("dataset_serial").select("dataset_serial").head().getString(0)
+    val rows = ImagingDb.getFilenames(spark, sfDir, serial).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+    assert(rows === Seq((serial, s"raw_files/$serial", s"$serial.tif")))
   }
 }
