@@ -4,7 +4,10 @@ against the DuckDB oracle and compare row counts, schemas and values.
 Usage: python3 devcheck.py <sfdir> <outdir>
 """
 import json
+import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
@@ -19,8 +22,31 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def oracle_connection(spill_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection bounded to the host: memory capped at half of
+    MemTotal, at most 4 threads (each thread holds its own operator
+    buffers), and operators that can spill write under `spill_dir`. The
+    settings bound memory only; query results do not change."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f
+                   if line.startswith("MemTotal:"))
+    return duckdb.connect(config={
+        "memory_limit": f"{kib // 2 // 1024}MB",
+        "threads": min(4, os.cpu_count() or 1),
+        "temp_directory": spill_dir,
+    })
+
+
 def main(sfdir: str, outdir: str) -> None:
-    con = duckdb.connect()
+    spill_dir = tempfile.mkdtemp(prefix="devcheck_duckdb_")
+    try:
+        check(sfdir, outdir, spill_dir)
+    finally:
+        shutil.rmtree(spill_dir, ignore_errors=True)
+
+
+def check(sfdir: str, outdir: str, spill_dir: str) -> None:
+    con = oracle_connection(spill_dir)
     for t in TABLES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")

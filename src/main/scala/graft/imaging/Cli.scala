@@ -3,8 +3,11 @@ package graft.imaging
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.{FrameStorage, FrameStorageApi}
 
 /** Thin CLI over the library — the reference's three entry points
   * (imaging_db/cli/query_data.py, data_downloader.py,
@@ -36,9 +39,12 @@ import org.apache.spark.sql.functions._
   *    runs the matching splitter twin and writes frames +
   *    global_meta parquet under OUT.
   *
-  * Each subcommand is one bounded Spark job; the CLI never collects a
+  * Every subcommand runs a few bounded Spark jobs and never collects a
   * fact table (query prints serials — dataset-count rows; download
-  * exports one dataset; upload registers the csv's datasets).
+  * exports one dataset; upload registers the csv's datasets). An
+  * upload reads the csv, then splits every file once in one job that
+  * also stores the frames (`--mount`) and writes `frames.parquet`;
+  * `global_meta.parquet` aggregates that table.
   */
 object Cli {
 
@@ -199,7 +205,7 @@ object Cli {
       // the dataset's raw_frames directory into OUT/frames via the
       // distributed semi-join — no driver-side file list
       s.get("mount").foreach { mount =>
-        val st = new graft.sources.FrameStorage(mount, s"raw_frames/$id")
+        val st = new FrameStorage(mount, s"raw_frames/$id")
         val n = st.downloadManifest(spark,
           manifest.filter(col("storage_dir") === s"raw_frames/$id"),
           s"$out/frames")
@@ -243,26 +249,40 @@ object Cli {
     val store = req(s, "store")
     require(Files.exists(Paths.get(csv)), s"File doesn't exist: $csv")
     require(Files.exists(Paths.get(config)), s"File doesn't exist: $config")
-    val cfgText = Files.readString(Paths.get(config))
-    val cfgRow = spark.range(1).select(
-      get_json_object(lit(cfgText), "$.upload_type").as("upload_type"),
-      get_json_object(lit(cfgText), "$.frames_format").as("frames_format"))
-      .head()
-    val uploadType = Option(cfgRow.getString(0)).map(_.toLowerCase)
-      .getOrElse("frames")
+    // the reference's json.load: parsed on the driver, and malformed
+    // JSON is an error, not a silent fall-back to the defaults
+    val cfg = new ObjectMapper()
+      .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+      .readTree(Files.readString(Paths.get(config)))
+    require(cfg.isObject, s"config is not a JSON object: $config")
+    def cfgKey(k: String, default: String): String = Option(cfg.get(k))
+      .filterNot(_.isNull).fold(default)(_.asText.toLowerCase)
+    val uploadType = cfgKey("upload_type", "frames")
     require(Set("frames", "file")(uploadType),
       s"upload_type must be frames or file, got $uploadType")
-    val format = Option(cfgRow.getString(1)).map(_.toLowerCase)
-      .getOrElse("sms_name")
+    val format = cfgKey("frames_format", "sms_name")
     val rows = spark.read.option("header", "true").csv(csv)
       .select("dataset_id", "file_name").collect()
     require(rows.nonEmpty, s"upload csv has no data rows: $csv")
-    // one listing per csv row (reference: one splitter run per
-    // dataset); rows-per-upload is operator-bounded, not corpus-scale
-    val listings = rows.map(r =>
-      (r.getString(0), spark.read.text(r.getString(1))))
     import spark.implicits._
-    val registered = Seq.empty[String].toDF("dataset_serial")
+    // one listing per csv row (reference: one splitter run per
+    // dataset), each line as column `lineCol`; rows-per-upload is
+    // operator-bounded, not corpus-scale
+    def listing(lineCol: String): DataFrame = rows.map { r =>
+      spark.read.text(r.getString(1)).select(
+        lit(r.getString(0)).as("dataset_serial"), col("value").as(lineCol))
+    }.reduce(_ unionByName _)
+    // the byte-level splitters' terminal step (data_uploader
+    // upload_frames): with --mount each frame's PNG lands in its own
+    // dataset's storage inside the task that split it, and only the
+    // payload-free metadata rows go on to the frames table
+    def stored(frames: DataFrame): DataFrame =
+      s.get("mount").fold(frames.drop("payload")) { mount =>
+        FrameStorageApi.writeThrough(frames, rows.map { r =>
+          val serial = r.getString(0)
+          serial -> new FrameStorage(mount, s"raw_frames/$serial")
+        }.toMap)
+      }.withColumn("already_registered", lit(false))
     // dispatch to the declared splitter twin — each format's input
     // shape follows the reference: a frame-name listing for sms_name,
     // per-page MicroManagerMetadata JSON lines for ome_tiff, the
@@ -280,25 +300,15 @@ object Cli {
       case f => f
     }
     val parsed = canonical match {
-      case "sms_name" =>
-        val listing = listings.map { case (serial, lines) =>
-          lines.select(lit(serial).as("dataset_serial"),
-            col("value").as("file_name"))
-        }.reduce(_ unionByName _)
-        SplitterIngest.ingest(listing, registered)
+      case "sms_name" => SplitterIngest.ingest(listing("file_name"),
+        Seq.empty[String].toDF("dataset_serial"))
       case "ome_tiff" =>
-        val listing = listings.map { case (serial, lines) =>
-          lines.select(lit(serial).as("dataset_serial"),
-            col("value").as("metadata_json"))
-        }.reduce(_ unionByName _)
-        SplitterIngest.parseMetadata(listing)
+        SplitterIngest.parseMetadata(listing("metadata_json"))
           .withColumn("already_registered", lit(false))
       case "tif_id" =>
         // the csv's file_name IS the multi-page tiff: real byte-level
         // split (tif_id_splitter.py get_frames_and_metadata) — pages
-        // decode on executors, payloads re-encode as PNG, and with
-        // --mount the PNGs land in frame storage exactly like the
-        // reference's data_uploader upload_frames terminal step
+        // decode on executors and payloads re-encode as PNG
         val tiffs = rows.map { r =>
           val (serial, path) = (r.getString(0), r.getString(1))
           require(Files.exists(Paths.get(path)),
@@ -306,23 +316,12 @@ object Cli {
           spark.read.format("binaryFile").load(path)
             .select(lit(serial).as("dataset_serial"), col("content"))
         }.reduce(_ unionByName _)
-        val frames = SplitterIngest.splitTiff(spark, tiffs).toDF()
-        for (mount <- s.get("mount"); serial <- rows.map(_.getString(0))) {
-          val storage = new graft.sources.FrameStorage(mount,
-            s"raw_frames/$serial")
-          storage.uploadFrames(
-            frames.filter(col("dataset_serial") === serial)
-              .select("file_name", "payload"))
-        }
-        frames.drop("payload")
-          .withColumn("already_registered", lit(false))
+        stored(SplitterIngest.splitTiff(spark, tiffs).toDF())
       case "tif_folder" =>
         // the csv's file_name IS the dataset folder
         // (tiffolder_splitter.py:236-305 get_frames_and_metadata):
         // single-page *.tif frames named SMS-style, frame info from
-        // the folder's metadata.txt Summary — real byte-level split;
-        // with --mount the re-encoded PNGs land in frame storage
-        // exactly like the tif_id terminal step
+        // the folder's metadata.txt Summary — real byte-level split
         val folders = rows.map { r =>
           val (serial, folder) = (r.getString(0), r.getString(1))
           require(Files.isDirectory(Paths.get(folder)),
@@ -340,22 +339,17 @@ object Cli {
         val summaries = folders.toSeq
           .map { case (serial, _, meta) => (serial, meta) }
           .toDF("dataset_serial", "summary_json")
-        val frames = SplitterIngest.splitFolder(spark, listing, summaries)
-        for (mount <- s.get("mount"); serial <- rows.map(_.getString(0))) {
-          val storage = new graft.sources.FrameStorage(mount,
-            s"raw_frames/$serial")
-          storage.uploadFrames(
-            frames.filter(col("dataset_serial") === serial)
-              .select("file_name", "payload"))
-        }
-        frames.drop("payload")
-          .withColumn("already_registered", lit(false))
+        stored(SplitterIngest.splitFolder(spark, listing, summaries))
       case other => throw new IllegalArgumentException(
         s"frames_format '$other' is not a reference splitter format " +
           "(supported: sms_name, ome_tiff, tif_id, tif_folder)")
     }
-    parsed.write.mode("overwrite").parquet(s"$store/frames.parquet")
-    SplitterIngest.globalMetaFromFrames(parsed)
+    val framesPath = s"$store/frames.parquet"
+    parsed.write.mode("overwrite").parquet(framesPath)
+    // from the table just written: re-running the splitter plan would
+    // decode and encode every page again
+    SplitterIngest.globalMetaFromFrames(
+        spark.read.schema(parsed.schema).parquet(framesPath))
       .write.mode("overwrite").parquet(s"$store/global_meta.parquet")
   }
 }

@@ -234,46 +234,7 @@ object SplitterIngest {
             val pos = (i / (nc * ns)) % np
             val time = (i / (nc * ns * np)) % nt
             val isFloat = p.sampleFormat == 3
-            // uint pages stay PNG (the reference's frame format);
-            // float pages (SampleFormat 3 — no lossless PNG mapping)
-            // keep their raw little-endian IEEE bits as the opaque
-            // payload, typed by bit_depth — the multimodal contract
-            val payload = (p.samplesPerPixel, p.bitsPerSample) match {
-              case (1, 32) if isFloat =>
-                val raw = new Array[Byte](p.samples.length * 4)
-                var j = 0
-                while (j < p.samples.length) {
-                  val v = p.samples(j)
-                  raw(4 * j) = (v & 0xff).toByte
-                  raw(4 * j + 1) = ((v >>> 8) & 0xff).toByte
-                  raw(4 * j + 2) = ((v >>> 16) & 0xff).toByte
-                  raw(4 * j + 3) = ((v >>> 24) & 0xff).toByte
-                  j += 1
-                }
-                raw
-              case (1, 8) =>
-                ImageCodec.encodeGray8(p.samples.map(_.toByte),
-                  p.width, p.height)
-              case (1, 16) => ImageCodec.encodeGray16(p.samples,
-                p.width, p.height)
-              case (3, 8) =>
-                ImageCodec.encodeRgb8(p.samples.map(_.toByte),
-                  p.width, p.height)
-              case (3, 16) => ImageCodec.encodeRgb16(p.samples,
-                p.width, p.height)
-            }
-            val canonical = if (isFloat) payload else {
-              val c = new Array[Byte](p.samples.length * 2)
-              var j = 0
-              while (j < p.samples.length) {
-                c(2 * j) = ((p.samples(j) >>> 8) & 0xff).toByte
-                c(2 * j + 1) = (p.samples(j) & 0xff).toByte
-                j += 1
-              }
-              c
-            }
-            val sha = java.security.MessageDigest.getInstance("SHA-256")
-              .digest(canonical).map(b => f"${b & 0xff}%02x").mkString
+            val (payload, sha) = encodePage(p)
             val ext = if (isFloat) "raw" else "png"
             val name =
               f"im_c$channel%03d_z$slice%03d_t$time%03d_p$pos%03d.$ext"
@@ -315,31 +276,52 @@ object SplitterIngest {
       .as[(String, String, Array[Byte])]
       .mapPartitions { it => it.map { case (serial, name, bytes) =>
         val p = TiffCodec.readPages(bytes).head
-        val payload = (p.samplesPerPixel, p.bitsPerSample) match {
-          case (1, 8) =>
-            ImageCodec.encodeGray8(p.samples.map(_.toByte),
-              p.width, p.height)
-          case (1, 16) => ImageCodec.encodeGray16(p.samples,
-            p.width, p.height)
-          case (3, 8) =>
-            ImageCodec.encodeRgb8(p.samples.map(_.toByte),
-              p.width, p.height)
-          case (3, 16) => ImageCodec.encodeRgb16(p.samples,
-            p.width, p.height)
-        }
-        val canonical = new Array[Byte](p.samples.length * 2)
-        var j = 0
-        while (j < p.samples.length) {
-          canonical(2 * j) = ((p.samples(j) >>> 8) & 0xff).toByte
-          canonical(2 * j + 1) = (p.samples(j) & 0xff).toByte
-          j += 1
-        }
-        val sha = java.security.MessageDigest.getInstance("SHA-256")
-          .digest(canonical).map(b => f"${b & 0xff}%02x").mkString
+        // folder frames are stored as .png (BitDepth 8/16,
+        // tiffolder_splitter.py set_frame_info): no float payloads
+        require(p.sampleFormat != 3, s"$name: float32 page in a tif folder")
+        val (payload, sha) = encodePage(p)
         (serial, name, sha, payload)
       }}
       .toDF("dataset_serial", "src_name", "sha256", "payload")
     parsed.join(payloads, Seq("dataset_serial", "src_name"))
+  }
+
+  /** One decoded page → (payload, sha256 hex): the stored payload and
+    * the frames-table dedup hash (file_splitter.py `_generate_hash`).
+    * Integer pages re-encode as PNG (the reference's frame format) and
+    * hash their canonical big-endian 16-bit sample bytes; float pages
+    * (SampleFormat 3, no lossless PNG mapping) keep their raw
+    * little-endian IEEE bits as the opaque payload, typed by
+    * bit_depth, and hash those bits.
+    */
+  private def encodePage(p: TiffCodec.TiffPage): (Array[Byte], String) = {
+    val n = p.samples.length
+    val (payload, canonical) = (p.samplesPerPixel, p.bitsPerSample) match {
+      case (1, 32) if p.sampleFormat == 3 =>
+        val raw = java.nio.ByteBuffer.allocate(4 * n)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        var j = 0
+        while (j < n) { raw.putInt(p.samples(j)); j += 1 }
+        (raw.array, raw.array)
+      case (ch, bits) =>
+        val png = (ch, bits) match {
+          case (1, 8) => ImageCodec.encodeGray8(p.samples.map(_.toByte),
+            p.width, p.height)
+          case (1, 16) => ImageCodec.encodeGray16(p.samples,
+            p.width, p.height)
+          case (3, 8) => ImageCodec.encodeRgb8(p.samples.map(_.toByte),
+            p.width, p.height)
+          case (3, 16) => ImageCodec.encodeRgb16(p.samples,
+            p.width, p.height)
+        }
+        val be = java.nio.ByteBuffer.allocate(2 * n)
+        var j = 0
+        while (j < n) { be.putShort(p.samples(j).toShort); j += 1 }
+        (png, be.array)
+    }
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(canonical).map(b => f"${b & 0xff}%02x").mkString
+    (payload, sha)
   }
 
   /** tif_id_splitter._get_params_from_str: newline-separated

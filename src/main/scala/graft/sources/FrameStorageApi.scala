@@ -2,8 +2,9 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.multimodal.ImageCodec
 
@@ -21,6 +22,13 @@ import graft.multimodal.ImageCodec
   * existence semantics (directory checks for local_storage.py,
   * key-prefix listings for s3_storage.py), the conditional-create
   * primitive, and the visibility check a task runs before writing.
+  *
+  * Writes are executor-side write-through: the bytes go to storage
+  * inside the task that holds them ([[FrameStorageApi.putAll]] is the
+  * one writer loop), never through the driver. An upload that splits
+  * a stack routes each frame to its own dataset's storage in the split
+  * task itself ([[FrameStorageApi.writeThrough]]), so the split runs
+  * once and only payload-free metadata rows leave the task.
   */
 trait FrameStorageApi extends Serializable {
 
@@ -77,6 +85,7 @@ trait FrameStorageApi extends Serializable {
     * real object under the dataset base; existing names are skipped per
     * the reference's overwrite guard. Returns (written, skipped) —
     * the reference prints skips; a Spark job surfaces them as data.
+    * The writes run in [[FrameStorageApi.putAll]], the one writer loop.
     */
   def uploadFrames(framed: DataFrame): (Long, Long) = {
     prepareUpload()
@@ -85,10 +94,8 @@ trait FrameStorageApi extends Serializable {
     import spark.implicits._
     val flags = framed.select(col("file_name"), col("payload"))
       .as[(String, Array[Byte])]
-      .mapPartitions { rows =>
-        self.checkVisible()
-        rows.map { case (name, bytes) => self.putNew(name, bytes) }
-      }
+      .mapPartitions(rows => FrameStorageApi.putAll(rows)(
+        _ => self, _._1, _._2)((_, written) => written))
       .toDF("written")
       .agg(
         coalesce(sum(when(col("written"), 1L).otherwise(0L)), lit(0L)),
@@ -133,7 +140,7 @@ trait FrameStorageApi extends Serializable {
     */
   def readFrames(spark: SparkSession): DataFrame =
     spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.png")
+      .option("pathGlobFilter", FrameStorageApi.FrameGlob)
       .load(idStoragePath)
       .select(
         element_at(split(col("path"), "/"), -1).as("file_name"),
@@ -227,7 +234,7 @@ trait FrameStorageApi extends Serializable {
     */
   def listFrames(spark: SparkSession): DataFrame =
     spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.png")
+      .option("pathGlobFilter", FrameStorageApi.FrameGlob)
       .load(idStoragePath)
       .select(element_at(split(col("path"), "/"), -1).as("file_name"))
 
@@ -281,5 +288,57 @@ trait FrameStorageApi extends Serializable {
         }
     } finally stream.close()
     n
+  }
+}
+
+object FrameStorageApi {
+
+  /** Every stored frame object: `.png` for integer frames and `.raw`
+    * for the float32 frames the TIFF splitter keeps as raw IEEE bits
+    * (PNG has no lossless float mapping). The byte-moving paths list,
+    * copy and delete both; a PNG decode of a `.raw` payload fails.
+    */
+  val FrameGlob = "*.{png,raw}"
+
+  /** The one executor-side writer loop of every distributed upload.
+    * Each row's payload goes to its `storage` through the atomic
+    * conditional create: a retried task or a re-run skips names that
+    * already exist (the reference's overwrite guard). `emit` turns the
+    * row and its written flag into the output. Each storage's
+    * visibility check runs once per partition, on the first row routed
+    * to it. The driver has run every storage's `prepareUpload` before
+    * the job.
+    */
+  private def putAll[A, B](rows: Iterator[A])(
+      storage: A => FrameStorageApi, name: A => String,
+      payload: A => Array[Byte])(emit: (A, Boolean) => B): Iterator[B] = {
+    val checked = scala.collection.mutable.Set.empty[FrameStorageApi]
+    rows.map { r =>
+      val st = storage(r)
+      if (checked.add(st)) st.checkVisible()
+      emit(r, st.putNew(name(r), payload(r)))
+    }
+  }
+
+  /** Upload write-through: every (dataset_serial, file_name, payload,
+    * ...) row of `framed` writes its payload to the storage `route`
+    * maps its serial to (a serial missing from `route` fails the task),
+    * inside the task that produced the row, and the result is `framed`
+    * without `payload`. Lazy: the writes run
+    * with the caller's one action over the result, so the plan that
+    * produced the payloads runs once. The driver prepares every routed
+    * storage here, before that action.
+    */
+  def writeThrough(framed: DataFrame,
+      route: Map[String, FrameStorageApi]): DataFrame = {
+    route.values.foreach(_.prepareUpload())
+    val schema = framed.schema
+    val Seq(k, n, p) =
+      Seq("dataset_serial", "file_name", "payload").map(schema.fieldIndex)
+    val keep = schema.indices.filter(_ != p).toArray
+    framed.mapPartitions(rows => putAll(rows)(
+      r => route(r.getString(k)), _.getString(n), _.getAs[Array[Byte]](p))(
+      (r, _) => Row.fromSeq(keep.map(r.get))))(
+      Encoders.row(StructType(keep.map(schema(_)))))
   }
 }

@@ -189,6 +189,33 @@ class CliSpec extends AnyFunSuite {
       col("file_name") === "im_c001_z001_t000_p000.png").count() == 1)
   }
 
+  test("upload config: frames_format defaults to sms_name and values " +
+      "lower-case; malformed JSON is an error") {
+    val tmp = Files.createTempDirectory("cli_up_cfg")
+    val listing = tmp.resolve("frames.txt")
+    Files.writeString(listing,
+      (0 to 2).map(z => f"im_c000_z$z%03d_t000_p000.png").mkString("\n"))
+    val csv = tmp.resolve("upload.csv")
+    Files.writeString(csv,
+      s"dataset_id,file_name,description\nCFG-2026-01-01-00-00-00-0001,$listing,t\n")
+    def upload(config: String): Int = {
+      val cfg = Files.writeString(tmp.resolve("config.json"), config)
+      Cli.run(spark, Seq("upload", "--csv", csv.toString,
+        "--config", cfg.toString, "--store", tmp.resolve("store").toString))
+    }
+    // no frames_format: the sms_name splitter runs; upload_type is
+    // matched lower-cased
+    assert(upload("""{"upload_type": "FRAMES"}""") == 0)
+    assert(spark.read.parquet(s"$tmp/store/frames.parquet")
+      .filter(col("slice_idx") === 2).count() == 1)
+    assert(upload("""{"upload_type": "frames", "frames_format": "SMS_NAME"}""") == 0)
+    // the reference's json.load raises on malformed JSON; defaults are
+    // not a fall-back for a broken config
+    assert(upload("""{"upload_type": "frames", "frames_format": "sms_name"""") == 2)
+    assert(upload("""{"upload_type": "frames"} trailing""") == 2)
+    assert(upload("") == 2)
+  }
+
   test("upload rejects formats the CLI cannot honestly run") {
     val tmp = Files.createTempDirectory("cli_up_bad")
     val listing = tmp.resolve("l.txt")

@@ -68,6 +68,25 @@ abstract class FrameStorageContract extends AnyFunSuite {
     }
   }
 
+  test(s"[$backend] write-through stores each row under its own " +
+      "dataset and keeps only the metadata row") {
+    val m = mount()
+    val (framed, _) = oneDataset()
+    val split = framed.withColumn("dataset_serial",
+      when(col("frame_id") % 2 === 0, "even").otherwise("odd"))
+    val route = Seq("even", "odd")
+      .map(s => s -> mkStorage(m, s"raw_frames/$s")).toMap
+    val rows = FrameStorageApi.writeThrough(split, route)
+    assert(rows.columns.toSeq === split.columns.filter(_ != "payload").toSeq)
+    assert(rows.count() === split.count())
+    for ((serial, st) <- route) {
+      val want = split.filter(col("dataset_serial") === serial)
+        .select("file_name").distinct().collect().map(_.getString(0)).toSet
+      assert(st.listFrames(spark).collect().map(_.getString(0)).toSet
+        === want, serial)
+    }
+  }
+
   test(s"[$backend] uniqueness and overwrite guards match the reference") {
     val m = mount()
     val (framed, dsId) = oneDataset()

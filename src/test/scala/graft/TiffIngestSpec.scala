@@ -1,13 +1,19 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.imaging.{Cli, SplitterIngest}
-import graft.multimodal.{ImageCodec, TiffCodec}
+import graft.multimodal.{BinaryFrames, ImageCodec, TiffCodec}
 import graft.multimodal.TiffCodec.TiffPage
+import graft.sources.FrameStorage
 
 /** Real TIFF byte-level ingest (tif_id_splitter.py twin): a planted
   * multi-page TIFF splits into frame rows + PNG payloads pixel-exact
@@ -24,13 +30,42 @@ class TiffIngestSpec extends AnyFunSuite {
   private def plantPixels(page: Int): Array[Int] =
     Array.tabulate(6 * 5)(i => (i * 4099 + page * 7717) % 65536)
 
+  /** The planted stack; `first` offsets the page keys, so stacks
+    * planted with different offsets carry different pixels.
+    */
   private def plantedTiff(lzw: Boolean, predictor: Int,
-      tileSize: Option[(Int, Int)] = None): Array[Byte] = {
+      tileSize: Option[(Int, Int)] = None, first: Int = 0): Array[Byte] = {
     val pages = (0 until 8).map(p =>
-      TiffPage(6, 5, 16, 1, None, plantPixels(p)))
+      TiffPage(6, 5, 16, 1, None, plantPixels(first + p)))
     TiffCodec.write(pages, lzw = lzw, predictor = predictor,
       description = Some("channels=2\nslices=2\nframes=2\nunrelated=9"),
       tileSize = tileSize)
+  }
+
+  /** tif_id page name of page `i` of the planted 2 x 2 x 2 stack. */
+  private def pageName(i: Int): String =
+    f"im_c${i % 2}%03d_z${(i / 2) % 2}%03d_t${(i / 4) % 2}%03d_p000.png"
+
+  /** `Cli upload` of the (serial, tiff bytes) stacks as tif_id with
+    * `--mount`; returns the store directory.
+    */
+  private def uploadTifId(dir: Path, stacks: Seq[(String, Array[Byte])],
+      mount: String): String = {
+    val rows = stacks.map { case (serial, bytes) =>
+      val tif = Files.write(dir.resolve(s"$serial.tif"), bytes)
+      s"$serial,$tif,planted"
+    }
+    val csv = dir.resolve("upload.csv")
+    Files.writeString(csv,
+      ("dataset_id,file_name,description" +: rows).mkString("\n") + "\n")
+    val cfg = dir.resolve("config.json")
+    Files.writeString(cfg,
+      """{"upload_type": "frames", "frames_format": "tif_id"}""")
+    val store = dir.resolve("store").toString
+    assert(Cli.run(spark, Seq("upload", "--csv", csv.toString,
+      "--config", cfg.toString, "--store", store,
+      "--mount", mount)) === 0)
+    store
   }
 
   test("TIFF codec: every shape round-trips; both endians decode") {
@@ -197,8 +232,7 @@ class TiffIngestSpec extends AnyFunSuite {
         assert(f.slice_idx === (i / 2) % 2)
         assert(f.pos_idx === 0)
         assert(f.time_idx === (i / 4) % 2)
-        assert(f.file_name ===
-          f"im_c${i % 2}%03d_z${(i / 2) % 2}%03d_t${(i / 4) % 2}%03d_p000.png")
+        assert(f.file_name === pageName(i))
         assert((f.im_width, f.im_height) === (6, 5))
         assert(f.im_colors === 1 && f.bit_depth === "uint16")
         val (w, h, px) = ImageCodec.decodeGray(f.payload)
@@ -209,19 +243,24 @@ class TiffIngestSpec extends AnyFunSuite {
     }
   }
 
+  /** A 4-page float32 stack (2 channels x 2 slices) — the
+    * quantitative-phase export.
+    */
+  private def plantFloats(page: Int): Array[Float] =
+    Array.tabulate(6 * 5)(i => (i * 0.125f - page * 3.5f) *
+      (if ((i + page) % 2 == 0) 1f else -1f))
+
+  private def plantedFloatTiff(): Array[Byte] =
+    TiffCodec.write((0 until 4).map(p => TiffPage(6, 5, 32, 1, None,
+        plantFloats(p).map(java.lang.Float.floatToIntBits),
+        sampleFormat = 3)),
+      description = Some("channels=2\nslices=2\nframes=1"))
+
   test("splitTiff: planted float stack -> pixel-exact raw frames") {
     import spark.implicits._
-    // a 4-page float32 stack (2 channels x 2 slices) — the
-    // quantitative-phase export; payloads are the raw IEEE bits,
-    // typed float32, lossless by construction
-    def plantFloats(page: Int): Array[Float] =
-      Array.tabulate(6 * 5)(i => (i * 0.125f - page * 3.5f) *
-        (if ((i + page) % 2 == 0) 1f else -1f))
-    val pages = (0 until 4).map(p => TiffPage(6, 5, 32, 1, None,
-      plantFloats(p).map(java.lang.Float.floatToIntBits),
-      sampleFormat = 3))
-    val tiff = TiffCodec.write(pages,
-      description = Some("channels=2\nslices=2\nframes=1"))
+    // payloads are the raw IEEE bits, typed float32, lossless by
+    // construction
+    val tiff = plantedFloatTiff()
     val files = Seq(("TIFF-F-2026-01", tiff))
       .toDF("dataset_serial", "content")
     val frames = SplitterIngest.splitTiff(spark, files).collect()
@@ -241,19 +280,9 @@ class TiffIngestSpec extends AnyFunSuite {
 
   test("Cli upload tif_id: real TIFF -> store parquet + storage PNGs") {
     val dir = Files.createTempDirectory("graft_tifup")
-    val tif = dir.resolve("stack.tif")
-    Files.write(tif, plantedTiff(lzw = true, predictor = 2))
-    val csv = dir.resolve("upload.csv")
-    Files.writeString(csv,
-      s"dataset_id,file_name,description\nTIFF-2026-02,$tif,planted\n")
-    val cfg = dir.resolve("config.json")
-    Files.writeString(cfg,
-      """{"upload_type": "frames", "frames_format": "tif_id"}""")
-    val store = dir.resolve("store").toString
     val mount = Files.createTempDirectory("graft_tifmount").toString
-    assert(Cli.run(spark, Seq("upload", "--csv", csv.toString,
-      "--config", cfg.toString, "--store", store,
-      "--mount", mount)) === 0)
+    val store = uploadTifId(dir,
+      Seq("TIFF-2026-02" -> plantedTiff(lzw = true, predictor = 2)), mount)
     // registered frames: 8 rows, the generated db names, global meta
     val frames = spark.read.parquet(s"$store/frames.parquet")
     assert(frames.count() === 8)
@@ -269,13 +298,111 @@ class TiffIngestSpec extends AnyFunSuite {
     val stored = Paths.get(mount, "raw_frames/TIFF-2026-02")
     assert(Files.list(stored).count() === 8)
     for (i <- 0 until 8) {
-      val name =
-        f"im_c${i % 2}%03d_z${(i / 2) % 2}%03d_t${(i / 4) % 2}%03d_p000.png"
-      val png = Files.readAllBytes(stored.resolve(name))
+      val png = Files.readAllBytes(stored.resolve(pageName(i)))
       val (w, h, px) = ImageCodec.decodeGray(png)
       assert(w === 6 && h === 5)
       assert(px.toSeq === plantPixels(i).toSeq, s"stored page $i")
     }
+  }
+
+  test("Cli upload tif_id: two serials -> each dataset's storage holds " +
+      "exactly its own PNGs; a re-run writes nothing") {
+    val dir = Files.createTempDirectory("graft_tifup2")
+    val mount = Files.createTempDirectory("graft_tifmount2").toString
+    val serials = Seq("TIFF-2026-A", "TIFF-2026-B")
+    // each serial's stack carries its own pixels (page keys 8k..8k+7),
+    // so a frame routed to the other serial's storage shows
+    val store = uploadTifId(dir, serials.zipWithIndex.map { case (s, k) =>
+      s -> plantedTiff(lzw = true, predictor = 2, first = 8 * k) }, mount)
+    assert(spark.read.parquet(s"$store/frames.parquet").count() === 16)
+    val meta = spark.read.parquet(s"$store/global_meta.parquet")
+      .orderBy("dataset_serial").collect()
+    assert(meta.map(_.getAs[String]("dataset_serial")).toSeq === serials)
+    assert(meta.forall(_.getAs[Long]("nbr_frames") == 8))
+    for ((serial, k) <- serials.zipWithIndex) {
+      val stored = Paths.get(mount, "raw_frames", serial)
+      val names = Files.list(stored).iterator.asScala
+        .map(_.getFileName.toString).toSet
+      assert(names === (0 until 8).map(pageName).toSet, serial)
+      for (i <- 0 until 8) {
+        val (w, h, px) = ImageCodec.decodeGray(
+          Files.readAllBytes(stored.resolve(pageName(i))))
+        assert(w === 6 && h === 5)
+        assert(px.toSeq === plantPixels(8 * k + i).toSeq,
+          s"$serial stored page $i")
+      }
+    }
+    // re-running the same csv into the same mount: every frame exists,
+    // so nothing is written and no stored file's bytes or mtime move
+    def snapshot() = serials.flatMap { serial =>
+      Files.list(Paths.get(mount, "raw_frames", serial)).iterator.asScala
+        .map(f => (f.toString, Files.readAllBytes(f).toSeq,
+          Files.getLastModifiedTime(f)))
+    }.sortBy(_._1)
+    val before = snapshot()
+    Thread.sleep(20) // a rewrite would carry a later mtime
+    uploadTifId(dir, serials.zipWithIndex.map { case (s, k) =>
+      s -> plantedTiff(lzw = true, predictor = 2, first = 8 * k) }, mount)
+    assert(snapshot() === before)
+  }
+
+  test("Cli upload tif_id reads each TIFF exactly once") {
+    // 64x64 uncompressed pages: each stack (64 KB) outweighs the csv
+    // and the frames-table read-back together, so any TIFF read twice
+    // pushes the input past tiff bytes + the smallest stack
+    def stack(k: Int) = TiffCodec.write((0 until 8).map(p =>
+        TiffPage(64, 64, 16, 1, None,
+          Array.tabulate(64 * 64)(i => (i * 31 + (8 * k + p) * 977) % 65536))),
+      description = Some("channels=2\nslices=2\nframes=2"))
+    val stacks = Seq("READ-2026-A" -> stack(0), "READ-2026-B" -> stack(1))
+    val dir = Files.createTempDirectory("graft_tifread")
+    val mount = Files.createTempDirectory("graft_tifreadmount").toString
+    val sc = spark.sparkContext
+    TestBus.drain(sc)
+    val read = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          read.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+    }
+    sc.addSparkListener(listener)
+    try {
+      uploadTifId(dir, stacks, mount)
+      TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    val sizes = stacks.map(_._2.length.toLong)
+    assert(read.get >= sizes.sum && read.get < sizes.sum + sizes.min,
+      s"upload read ${read.get} input bytes for ${sizes.sum} TIFF bytes")
+    assert(Files.list(Paths.get(mount, "raw_frames", "READ-2026-B"))
+      .count() === 8)
+  }
+
+  test("float tif_id frames (.raw) download, list and delete by manifest; " +
+      "a PNG decode of them fails loudly") {
+    val dir = Files.createTempDirectory("graft_tifupf")
+    val mount = Files.createTempDirectory("graft_tifmountf").toString
+    val serial = "TIFF-F-2026-02"
+    val store = uploadTifId(dir, Seq(serial -> plantedFloatTiff()), mount)
+    val st = new FrameStorage(mount, s"raw_frames/$serial")
+    val manifest = spark.read.parquet(s"$store/frames.parquet")
+      .select("file_name")
+    val names = manifest.collect().map(_.getString(0)).toSet
+    assert(names.size === 4 && names.forall(_.endsWith(".raw")))
+    assert(st.listFrames(spark).collect().map(_.getString(0)).toSet
+      === names)
+    val dest = Files.createTempDirectory("graft_tifdlf").toString
+    assert(st.downloadManifest(spark, manifest, dest) === 4L)
+    for (n <- names)
+      assert(Files.readAllBytes(Paths.get(dest, n)).toSeq ===
+        Files.readAllBytes(Paths.get(st.getStoragePath(n))).toSeq, n)
+    val e = intercept[Exception] {
+      BinaryFrames.decodeFrames(spark,
+        st.readFrames(spark).withColumn("frame_id", lit(0L))).collect()
+    }
+    assert(e.getMessage.contains("PNG signature"))
+    // a takedown of the dataset's frames removes the .raw blobs too
+    assert(st.deleteManifest(spark, manifest) === 4L)
+    assert(Files.list(Paths.get(st.idStoragePath)).count() === 0L)
   }
 
   test("Cli upload tif_folder: folder of single-page tifs -> store " +
