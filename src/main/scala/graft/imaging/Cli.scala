@@ -42,9 +42,9 @@ import graft.sources.{FrameStorage, FrameStorageApi}
   * Every subcommand runs a few bounded Spark jobs and never collects a
   * fact table (query prints serials — dataset-count rows; download
   * exports one dataset; upload registers the csv's datasets). An
-  * upload reads the csv, then splits every file once in one job that
-  * also stores the frames (`--mount`) and writes `frames.parquet`;
-  * `global_meta.parquet` aggregates that table.
+  * upload parses the csv on the driver, then splits every file once in
+  * one job that also stores the frames (`--mount`) and writes
+  * `frames.parquet`; `global_meta.parquet` aggregates that table.
   */
 object Cli {
 
@@ -113,18 +113,8 @@ object Cli {
     (scalars, multis, bools)
   }
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
   def main(args: Array[String]): Unit = {
-    val code = run(session(), args.toSeq)
+    val code = run(graft.GraftSession.local(), args.toSeq)
     if (code != 0) {
       System.err.println(usage)
       sys.exit(code)
@@ -239,6 +229,37 @@ object Cli {
     }
   }
 
+  /** The upload csv's (dataset_id, file_name) pairs, one per data row.
+    * An operator-sized file, so the driver parses it (RFC 4180 quoting:
+    * a quoted field may hold commas) and finds both columns by header
+    * name; a missing column or value and a header-only file are errors.
+    */
+  private[graft] def uploadRows(csv: String): Seq[(String, String)] = {
+    val settings = new com.univocity.parsers.csv.CsvParserSettings()
+    settings.setLineSeparatorDetectionEnabled(true)
+    settings.getFormat.setComment('\u0000')
+    settings.setIgnoreLeadingWhitespaces(false)
+    settings.setIgnoreTrailingWhitespaces(false)
+    val all = new com.univocity.parsers.csv.CsvParser(settings)
+      .parseAll(Files.newBufferedReader(Paths.get(csv)))
+    require(all.size > 1, s"upload csv has no data rows: $csv")
+    val header = all.get(0).toSeq
+    val Seq(id, file) = Seq("dataset_id", "file_name").map { c =>
+      val i = header.indexOf(c)
+      require(i >= 0, s"upload csv has no $c column: $csv")
+      i
+    }
+    (1 until all.size).map { n =>
+      val Seq(serial, name) = Seq(id, file).map { i =>
+        val v = all.get(n).lift(i).orNull
+        require(v != null && v.nonEmpty,
+          s"upload csv row $n has no ${header(i)}: $csv")
+        v
+      }
+      (serial, name)
+    }
+  }
+
   /** data_uploader.py: csv of datasets + config JSON → splitter twin
     * → frames + global_meta parquet under --store.
     */
@@ -261,16 +282,14 @@ object Cli {
     require(Set("frames", "file")(uploadType),
       s"upload_type must be frames or file, got $uploadType")
     val format = cfgKey("frames_format", "sms_name")
-    val rows = spark.read.option("header", "true").csv(csv)
-      .select("dataset_id", "file_name").collect()
-    require(rows.nonEmpty, s"upload csv has no data rows: $csv")
+    val rows = uploadRows(csv)
     import spark.implicits._
     // one listing per csv row (reference: one splitter run per
     // dataset), each line as column `lineCol`; rows-per-upload is
     // operator-bounded, not corpus-scale
-    def listing(lineCol: String): DataFrame = rows.map { r =>
-      spark.read.text(r.getString(1)).select(
-        lit(r.getString(0)).as("dataset_serial"), col("value").as(lineCol))
+    def listing(lineCol: String): DataFrame = rows.map { case (serial, file) =>
+      spark.read.text(file).select(
+        lit(serial).as("dataset_serial"), col("value").as(lineCol))
     }.reduce(_ unionByName _)
     // the byte-level splitters' terminal step (data_uploader
     // upload_frames): with --mount each frame's PNG lands in its own
@@ -278,8 +297,7 @@ object Cli {
     // payload-free metadata rows go on to the frames table
     def stored(frames: DataFrame): DataFrame =
       s.get("mount").fold(frames.drop("payload")) { mount =>
-        FrameStorageApi.writeThrough(frames, rows.map { r =>
-          val serial = r.getString(0)
+        FrameStorageApi.writeThrough(frames, rows.map { case (serial, _) =>
           serial -> new FrameStorage(mount, s"raw_frames/$serial")
         }.toMap)
       }.withColumn("already_registered", lit(false))
@@ -309,8 +327,7 @@ object Cli {
         // the csv's file_name IS the multi-page tiff: real byte-level
         // split (tif_id_splitter.py get_frames_and_metadata) — pages
         // decode on executors and payloads re-encode as PNG
-        val tiffs = rows.map { r =>
-          val (serial, path) = (r.getString(0), r.getString(1))
+        val tiffs = rows.map { case (serial, path) =>
           require(Files.exists(Paths.get(path)),
             s"File doesn't exist: $path")
           spark.read.format("binaryFile").load(path)
@@ -322,8 +339,7 @@ object Cli {
         // (tiffolder_splitter.py:236-305 get_frames_and_metadata):
         // single-page *.tif frames named SMS-style, frame info from
         // the folder's metadata.txt Summary — real byte-level split
-        val folders = rows.map { r =>
-          val (serial, folder) = (r.getString(0), r.getString(1))
+        val folders = rows.map { case (serial, folder) =>
           require(Files.isDirectory(Paths.get(folder)),
             s"Folder doesn't exist: $folder")
           val metaPath = Paths.get(folder, "metadata.txt")

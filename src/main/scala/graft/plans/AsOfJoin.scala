@@ -99,9 +99,8 @@ object GraftStrategies extends SparkStrategy {
     * The naive check-then-append is not atomic — two threads issuing
     * their first graft join concurrently could double-register the
     * strategy — so both per-query helpers route through this
-    * synchronized door. (Sessions installing
-    * [[graft.GraftExtensions]] get the strategy via
-    * injectPlannerStrategy and never mutate experimental state.)
+    * synchronized door. It is the only registration path: the two
+    * helpers are the only builders of [[AsOfJoin]] and [[RangeJoin]].
     */
   def ensureRegistered(spark: SparkSession): Unit = synchronized {
     if (!spark.experimental.extraStrategies.contains(GraftStrategies)) {

@@ -10,10 +10,10 @@ import graft.functions.{HyperplaneBits, MinHashSig, QuantileSketchAgg, QuantileS
 
 /** SparkSessionExtensions entry point: registers graft's custom
   * expressions for SQL use, so `SELECT word_ngrams(text, 3)` works in
-  * plain spark.sql alongside the Column API, plus the planner
-  * strategy for the custom operators ([[AsOfJoinExec]],
-  * [[RangeJoinExec]]) so sessions configured with the extension don't
-  * depend on the helper objects' lazy strategy injection.
+  * plain spark.sql alongside the Column API. The custom join operators
+  * need no extension: the only builders of their logical nodes
+  * ([[AsOf.asofJoin]], [[RangeJoinOp.rangeJoin]]) register their
+  * planner strategy through [[GraftStrategies.ensureRegistered]].
   *
   * Install with:
   * {{{
@@ -23,7 +23,6 @@ import graft.functions.{HyperplaneBits, MinHashSig, QuantileSketchAgg, QuantileS
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => GraftStrategies)
     ext.injectFunction(GraftExtensions.wordNGramsDescriptor)
     ext.injectFunction(GraftExtensions.hyperplaneBitsDescriptor)
     ext.injectFunction(GraftExtensions.minhashSigDescriptor)

@@ -167,47 +167,36 @@ trait FrameStorageApi extends Serializable {
 
   /** Distributed byte download (download_files, data_storage.py:243-253):
     * copy the named files from storage into `destDir` without opening
-    * them — a binaryFile scan + per-partition write loop. Returns
-    * files copied.
+    * them. Returns files copied.
     */
   def downloadFiles(spark: SparkSession, fileNames: Seq[String],
       destDir: String): Long = {
-    if (fileNames.isEmpty) return 0L
-    Files.createDirectories(Paths.get(destDir))
-    val wanted = fileNames.toSet
     import spark.implicits._
-    readFrames(spark)
-      .filter(col("file_name").isInCollection(wanted))
-      .as[(String, Array[Byte])]
-      .mapPartitions { rows =>
-        FrameStorage.assertMounted(destDir)
-        rows.map { case (name, bytes) =>
-          Files.write(Paths.get(destDir, name), bytes)
-          1L
-        }
-      }
-      .toDF("n")
-      .agg(coalesce(sum("n"), lit(0L)))
-      .head().getLong(0)
+    if (fileNames.isEmpty) 0L
+    else downloadManifest(spark, fileNames.toDF("file_name"), destDir)
   }
 
-  /** Manifest-driven download with NO driver-side file list: the
-    * stored frames semi-join the manifest DataFrame on file_name and
-    * each match copies inside its partition — scaling to manifests a
-    * driver couldn't hold. Returns files copied.
+  /** Manifest-driven download with NO driver-side file list: the stored
+    * frame NAMES ([[listFrames]], no payload read) semi-join the
+    * manifest DataFrame on file_name, and each match is copied from its
+    * storage path inside its partition — so only the copied frames are
+    * read, and manifests scale past what a driver could hold. Returns
+    * files copied.
     */
   def downloadManifest(spark: SparkSession, manifest: DataFrame,
       destDir: String): Long = {
     Files.createDirectories(Paths.get(destDir))
+    val self = this
     import spark.implicits._
-    readFrames(spark)
+    listFrames(spark)
       .join(broadcast(manifest.select("file_name").distinct()),
         Seq("file_name"), "left_semi")
-      .as[(String, Array[Byte])]
-      .mapPartitions { rows =>
+      .as[String]
+      .mapPartitions { names =>
         FrameStorage.assertMounted(destDir)
-        rows.map { case (name, bytes) =>
-          Files.write(Paths.get(destDir, name), bytes)
+        names.map { name =>
+          Files.copy(Paths.get(self.getStoragePath(name)),
+            Paths.get(destDir, name), StandardCopyOption.REPLACE_EXISTING)
           1L
         }
       }

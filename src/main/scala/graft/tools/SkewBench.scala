@@ -69,21 +69,16 @@ object SkewBench {
 
   def main(args: Array[String]): Unit = {
     val rows = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "5000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // force the shuffle join under test everywhere
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // hot partition ~90% of rows × ~100 B ≈ rows/11 KB; make sure the
-      // default 256 MB threshold trips at the default 5M rows
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "67108864")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "33554432")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
+    // force the shuffle join under test everywhere
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // hot partition ~90% of rows × ~100 B ≈ rows/11 KB; make sure the
+    // default 256 MB threshold trips at the default 5M rows
+    spark.conf.set(
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
+      "67108864")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      "33554432")
 
     val f = fact(spark, rows)
     val d = dim(spark)

@@ -216,6 +216,48 @@ class CliSpec extends AnyFunSuite {
     assert(upload("") == 2)
   }
 
+  test("upload csv columns are found by header name; a quoted field may " +
+      "hold a comma") {
+    val tmp = Files.createTempDirectory("cli_up_csv")
+    val listing = tmp.resolve("frames.txt")
+    Files.writeString(listing,
+      (0 to 3).map(z => f"im_c000_z$z%03d_t000_p000.png").mkString("\n"))
+    val serial = "CSV-2026-01-01-00-00-00-0001"
+    val csv = tmp.resolve("upload.csv")
+    // RFC 4180: the description is quoted, holds a comma and a doubled
+    // quote, and sits before the two columns the upload reads
+    Files.writeString(csv, "description,file_name,dataset_id\n" +
+      "\"plate 1, well \"\"A\"\"\"," + s"$listing,$serial\n")
+    assert(Cli.uploadRows(csv.toString) === Seq(serial -> listing.toString))
+    val cfg = Files.writeString(tmp.resolve("config.json"),
+      """{"upload_type": "frames", "frames_format": "sms_name"}""")
+    val store = tmp.resolve("store").toString
+    assert(Cli.run(spark, Seq("upload", "--csv", csv.toString,
+      "--config", cfg.toString, "--store", store)) == 0)
+    val frames = spark.read.parquet(s"$store/frames.parquet")
+    assert(frames.count() == 4)
+    assert(frames.select("dataset_serial").distinct().collect()
+      .map(_.getString(0)).toSeq === Seq(serial))
+  }
+
+  test("upload csv without a file_name column or data rows is an error") {
+    val tmp = Files.createTempDirectory("cli_up_nocol")
+    val cfg = Files.writeString(tmp.resolve("config.json"),
+      """{"upload_type": "frames", "frames_format": "sms_name"}""")
+    def upload(body: String): Int = {
+      val csv = Files.writeString(tmp.resolve("upload.csv"), body)
+      Cli.run(spark, Seq("upload", "--csv", csv.toString,
+        "--config", cfg.toString, "--store", tmp.resolve("s").toString))
+    }
+    val missing = "dataset_id,description\nNOCOL-0001,t\n"
+    assert(upload(missing) == 2)
+    val e = intercept[IllegalArgumentException](
+      Cli.uploadRows(tmp.resolve("upload.csv").toString))
+    assert(e.getMessage.contains("no file_name column"))
+    assert(upload("dataset_id,file_name\n") == 2)
+    assert(!Files.exists(tmp.resolve("s")))
+  }
+
   test("upload rejects formats the CLI cannot honestly run") {
     val tmp = Files.createTempDirectory("cli_up_bad")
     val listing = tmp.resolve("l.txt")

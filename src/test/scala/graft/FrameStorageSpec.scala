@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.graft.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -152,6 +154,38 @@ abstract class FrameStorageContract extends AnyFunSuite {
     val dest2 = Files.createTempDirectory("graft_dl2").toString
     assert(st.downloadManifest(spark, manifest, dest2) === 2L)
     assert(Files.list(Paths.get(dest2)).count() === 2L)
+  }
+
+  test(s"[$backend] a manifest download reads no more input bytes " +
+      "than it copies") {
+    val m = mount()
+    val (framed, dsId) = oneDataset()
+    val st = mkStorage(m, s"raw_frames/$dsId")
+    st.uploadFrames(framed)
+    val names = st.listFrames(spark).orderBy("file_name")
+      .collect().map(_.getString(0)).take(4).toSeq
+    val copied = names.map(n => Files.size(Paths.get(st.getStoragePath(n))))
+      .sum
+    import spark.implicits._
+    val manifest = names.toDF("file_name")
+    val dest = Files.createTempDirectory("graft_dl_read").toString
+    val sc = spark.sparkContext
+    TestBus.drain(sc)
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          read.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(st.downloadManifest(spark, manifest, dest) === 4L)
+      TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(read.get <= copied,
+      s"fetching 4 frames ($copied bytes) read ${read.get} input bytes")
+    for (n <- names) assert(Files.readAllBytes(Paths.get(dest, n)).toSeq ===
+      Files.readAllBytes(Paths.get(st.getStoragePath(n))).toSeq)
   }
 
   test(s"[$backend] takedown deletes exactly the manifest's blobs; " +
