@@ -1,9 +1,11 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.imaging.ImagingModel
+import graft.ops.Spread
 
 /** Audio as an opaque binary column with typed metadata — the third
   * modality of the multimodal plumbing (images: [[BinaryFrames]];
@@ -11,7 +13,7 @@ import graft.imaging.ImagingModel
   * imaging path: payloads are REAL bytes of the interchange format
   * ([[AudioCodec]], 44-byte RIFF header + little-endian PCM), encoded
   * at generation time from each frame's sha256-derived samples and
-  * decoded back through a typed mapPartitions loop; PCM losslessness
+  * decoded back through ONE kernel ([[clipStats]]); PCM losslessness
   * is what keeps the stats oracle-checked from the hex string alone.
   */
 object BinaryAudio {
@@ -31,50 +33,74 @@ object BinaryAudio {
   }
 
   /** One WAV clip per frame row (clip_id = frame id), with the typed
-    * metadata struct a catalog carries next to the blob. Same
-    * row-spreading rationale as [[BinaryFrames.withPayload]].
+    * metadata struct a catalog carries next to the blob, rows spread
+    * first ([[Spread.rows]]).
     */
   def withAudioPayload(spark: SparkSession, dir: String): DataFrame =
-    ImagingModel.frames(spark, dir)
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    Spread.rows(ImagingModel.frames(spark, dir))
       .select(col("id").as("clip_id"),
         encodeWav(col("sha256")).as("payload"),
         struct(lit(SampleRate).as("sample_rate"),
           lit(ClipSamples).as("n_samples"),
           lit("pcm16").as("encoding")).as("meta"))
 
-  case class ClipFeature(clip_id: Long, sample_rate: Int, n: Int,
-    sum_sq: Long, peak: Int, n_clipped: Int)
-
-  /** Per-partition batched decode — one codec pass emits the exact
-    * integer moments (Σs², peak |s|, near-full-scale count) every
-    * audio QC derives from. No shuffle; only six numbers per clip
-    * reach the exchange.
+  /** [[clipStats]]' output: the loudness moments (n, exact Σs², peak
+    * |s|, near-full-scale count) and the window moments (Σs, min/max
+    * 32-sample-window Σs², below-clip-mean window count) of one clip.
     */
-  def decodeClips(spark: SparkSession,
-      clips: DataFrame): Dataset[ClipFeature] = {
-    import spark.implicits._
-    clips.select("clip_id", "payload")
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val (rate, s) = AudioCodec.decodePcm16(payload)
-          var sumSq = 0L
-          var peak = 0
-          var clipped = 0
-          var i = 0
-          while (i < s.length) {
-            val v = s(i).toInt
-            val a = math.abs(v)
-            sumSq += v.toLong * v
-            if (a > peak) peak = a
-            if (a >= 32700) clipped += 1
-            i += 1
-          }
-          ClipFeature(id, rate, s.length, sumSq, peak, clipped)
-        }
+  case class ClipStats(sample_rate: Int, n: Int, sum_sq: Long, peak: Int,
+    n_clipped: Int, sum_s: Long, wmin: Long, wmax: Long, n_quiet: Int)
+
+  /** The audio kernel: one WAV decode per clip and one fold that every
+    * audio consumer shares (both inline QC queries, the
+    * [[graft.sources.AudioStats]] build and its streaming ingest). The
+    * samples frame into non-overlapping 32-sample windows (8 per
+    * 256-sample clip); every moment is an exact integer. Nondeterministic for the reason given
+    * at [[BinaryFrames.decodeWith]].
+    */
+  val clipStats: UserDefinedFunction = udf { (payload: Array[Byte]) =>
+    val (rate, s) = AudioCodec.decodePcm16(payload)
+    var sumSq = 0L
+    var peak = 0
+    var clipped = 0
+    var i = 0
+    while (i < s.length) {
+      val v = s(i).toInt
+      val a = math.abs(v)
+      sumSq += v.toLong * v
+      if (a > peak) peak = a
+      if (a >= 32700) clipped += 1
+      i += 1
+    }
+    val nw = s.length / 32
+    val w = new Array[Long](nw)
+    var sumS = 0L
+    var j = 0
+    while (j < nw) {
+      var ssq = 0L
+      i = 0
+      while (i < 32) {
+        val v = s(j * 32 + i).toInt
+        ssq += v.toLong * v
+        sumS += v
+        i += 1
       }
-  }
+      w(j) = ssq
+      j += 1
+    }
+    val tot = w.sum
+    var quiet = 0
+    var wmin = Long.MaxValue
+    var wmax = Long.MinValue
+    j = 0
+    while (j < nw) {
+      if (w(j) * nw < tot) quiet += 1
+      if (w(j) < wmin) wmin = w(j)
+      if (w(j) > wmax) wmax = w(j)
+      j += 1
+    }
+    ClipStats(rate, s.length, sumSq, peak, clipped, sumS, wmin, wmax, quiet)
+  }.asNondeterministic().withName("clipStats")
 
   /** Loudness/clipping QC per dataset THROUGH the real WAV decode —
     * the audio twin of [[BinaryFrames.payloadStats]]: RMS level from
@@ -85,7 +111,7 @@ object BinaryAudio {
     */
   def waveformStats(spark: SparkSession, dir: String): DataFrame =
     waveformStatsTail(spark, dir,
-      decodeClips(spark, withAudioPayload(spark, dir)).toDF())
+      BinaryFrames.decodeWith(withAudioPayload(spark, dir), clipStats))
 
   /** The aggregation tail of [[waveformStats]] over already-decoded
     * clip moments — shared verbatim by the inline operator (which
@@ -119,62 +145,13 @@ object BinaryAudio {
       .orderBy("dataset_serial")
   }
 
-  case class WindowFeature(clip_id: Long, sum_s: Long, wmin: Long,
-    wmax: Long, n_quiet: Int)
-
-  /** Per-partition windowed decode: each clip's 256 samples frame
-    * into 8 non-overlapping 32-sample windows; one codec pass emits
-    * the integer window moments (Σs per clip, min/max window Σs²,
-    * below-clip-mean window count). Five numbers per clip reach the
-    * exchange — the [[decodeClips]] discipline at window granularity.
-    */
-  def decodeWindows(spark: SparkSession,
-      clips: DataFrame): Dataset[WindowFeature] = {
-    import spark.implicits._
-    clips.select("clip_id", "payload")
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val (_, s) = AudioCodec.decodePcm16(payload)
-          val nw = s.length / 32
-          val w = new Array[Long](nw)
-          var sumS = 0L
-          var j = 0
-          while (j < nw) {
-            var ssq = 0L
-            var i = 0
-            while (i < 32) {
-              val v = s(j * 32 + i).toInt
-              ssq += v.toLong * v
-              sumS += v
-              i += 1
-            }
-            w(j) = ssq
-            j += 1
-          }
-          val tot = w.sum
-          var quiet = 0
-          var wmin = Long.MaxValue
-          var wmax = Long.MinValue
-          j = 0
-          while (j < nw) {
-            if (w(j) * nw < tot) quiet += 1
-            if (w(j) < wmin) wmin = w(j)
-            if (w(j) > wmax) wmax = w(j)
-            j += 1
-          }
-          WindowFeature(id, sumS, wmin, wmax, quiet)
-        }
-      }
-  }
-
   /** Windowed activity QC per dataset — the silence/dynamics report a
     * speech-data pipeline reads before transcription: fraction of
     * below-clip-mean energy windows (the relative quiet measure — an
     * absolute dBFS gate would be a constant on synthetic audio), mean
     * per-clip dynamic range √(max window Σs² / min window Σs²), and
     * DC offset (a miswired recording chain's signature). Integer
-    * window moments come off one decode pass; per-clip dynamic range
+    * window moments come off [[clipStats]]; per-clip dynamic range
     * is summed as exact DECIMAL so the dataset mean is
     * partition-order independent. Same hex-arithmetic oracle
     * discipline as [[waveformStats]]: the planted samples are
@@ -182,7 +159,7 @@ object BinaryAudio {
     */
   def activityWindows(spark: SparkSession, dir: String): DataFrame =
     activityWindowsTail(spark, dir,
-      decodeWindows(spark, withAudioPayload(spark, dir)).toDF())
+      BinaryFrames.decodeWith(withAudioPayload(spark, dir), clipStats))
 
   /** The aggregation tail of [[activityWindows]] over already-decoded
     * window moments — the [[waveformStatsTail]] contract for the

@@ -1,9 +1,11 @@
 package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.imaging.ImagingModel
+import graft.ops.Spread
 
 /** Multimodal column plumbing (SURVEY.md §2.5): images as opaque
   * `binary` columns with typed metadata, the way the reference ships
@@ -13,51 +15,133 @@ import graft.imaging.ImagingModel
   * Since round 4 the codec is REAL: payloads are genuine PNG bytes
   * ([[ImageCodec]], javax.imageio — no native dependency), encoded at
   * generation time from each frame's sha256-derived pixel block and
-  * decoded back through the typed mapPartitions loop. PNG is lossless,
-  * so the decoded pixels equal the planted pre-encode values — which
-  * is exactly what lets `img_payload_stats` stay oracle-checked: the
-  * DuckDB twin recomputes the same pixel statistics from the sha256
-  * hex without ever seeing a PNG byte.
+  * decoded back through ONE kernel per color model ([[grayStats]],
+  * [[rgbStats]]; audio has [[BinaryAudio.clipStats]]). PNG is
+  * lossless, so the decoded pixels equal the planted pre-encode
+  * values — which is exactly what lets `img_payload_stats` stay
+  * oracle-checked: the DuckDB twin recomputes the same pixel
+  * statistics from the sha256 hex without ever seeing a PNG byte.
   *
-  * The encode/decode UDF + typed mapPartitions are the sanctioned
-  * exception to the functions-not-UDFs rule: a binary codec has no
-  * Column-function form, and the shape (scan-side per-row work, one
-  * codec init per partition, no shuffle) is what a production
-  * image pipeline runs.
+  * Every QC query is `tail(kernel(payload))`: the kernel folds each
+  * decoded frame into all the moments any query needs, and the query
+  * keeps only the fields its tail reads. The encode/decode UDFs are
+  * the sanctioned exception to the functions-not-UDFs rule: a binary
+  * codec has no Column-function form, and the shape (scan-side
+  * per-row work, no shuffle) is what a production image pipeline runs.
   */
 object BinaryFrames {
 
   case class FrameFeature(frame_id: Long, width: Int, height: Int,
     n_px: Int, sum_px: Long, sum_sq: Long, mean_px: Double, max_px: Int)
 
-  case class FrameRgbFeature(frame_id: Long, width: Int, height: Int,
-    n_px: Int, sum_r: Long, sum_g: Long, sum_b: Long,
+  /** [[grayStats]]' output: decoded dims, exact integer moments and the
+    * 16-bin intensity histogram of one frame.
+    */
+  case class GrayStats(width: Int, height: Int, n_px: Int, sum_px: Long,
+    sum_sq: Long, max_px: Int, bins: Array[Long])
+
+  /** [[rgbStats]]' output: per-channel sums and maxima plus the exact
+    * per-channel and cross-channel second moments of one frame.
+    */
+  case class RgbStats(width: Int, height: Int, n_px: Int,
+    sum_r: Long, sum_g: Long, sum_b: Long,
     max_r: Int, max_g: Int, max_b: Int,
     sum_rr: Long, sum_gg: Long, sum_bb: Long,
     sum_rg: Long, sum_gb: Long, sum_rb: Long)
 
+  /** The gray kernel: one decode of a grayscale PNG payload and one
+    * fold over its pixels, shared by every gray consumer (the inline QC
+    * queries, [[decodeFrames]], the [[graft.sources.FrameStats]]
+    * build). Width and height come from the DECODED image, not the
+    * metadata — the audit a real ingest runs to catch metadata drift.
+    * The bin width is 1/16 of the frame's OWN depth range (16 values at
+    * uint8, 4096 at uint16), so a 16-bit acquisition histograms
+    * correctly instead of indexing past the bin array.
+    */
+  val grayStats: UserDefinedFunction = udf { (payload: Array[Byte]) =>
+    val d = ImageCodec.decodeImage(payload)
+    require(d.channels == 1, "not grayscale (color type 2)")
+    val px = d.samples
+    val shift = d.bitDepth - 4
+    val bins = new Array[Long](16)
+    var sum = 0L
+    var sumSq = 0L
+    var max = 0
+    var i = 0
+    while (i < px.length) {
+      val v = px(i)
+      sum += v
+      sumSq += v.toLong * v
+      if (v > max) max = v
+      bins(v >> shift) += 1L
+      i += 1
+    }
+    GrayStats(d.width, d.height, px.length, sum, sumSq, max, bins)
+  }.asNondeterministic().withName("grayStats")
+
+  /** The RGB kernel: one decode of a color-type-2 PNG payload through
+    * [[ImageCodec.decodeRgb]] and one fold over the interleaved
+    * samples — the per-channel audit a color ingest runs.
+    */
+  val rgbStats: UserDefinedFunction = udf { (payload: Array[Byte]) =>
+    val (w, h, s) = ImageCodec.decodeRgb(payload)
+    val sums = new Array[Long](3)
+    val maxs = new Array[Int](3)
+    var rr, gg, bb, rg, gb, rb = 0L
+    var i = 0
+    while (i < s.length) {
+      val c = i % 3
+      sums(c) += s(i)
+      if (s(i) > maxs(c)) maxs(c) = s(i)
+      if (c == 2) {
+        val r = s(i - 2).toLong; val g = s(i - 1).toLong
+        val b = s(i).toLong
+        rr += r * r; gg += g * g; bb += b * b
+        rg += r * g; gb += g * b; rb += r * b
+      }
+      i += 1
+    }
+    RgbStats(w, h, w * h, sums(0), sums(1), sums(2),
+      maxs(0), maxs(1), maxs(2), rr, gg, bb, rg, gb, rb)
+  }.asNondeterministic().withName("rgbStats")
+
+  /** `framed` with its `payload` column replaced by `kernel`'s fields,
+    * one kernel call per row; every other column rides along. The
+    * kernels are marked nondeterministic so the optimizer treats the
+    * call as opaque: it never copies the call into each field access
+    * (CollapseProject) or into a filter pushed below the projection
+    * (the non-empty filter Spark infers for `posexplode(bins)` would
+    * otherwise decode each payload three times).
+    */
+  private[graft] def decodeWith(framed: DataFrame,
+      kernel: UserDefinedFunction): DataFrame = {
+    val keep = framed.columns.toSeq.filter(_ != "payload").map(col)
+    framed.select(keep :+ kernel(col("payload")).as("stats"): _*)
+      .select(keep :+ col("stats.*"): _*)
+  }
+
+  /** [[decodeWith]] plus the dataset key (frame_id div 10: id =
+    * orderkey*10 + linenumber, linenumber ≤ 7 by §3) — the input every
+    * per-dataset QC tail reads.
+    */
+  private def perDataset(framed: DataFrame,
+      kernel: UserDefinedFunction): DataFrame =
+    decodeWith(framed, kernel).withColumn("dataset_id", expr("frame_id div 10"))
+
   /** PNG-encode the 64 sha256-derived bytes as an 8×8 uint8 grayscale
     * frame — the upload-time serialization of image_utils.py:5-16.
     */
-  private val encodePng = udf { (sha: String) =>
+  private[graft] val encodePng = udf { (sha: String) =>
     val b = ImageCodec.hexBytes(sha)
     ImageCodec.encodeGray8(b ++ b, 8, 8)
   }
 
   /** Frames with a REAL binary payload: each frame's 64 planted pixel
     * values (unhex(sha256) twice, row-major 8×8) PNG-encoded at
-    * generation time.
-    *
-    * The explicit row-spreading repartition is the emb_gram_power
-    * lesson applied to codecs: frame METADATA is byte-small, so the
-    * scan would hand one or two partitions ~50 µs/row of encode+decode
-    * work and run the whole codec pass single-task. Spreading to the
-    * session's shuffle parallelism costs one exchange of tiny rows and
-    * buys the full-core codec stage (75 s → ~3 s at bench scale).
+    * generation time, rows spread first ([[Spread.rows]]).
     */
   def withPayload(spark: SparkSession, dir: String): DataFrame =
-    ImagingModel.frames(spark, dir)
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    Spread.rows(ImagingModel.frames(spark, dir))
       .select(col("id").as("frame_id"), col("file_name"),
         encodePng(col("sha256")).as("payload"),
         struct(lit(8).as("width"), lit(8).as("height"),
@@ -71,11 +155,7 @@ object BinaryFrames {
     * sums and fails the oracle — identical channels would hash-match
     * through an R↔G swap.
     */
-  /** The planted RGB sample block (shared with
-    * [[graft.sources.FrameStats]]'s one-pass builder so the stored
-    * stats decode EXACTLY the payloads the inline operators decode).
-    */
-  private[graft] def rgbSamplesOf(sha: String): Array[Byte] = {
+  private[graft] val encodeRgbPng = udf { (sha: String) =>
     val b = ImageCodec.hexBytes(sha)
     val out = new Array[Byte](192) // 8×8 px × 3 channels
     var i = 0
@@ -86,64 +166,31 @@ object BinaryFrames {
       out(3 * i + 2) = ((3 * v + 7) % 256).toByte
       i += 1
     }
-    out
+    ImageCodec.encodeRgb8(out, 8, 8)
   }
 
-  private val encodeRgbPng = udf { (sha: String) =>
-    ImageCodec.encodeRgb8(rgbSamplesOf(sha), 8, 8)
-  }
-
-  /** Frames with a REAL RGB payload (same row-spreading rationale as
-    * [[withPayload]]).
+  /** Frames with a REAL RGB payload (rows spread like [[withPayload]]).
     */
   def withPayloadRgb(spark: SparkSession, dir: String): DataFrame =
-    ImagingModel.frames(spark, dir)
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    Spread.rows(ImagingModel.frames(spark, dir))
       .select(col("id").as("frame_id"), col("file_name"),
         encodeRgbPng(col("sha256")).as("payload"),
         struct(lit(8).as("width"), lit(8).as("height"),
           lit("uint8").as("bit_depth"), lit(3).as("channels")).as("meta"))
 
-  /** Per-partition batched decode — the exact shape a mapInPandas /
-    * mapPartitions image pipeline has at scale: one codec init per
-    * partition, streaming over rows, typed output schema. Width and
-    * height come from the DECODED image, not the metadata — the audit
-    * a real ingest runs to catch metadata drift.
+  /** Per-frame gray statistics of any (frame_id, payload) set through
+    * [[grayStats]], as the typed rows the perfbench harness and the S3
+    * read path collect.
     */
   def decodeFrames(spark: SparkSession, framed: DataFrame): Dataset[FrameFeature] = {
     import spark.implicits._
-    framed.select("frame_id", "payload")
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // codec/session init would happen once per partition here
-        rows.map { case (id, payload) =>
-          val (w, h, px) = ImageCodec.decodeGray(payload)
-          var sum = 0L
-          var sumSq = 0L
-          var max = 0
-          var i = 0
-          while (i < px.length) {
-            sum += px(i)
-            sumSq += px(i).toLong * px(i)
-            if (px(i) > max) max = px(i)
-            i += 1
-          }
-          val mean = if (px.length == 0) 0.0 else sum.toDouble / px.length
-          FrameFeature(id, w, h, px.length, sum, sumSq, mean, max)
-        }
-      }
+    decodeWith(framed.select("frame_id", "payload"), grayStats)
+      .withColumn("mean_px", col("sum_px") / col("n_px"))
+      .select("frame_id", "width", "height", "n_px", "sum_px", "sum_sq",
+        "mean_px", "max_px")
+      .as[FrameFeature]
   }
 
-  /** Per-dataset pixel statistics THROUGH the real decode path — the
-    * driver-checked query that proves the multimodal plumbing end to
-    * end: genuine PNG payloads flow through the typed mapPartitions
-    * decode, and the per-dataset roll-up (frame count, pixel volume,
-    * exact pixel-value sums, max pixel) hash-matches a DuckDB oracle
-    * that recomputes the same planted pixels from the sha256 hex with
-    * integer arithmetic (PNG losslessness is what makes the two equal
-    * bit-for-bit). frame_id div 10 recovers the dataset key
-    * (id = orderkey*10 + linenumber, linenumber ≤ 7 by §3).
-    */
   /** Photobleaching drift curve — the acquisition-QC metric a
     * time-lapse microscopy run is checked against first: per
     * (dataset, time index), the mean pixel intensity through the REAL
@@ -151,7 +198,7 @@ object BinaryFrames {
     * monotone decay is bleaching; a jump is a lamp/stage event. The
     * time index derives from the frame id arithmetic (no metadata
     * join); dataset serials join from the broadcast dimension; decode
-    * is embarrassingly parallel mapPartitions and only integer sums
+    * is embarrassingly parallel per-row work and only integer sums
     * reach the exchange. The t=0 reference census (one row per
     * dataset) broadcasts back — the same dimension-sized contract as
     * the serial join. Drift divides two ROUNDED means, so the output
@@ -159,8 +206,7 @@ object BinaryFrames {
     */
   def intensityDrift(spark: SparkSession, dir: String): DataFrame =
     intensityDriftTail(spark, dir,
-      decodeFrames(spark, withPayload(spark, dir)).toDF()
-        .withColumn("dataset_id", expr("frame_id div 10"))
+      perDataset(withPayload(spark, dir), grayStats)
         .withColumn("time_idx", expr("cast(frame_id % 10 - 1 as int)")))
 
   /** Drift roll-up over any per-frame stats source (inline decode or
@@ -201,9 +247,7 @@ object BinaryFrames {
     * the order is engine-identical.
     */
   def focusRank(spark: SparkSession, dir: String): DataFrame =
-    focusRankTail(spark, dir,
-      decodeFrames(spark, withPayload(spark, dir)).toDF()
-        .withColumn("dataset_id", expr("frame_id div 10")))
+    focusRankTail(spark, dir, perDataset(withPayload(spark, dir), grayStats))
 
   private[graft] def focusRankTail(spark: SparkSession, dir: String,
       feats: DataFrame): DataFrame =
@@ -224,10 +268,16 @@ object BinaryFrames {
         col("t.id").as("frame_id"), col("t.score").as("variance"))
       .orderBy("dataset_serial", "rank")
 
+  /** Per-dataset pixel statistics THROUGH the real decode path — the
+    * oracle-checked query that proves the multimodal plumbing end to
+    * end: genuine PNG payloads flow through [[grayStats]], and the
+    * per-dataset roll-up (frame count, pixel volume, exact pixel-value
+    * sums, max pixel) hash-matches a DuckDB oracle that recomputes the
+    * same planted pixels from the sha256 hex with integer arithmetic
+    * (PNG losslessness is what makes the two equal bit-for-bit).
+    */
   def payloadStats(spark: SparkSession, dir: String): DataFrame =
-    payloadStatsTail(spark, dir,
-      decodeFrames(spark, withPayload(spark, dir)).toDF()
-        .withColumn("dataset_id", expr("frame_id div 10")))
+    payloadStatsTail(spark, dir, perDataset(withPayload(spark, dir), grayStats))
 
   private[graft] def payloadStatsTail(spark: SparkSession, dir: String,
       feats: DataFrame): DataFrame =
@@ -244,40 +294,6 @@ object BinaryFrames {
         col("sum_px_values"), col("max_px"))
       .orderBy("dataset_serial")
 
-  /** The RGB twin of [[decodeFrames]]: one decode per row through
-    * [[ImageCodec.decodeRgb]], per-CHANNEL sums and maxima off the
-    * interleaved samples — the per-channel audit a color ingest runs.
-    */
-  def decodeFramesRgb(spark: SparkSession,
-      framed: DataFrame): Dataset[FrameRgbFeature] = {
-    import spark.implicits._
-    framed.select("frame_id", "payload")
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val (w, h, s) = ImageCodec.decodeRgb(payload)
-          val sums = new Array[Long](3)
-          val maxs = new Array[Int](3)
-          var rr, gg, bb, rg, gb, rb = 0L
-          var i = 0
-          while (i < s.length) {
-            val c = i % 3
-            sums(c) += s(i)
-            if (s(i) > maxs(c)) maxs(c) = s(i)
-            if (c == 2) {
-              val r = s(i - 2).toLong; val g = s(i - 1).toLong
-              val b = s(i).toLong
-              rr += r * r; gg += g * g; bb += b * b
-              rg += r * g; gb += g * b; rb += r * b
-            }
-            i += 1
-          }
-          FrameRgbFeature(id, w, h, w * h, sums(0), sums(1), sums(2),
-            maxs(0), maxs(1), maxs(2), rr, gg, bb, rg, gb, rb)
-        }
-      }
-  }
-
   /** Per-dataset PER-CHANNEL pixel statistics through the real RGB
     * decode path — the `im_colors=3` twin of [[payloadStats]], same
     * hex-arithmetic oracle idea: the DuckDB twin recomputes each
@@ -286,8 +302,7 @@ object BinaryFrames {
     */
   def payloadStatsRgb(spark: SparkSession, dir: String): DataFrame =
     payloadStatsRgbTail(spark, dir,
-      decodeFramesRgb(spark, withPayloadRgb(spark, dir)).toDF()
-        .withColumn("dataset_id", expr("frame_id div 10")))
+      perDataset(withPayloadRgb(spark, dir), rgbStats))
 
   private[graft] def payloadStatsRgbTail(spark: SparkSession, dir: String,
       feats: DataFrame): DataFrame =
@@ -317,14 +332,13 @@ object BinaryFrames {
     * planted transforms: G = 255−R is exactly −1 by construction —
     * the built-in proof the formula is right — while the modular B
     * channel decorrelates). All moments (Σx, Σx², Σxy) accumulate as
-    * EXACT integers in the decode loop and the partial agg; doubles
+    * EXACT integers in [[rgbStats]] and the partial agg; doubles
     * appear once in the final correlation formula, rounded — so the
     * hex-arithmetic oracle matches bit for bit without seeing a PNG.
     */
   def channelCrosstalk(spark: SparkSession, dir: String): DataFrame =
     channelCrosstalkTail(spark, dir,
-      decodeFramesRgb(spark, withPayloadRgb(spark, dir)).toDF()
-        .withColumn("dataset_id", expr("frame_id div 10")))
+      perDataset(withPayloadRgb(spark, dir), rgbStats))
 
   private[graft] def channelCrosstalkTail(spark: SparkSession, dir: String,
       feats: DataFrame): DataFrame = {
@@ -356,39 +370,9 @@ object BinaryFrames {
       .orderBy("dataset_serial")
   }
 
-  case class FrameHist(frame_id: Long, n_px: Int, bins: Array[Long])
-
-  /** Per-frame 16-bin intensity histogram through the real PNG decode
-    * — one codec pass emits the bin counts (bin width = 1/16 of the
-    * frame's OWN depth range: 16 values at uint8, 4096 at uint16, so
-    * a 16-bit acquisition histograms correctly instead of indexing
-    * past the bin array), from which both the exposure histogram and
-    * the clipping audit derive. Same partition shape as
-    * [[decodeFrames]]: per-partition codec init, no shuffle, only 16
-    * longs per frame reach the exchange.
-    */
-  def decodeHist16(spark: SparkSession,
-      framed: DataFrame): Dataset[FrameHist] = {
-    import spark.implicits._
-    framed.select("frame_id", "payload")
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val d = ImageCodec.decodeImage(payload)
-          require(d.channels == 1, "not grayscale (color type 2)")
-          val px = d.samples
-          val shift = d.bitDepth - 4
-          val bins = new Array[Long](16)
-          var i = 0
-          while (i < px.length) { bins(px(i) >> shift) += 1L; i += 1 }
-          FrameHist(id, px.length, bins)
-        }
-      }
-  }
-
   /** Exposure histogram — the per-dataset intensity distribution an
     * acquisition QC dashboard plots first: 16 equal-width bins over
-    * the uint8 range through the REAL decode ([[decodeHist16]]),
+    * the uint8 range through the REAL decode ([[grayStats]]' bins),
     * rolled up per dataset with each bin's share of the pixel volume.
     * The per-bin partial sums are the only shuffled state (16 longs
     * per dataset-partition), and the share window runs over the
@@ -398,8 +382,7 @@ object BinaryFrames {
     */
   def pixelHistogram(spark: SparkSession, dir: String): DataFrame =
     pixelHistogramTail(spark, dir,
-      decodeHist16(spark, withPayload(spark, dir)).toDF()
-        .withColumn("dataset_id", expr("frame_id div 10")))
+      perDataset(withPayload(spark, dir), grayStats))
 
   private[graft] def pixelHistogramTail(spark: SparkSession, dir: String,
       feats: DataFrame): DataFrame = {
@@ -432,34 +415,17 @@ object BinaryFrames {
     * the dataset-wide mean (a monotone falloff with depth is
     * attenuation/scattering; one aberrant plane is a bad optical
     * section). The slice index is parsed from the FILE NAME (the
-    * `_z###_` token filename_parsers.py round-trips) before the
-    * decode, and rides the typed mapPartitions row — no join against
-    * the frames fact. Integer moments shuffle; the dataset-wide
-    * reference mean derives from a window over the per-(dataset,
-    * slice) census (≤ slices rows per dataset), and deviation divides
-    * two ROUNDED means, so the output is engine-exact.
+    * `_z###_` token filename_parsers.py round-trips) and rides next
+    * to the kernel's fields — no join against the frames fact. Integer
+    * moments shuffle; the dataset-wide reference mean derives from a
+    * window over the per-(dataset, slice) census (≤ slices rows per
+    * dataset), and deviation divides two ROUNDED means, so the output
+    * is engine-exact.
     */
-  def zProfile(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val framed = withPayload(spark, dir)
-      .select(col("frame_id"),
-        expr("cast(substring(split_part(file_name, '_', 3), 2, 3) as int)")
-          .as("slice_idx"),
-        col("payload"))
-    val feats = framed.as[(Long, Int, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, z, payload) =>
-          val (_, _, px) = ImageCodec.decodeGray(payload)
-          var sum = 0L
-          var i = 0
-          while (i < px.length) { sum += px(i); i += 1 }
-          (id, z, px.length, sum)
-        }
-      }
-      .toDF("frame_id", "slice_idx", "n_px", "sum_px")
-      .withColumn("dataset_id", expr("frame_id div 10"))
-    zProfileTail(spark, dir, feats)
-  }
+  def zProfile(spark: SparkSession, dir: String): DataFrame =
+    zProfileTail(spark, dir, perDataset(withPayload(spark, dir), grayStats)
+      .withColumn("slice_idx",
+        expr("cast(substring(split_part(file_name, '_', 3), 2, 3) as int)")))
 
   private[graft] def zProfileTail(spark: SparkSession, dir: String,
       feats: DataFrame): DataFrame = {
@@ -491,14 +457,13 @@ object BinaryFrames {
     * ingest: per dataset, the fraction of pixels in the top decode bin
     * ([240,255] — sensor clipping) and the bottom bin ([0,15] — dead
     * pixels / shutter misses), through the same single
-    * [[decodeHist16]] pass as the histogram. Integer counts shuffle;
+    * [[grayStats]] bins as the histogram. Integer counts shuffle;
     * doubles appear once in the rounded fractions, so the
     * hex-arithmetic oracle is bit-exact.
     */
   def saturationQc(spark: SparkSession, dir: String): DataFrame =
     saturationQcTail(spark, dir,
-      decodeHist16(spark, withPayload(spark, dir)).toDF()
-        .withColumn("dataset_id", expr("frame_id div 10")))
+      perDataset(withPayload(spark, dir), grayStats))
 
   private[graft] def saturationQcTail(spark: SparkSession, dir: String,
       feats: DataFrame): DataFrame =
@@ -535,34 +500,30 @@ object BinaryFrames {
     * fact has them) tie-break to identical lag sequences on both
     * engines.
     */
-  def sceneCuts(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val framed = ImagingModel.frames(spark, dir)
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      .select(col("id"), col("channel_idx"), col("slice_idx"),
-        col("time_idx"), col("pos_idx"), encodePng(col("sha256")).as("payload"))
-    val feats = framed
-      .as[(Long, Int, Int, Int, Int, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, c, z, t, p, payload) =>
-          val (_, _, px) = ImageCodec.decodeGray(payload)
-          var sum = 0L
-          var i = 0
-          while (i < px.length) { sum += px(i); i += 1 }
-          (id, c, z, t, p, sum.toDouble / px.length)
-        }
-      }
-      .toDF("frame_id", "c", "z", "t", "p", "mean_px")
-      .withColumn("dataset_id", expr("frame_id div 10"))
-    sceneCutsTail(spark, dir, feats)
-  }
+  def sceneCuts(spark: SparkSession, dir: String): DataFrame =
+    sceneCutsTail(spark, dir, gridFrames(spark, dir))
 
+  /** [[grayStats]] per generated frame with its (c, z, t, p) grid slot
+    * — the series input of [[sceneCuts]] and [[keyframes]].
+    */
+  private def gridFrames(spark: SparkSession, dir: String): DataFrame =
+    perDataset(Spread.rows(ImagingModel.frames(spark, dir))
+      .select(col("id").as("frame_id"), col("channel_idx").as("c"),
+        col("slice_idx").as("z"), col("time_idx").as("t"),
+        col("pos_idx").as("p"), encodePng(col("sha256")).as("payload")),
+      grayStats)
+
+  /** Cut census over any per-frame moment source (inline decode or the
+    * persisted [[graft.sources.FrameStats]] table) — `feats` carries
+    * (frame_id, dataset_id, c, z, t, p, n_px, sum_px).
+    */
   private[graft] def sceneCutsTail(spark: SparkSession, dir: String,
       feats: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val series = Window.partitionBy("dataset_id", "c", "z", "p")
       .orderBy(col("t"), col("frame_id"), col("mean_px"))
     feats
+      .withColumn("mean_px", col("sum_px").cast("double") / col("n_px"))
       .withColumn("prev", lag(col("mean_px"), 1).over(series))
       .withColumn("jump", abs(col("mean_px") - col("prev")))
       .groupBy("dataset_id")
@@ -585,38 +546,13 @@ object BinaryFrames {
     * boundaries (jump > 25 uint8 units), and each segment elects the
     * SHARPEST frame (max pixel variance — the [[focusRank]] proxy,
     * rounded before ranking, smaller frame_id on ties) as its
-    * keyframe. One decode pass emits both integer moments; the
+    * keyframe. One [[grayStats]] call emits both integer moments; the
     * segment id is a running cut count over the same bounded series
     * window as sceneCuts, and the per-segment argmax is a min-struct
     * aggregate (map-side partials), never a per-segment sort.
     */
-  def keyframes(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val framed = ImagingModel.frames(spark, dir)
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      .select(col("id"), col("channel_idx"), col("slice_idx"),
-        col("time_idx"), col("pos_idx"),
-        encodePng(col("sha256")).as("payload"))
-    val feats = framed
-      .as[(Long, Int, Int, Int, Int, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, c, z, t, p, payload) =>
-          val (_, _, px) = ImageCodec.decodeGray(payload)
-          var sum = 0L
-          var ssq = 0L
-          var i = 0
-          while (i < px.length) {
-            val v = px(i)
-            sum += v; ssq += v.toLong * v; i += 1
-          }
-          (id, c, z, t, p, px.length, sum, ssq)
-        }
-      }
-      .toDF("frame_id", "c", "z", "t", "p", "n_px", "sum_px", "sum_sq")
-      .withColumn("dataset_id", expr("frame_id div 10"))
-    keyframesTail(spark, dir, feats)
-  }
+  def keyframes(spark: SparkSession, dir: String): DataFrame =
+    keyframesTail(spark, dir, gridFrames(spark, dir))
 
   /** Keyframe election over any per-frame moment source (inline
     * decode or the persisted [[graft.sources.FrameStats]] table) —
@@ -664,7 +600,7 @@ object BinaryFrames {
     * global sort and no window. At 100 TB each group is one stack
     * (bounded by stack geometry), so collect_list state is bounded.
     * Payloads here are the raw stored frame bytes — reassembly moves
-    * storage blobs; decoding them is [[decodeFrames]]'s job.
+    * storage blobs; decoding them is [[grayStats]]' job.
     */
   def assembleStacks(spark: SparkSession, dir: String): DataFrame =
     assembleStacksOf(

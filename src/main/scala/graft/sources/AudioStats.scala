@@ -3,19 +3,20 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.multimodal.{AudioCodec, BinaryAudio}
+import graft.multimodal.{BinaryAudio, BinaryFrames}
+import graft.ops.Spread
 
 /** Persisted decode-once audio statistics — [[FrameStats]]' mold on
   * the audio modality: `aud_waveform_stats` and
   * `aud_activity_windows` each paid a full WAV decode of the clip
   * corpus per query (and between them, TWO decodes of the same
-  * bytes). Here ONE typed mapPartitions pass decodes every clip and
-  * persists the union of both queries' sufficient statistics:
+  * bytes). Here ONE pass decodes every clip through the kernel the
+  * inline queries share ([[BinaryAudio.clipStats]]) and persists the
+  * union of both queries' sufficient statistics:
   *
-  *  - loudness moments: n, exact Σs², peak |s|, near-full-scale count
-  *    (the [[BinaryAudio.decodeClips]] kernel),
+  *  - loudness moments: n, exact Σs², peak |s|, near-full-scale count,
   *  - window moments: Σs, min/max 32-sample-window Σs², below-mean
-  *    window count (the [[BinaryAudio.decodeWindows]] kernel),
+  *    window count,
   *
   * eleven integers per clip, exact by construction, so the `_stored`
   * query twins reuse the inline operators' aggregation tails verbatim
@@ -26,11 +27,6 @@ import graft.multimodal.{AudioCodec, BinaryAudio}
 object AudioStats {
 
   val DefaultBuckets = 32
-
-  /** One clip's persisted sufficient statistics (both kernels). */
-  case class AudioStatRow(clip_id: Long, dataset_id: Long,
-    sample_rate: Int, n: Int, sum_sq: Long, peak: Int, n_clipped: Int,
-    sum_s: Long, wmin: Long, wmax: Long, n_quiet: Int)
 
   private val built = scala.collection.concurrent.TrieMap.empty[String, Unit]
 
@@ -47,71 +43,22 @@ object AudioStats {
   }
 
   /** The one decode pass: each clip's WAV payload round-trips the
-    * REAL codec exactly once and emits BOTH kernels' integer moments
-    * — where the inline pair decodes the corpus twice (once per
-    * query), this pays one decode, ever, per clip.
+    * REAL codec exactly once ([[BinaryAudio.withAudioPayload]] spreads
+    * the rows) — where the inline pair decodes the corpus twice (once
+    * per query), this pays one decode, ever, per clip.
     */
   def decodeOnce(spark: SparkSession, dir: String): DataFrame =
     decodeClipsFull(spark, BinaryAudio.withAudioPayload(spark, dir))
 
-  /** The fused decode kernel over any (clip_id, payload) set — one
-    * codec pass computing the loudness AND window moments the two
-    * inline kernels compute separately (identical arithmetic: the
-    * same integer folds over the same decoded samples).
+  /** The store's row over any (clip_id, payload) set: the dataset key
+    * next to [[BinaryAudio.clipStats]]' fields, the same kernel the
+    * inline queries call. The caller spreads the rows.
     */
   private[graft] def decodeClipsFull(spark: SparkSession,
-      clips: DataFrame): DataFrame = {
-    import spark.implicits._
-    clips.select("clip_id", "payload")
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val (rate, s) = AudioCodec.decodePcm16(payload)
-          // loudness moments (the decodeClips fold)
-          var sumSq = 0L; var peak = 0; var clipped = 0
-          var i = 0
-          while (i < s.length) {
-            val v = s(i).toInt
-            val a = math.abs(v)
-            sumSq += v.toLong * v
-            if (a > peak) peak = a
-            if (a >= 32700) clipped += 1
-            i += 1
-          }
-          // window moments (the decodeWindows fold)
-          val nw = s.length / 32
-          val w = new Array[Long](nw)
-          var sumS = 0L
-          var j = 0
-          while (j < nw) {
-            var ssq = 0L
-            var k = 0
-            while (k < 32) {
-              val v = s(j * 32 + k).toInt
-              ssq += v.toLong * v
-              sumS += v
-              k += 1
-            }
-            w(j) = ssq
-            j += 1
-          }
-          val tot = w.sum
-          var quiet = 0
-          var wmin = Long.MaxValue
-          var wmax = Long.MinValue
-          j = 0
-          while (j < nw) {
-            if (w(j) * nw < tot) quiet += 1
-            if (w(j) < wmin) wmin = w(j)
-            if (w(j) > wmax) wmax = w(j)
-            j += 1
-          }
-          AudioStatRow(id, id / 10, rate, s.length, sumSq, peak,
-            clipped, sumS, wmin, wmax, quiet)
-        }
-      }
-      .toDF()
-  }
+      clips: DataFrame): DataFrame =
+    BinaryFrames.decodeWith(clips.select(col("clip_id"),
+      expr("clip_id div 10").as("dataset_id"), col("payload")),
+      BinaryAudio.clipStats)
 
   def write(spark: SparkSession, dir: String, table: String,
       nBuckets: Int = DefaultBuckets): Unit =
@@ -125,7 +72,7 @@ object AudioStats {
     */
   def append(spark: SparkSession, table: String, newClips: DataFrame,
       nBuckets: Int = DefaultBuckets): Unit =
-    decodeClipsFull(spark, newClips)
+    decodeClipsFull(spark, Spread.rows(newClips))
       .write.bucketBy(nBuckets, "dataset_id").sortBy("dataset_id")
       .mode("append").saveAsTable(table)
 
@@ -174,13 +121,10 @@ object AudioStats {
     * rows, same oracle, no decode.
     */
   def waveformStatsStored(spark: SparkSession, dir: String): DataFrame =
-    BinaryAudio.waveformStatsTail(spark, dir, statsFor(spark, dir)
-      .select("clip_id", "sample_rate", "n", "sum_sq", "peak",
-        "n_clipped"))
+    BinaryAudio.waveformStatsTail(spark, dir, statsFor(spark, dir))
 
   /** The `aud_activity_windows_stored` twin. */
   def activityWindowsStored(spark: SparkSession,
       dir: String): DataFrame =
-    BinaryAudio.activityWindowsTail(spark, dir, statsFor(spark, dir)
-      .select("clip_id", "sum_s", "wmin", "wmax", "n_quiet"))
+    BinaryAudio.activityWindowsTail(spark, dir, statsFor(spark, dir))
 }

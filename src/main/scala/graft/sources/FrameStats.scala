@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.imaging.ImagingModel
-import graft.multimodal.{BinaryFrames, ImageCodec}
+import graft.multimodal.BinaryFrames
+import graft.ops.Spread
 
 /** Persisted decode-once frame statistics — the [[DocumentStore]] /
   * [[VectorIndex]] build/read discipline applied to the imaging-QC
@@ -12,16 +13,16 @@ import graft.multimodal.{BinaryFrames, ImageCodec}
   * exposure histogram, clipping, z-profile, crosstalk, scene cuts)
   * each re-decoded the WHOLE frame corpus per run — at 100 TB the
   * decode is the dominant cost and it was paid eight times for the
-  * same bytes. Here ONE typed mapPartitions pass decodes every
-  * frame's gray AND RGB payloads (real PNG round trips — the same
-  * payload bytes the inline operators decode, via the shared
-  * [[BinaryFrames.rgbSamplesOf]] transform) and persists the
-  * sufficient statistics every QC operator needs:
+  * same bytes. Here ONE pass decodes every frame's gray AND RGB
+  * payloads (real PNG round trips of the same payload bytes the
+  * inline operators decode, through the same kernels,
+  * [[BinaryFrames.grayStats]] and [[BinaryFrames.rgbStats]]) and
+  * persists the sufficient statistics every QC operator needs:
   *
   *  - grid indices (channel/slice/time/pos) for the series queries,
   *  - exact integer gray moments (n, Σpx, Σpx², max),
   *  - the 16-bin intensity histogram (bin width = 1/16 of the frame's
-  *    own depth range, the [[BinaryFrames.decodeHist16]] rule),
+  *    own depth range),
   *  - exact per-channel RGB sums/maxima and cross-moments.
   *
   * The table is bucketed by the long dataset key, so every per-dataset
@@ -33,16 +34,6 @@ import graft.multimodal.{BinaryFrames, ImageCodec}
 object FrameStats {
 
   val DefaultBuckets = 32
-
-  /** One frame's persisted sufficient statistics (gray + RGB). */
-  case class FrameStatRow(frame_id: Long, dataset_id: Long,
-    channel_idx: Int, slice_idx: Int, time_idx: Int, pos_idx: Int,
-    n_px: Int, sum_px: Long, sum_sq: Long, max_px: Int,
-    bins: Array[Long],
-    sum_r: Long, sum_g: Long, sum_b: Long,
-    max_r: Int, max_g: Int, max_b: Int,
-    sum_rr: Long, sum_gg: Long, sum_bb: Long,
-    sum_rg: Long, sum_gb: Long, sum_rb: Long)
 
   /** Build-once guard, session-scoped like [[DocumentStore]]'s: a
     * stale table from a previous JVM must be rebuilt, never trusted.
@@ -61,73 +52,34 @@ object FrameStats {
     table
   }
 
-  /** The one decode pass: every frame's gray and RGB payloads encoded
-    * from the planted sha bytes (generation) and decoded back through
-    * the REAL PNG codec (the work this table amortizes), emitting the
-    * per-frame sufficient statistics. Same row-spreading repartition
-    * rationale as [[BinaryFrames.withPayload]]: metadata rows are
-    * byte-small, the codec work is not.
-    */
+  /** The one decode pass over the whole frames fact. */
   def decodeOnce(spark: SparkSession, dir: String): DataFrame =
-    decodeFrames(spark, ImagingModel.frames(spark, dir)
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    decodeFrames(spark, ImagingModel.frames(spark, dir))
 
-  /** The decode kernel over any frame-row set (`id`, grid indices,
-    * `sha256`) — shared by the batch build above and the streaming
-    * decode-on-arrival path ([[graft.streaming.ImgStream.landStats]]),
-    * so "one decode per frame, ever" has exactly one implementation.
+  /** The store's row over any frame-row set (`id`, grid indices,
+    * `sha256`) — shared by the batch build, [[append]] and the
+    * streaming decode-on-arrival path
+    * ([[graft.streaming.ImgStream.landStats]]), so "one decode per
+    * frame, ever" has exactly one implementation: each frame's gray
+    * and RGB payloads are encoded from the planted sha bytes
+    * (generation) and decoded back through the REAL PNG codec (the
+    * work this table amortizes), after one [[Spread.rows]].
     */
   def decodeFrames(spark: SparkSession, frames: DataFrame): DataFrame = {
-    import spark.implicits._
-    frames
-      .select(col("id"), col("channel_idx"), col("slice_idx"),
-        col("time_idx"), col("pos_idx"), col("sha256"))
-      .as[(Long, Int, Int, Int, Int, String)]
-      .mapPartitions { rows =>
-        // codec/session init would happen once per partition here
-        rows.map { case (id, c, z, t, p, sha) =>
-          val b = ImageCodec.hexBytes(sha)
-          // gray round trip + moments + 16-bin histogram
-          val d = ImageCodec.decodeImage(
-            ImageCodec.encodeGray8(b ++ b, 8, 8))
-          val px = d.samples
-          val shift = d.bitDepth - 4
-          val bins = new Array[Long](16)
-          var sum = 0L; var sumSq = 0L; var max = 0
-          var i = 0
-          while (i < px.length) {
-            sum += px(i)
-            sumSq += px(i).toLong * px(i)
-            if (px(i) > max) max = px(i)
-            bins(px(i) >> shift) += 1L
-            i += 1
-          }
-          // RGB round trip + per-channel sums/maxima + cross-moments
-          val (_, _, s) = ImageCodec.decodeRgb(
-            ImageCodec.encodeRgb8(BinaryFrames.rgbSamplesOf(sha), 8, 8))
-          val sums = new Array[Long](3)
-          val maxs = new Array[Int](3)
-          var rr, gg, bb, rg, gb, rb = 0L
-          i = 0
-          while (i < s.length) {
-            val ch = i % 3
-            sums(ch) += s(i)
-            if (s(i) > maxs(ch)) maxs(ch) = s(i)
-            if (ch == 2) {
-              val r = s(i - 2).toLong; val g = s(i - 1).toLong
-              val bl = s(i).toLong
-              rr += r * r; gg += g * g; bb += bl * bl
-              rg += r * g; gb += g * bl; rb += r * bl
-            }
-            i += 1
-          }
-          FrameStatRow(id, id / 10, c, z, t, p,
-            px.length, sum, sumSq, max, bins,
-            sums(0), sums(1), sums(2), maxs(0), maxs(1), maxs(2),
-            rr, gg, bb, rg, gb, rb)
-        }
-      }
-      .toDF()
+    val sha = col("sha256")
+    Spread.rows(frames)
+      .select(col("id").as("frame_id"), expr("id div 10").as("dataset_id"),
+        col("channel_idx"), col("slice_idx"), col("time_idx"),
+        col("pos_idx"),
+        BinaryFrames.grayStats(BinaryFrames.encodePng(sha)).as("g"),
+        BinaryFrames.rgbStats(BinaryFrames.encodeRgbPng(sha)).as("rgb"))
+      .select(Seq("frame_id", "dataset_id", "channel_idx", "slice_idx",
+          "time_idx", "pos_idx").map(col) ++
+        Seq("n_px", "sum_px", "sum_sq", "max_px", "bins")
+          .map(f => col(s"g.$f")) ++
+        Seq("sum_r", "sum_g", "sum_b", "max_r", "max_g", "max_b",
+          "sum_rr", "sum_gg", "sum_bb", "sum_rg", "sum_gb", "sum_rb")
+          .map(f => col(s"rgb.$f")): _*)
   }
 
   def write(spark: SparkSession, dir: String, table: String,
@@ -149,8 +101,7 @@ object FrameStats {
     */
   def append(spark: SparkSession, table: String, newFrames: DataFrame,
       nBuckets: Int = DefaultBuckets): Unit =
-    decodeFrames(spark, newFrames.repartition(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    decodeFrames(spark, newFrames)
       .write.bucketBy(nBuckets, "dataset_id").sortBy("dataset_id")
       .mode("append").saveAsTable(table)
 
@@ -227,20 +178,16 @@ object FrameStats {
     BinaryFrames.channelCrosstalkTail(spark, dir, statsFor(spark, dir))
 
   def keyframesStored(spark: SparkSession, dir: String): DataFrame =
-    BinaryFrames.keyframesTail(spark, dir, statsFor(spark, dir)
-      .select(col("frame_id"), col("dataset_id"),
-        col("channel_idx").as("c"), col("slice_idx").as("z"),
-        col("time_idx").as("t"), col("pos_idx").as("p"),
-        col("n_px"), col("sum_px"), col("sum_sq")))
+    BinaryFrames.keyframesTail(spark, dir, gridStats(spark, dir))
 
   def sceneCutsStored(spark: SparkSession, dir: String): DataFrame =
-    BinaryFrames.sceneCutsTail(spark, dir, statsFor(spark, dir)
-      .select(col("frame_id"), col("dataset_id"),
-        col("channel_idx").as("c"), col("slice_idx").as("z"),
-        col("time_idx").as("t"), col("pos_idx").as("p"),
-        // n_px is 64 (a power of two), so the mean is EXACT in double
-        // — bit-identical to the inline decode's sum/length
-        (col("sum_px").cast("double") / col("n_px")).as("mean_px")))
+    BinaryFrames.sceneCutsTail(spark, dir, gridStats(spark, dir))
+
+  /** The stored rows under the series tails' (c, z, t, p) names. */
+  private def gridStats(spark: SparkSession, dir: String): DataFrame =
+    statsFor(spark, dir)
+      .withColumnsRenamed(Map("channel_idx" -> "c", "slice_idx" -> "z",
+        "time_idx" -> "t", "pos_idx" -> "p"))
 
   /** The per-dataset composite QC report — the one-table acquisition
     * summary a facility reads per dataset, and the clearest payoff of

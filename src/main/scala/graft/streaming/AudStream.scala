@@ -4,14 +4,16 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.ops.Spread
 import graft.sources.AudioStats
 
 /** Streaming audio ingest — decode-once ON ARRIVAL for clips, the
   * rung [[ImgStream.ingestStats]] gave frames and the audio modality
   * was missing (VERDICT r13 missing #3): micro-batches of
-  * (clip_id, payload) rows pay their ONE fused WAV decode as they
-  * land, persisting both QC kernels' eleven exact integer moments
-  * ([[AudioStats.decodeClipsFull]]), so every later `aud_*_stored`
+  * (clip_id, payload) rows pay their ONE WAV decode as they land,
+  * persisting the eleven exact integer moments of
+  * [[graft.multimodal.BinaryAudio.clipStats]] in the
+  * [[AudioStats]] schema, so every later `aud_*_stored`
   * read is decode-free from day one instead of waiting for a
   * full-corpus [[AudioStats.write]] build.
   *
@@ -28,17 +30,13 @@ import graft.sources.AudioStats
 object AudStream {
 
   /** Land one micro-batch of (clip_id, payload) rows as persisted
-    * fused moments (also the batch-mode/backfill entry). The
-    * row-spreading repartition is the [[AudioStats.decodeOnce]]
-    * rationale: clip rows are byte-small, the codec work is not — a
-    * micro-batch arriving as one source file must not decode on one
-    * thread.
+    * moments (also the batch-mode/backfill entry). The rows spread
+    * first ([[Spread.rows]]): a micro-batch arriving as one source file
+    * must not decode on one thread.
     */
   def landStats(spark: SparkSession, batch: DataFrame,
       statsStore: String, batchId: Long): Unit =
-    AudioStats.decodeClipsFull(spark,
-        batch.repartition(
-          spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    AudioStats.decodeClipsFull(spark, Spread.rows(batch))
       .write.mode(SaveMode.Overwrite)
       .parquet(s"$statsStore/batches/batch=$batchId")
 
@@ -69,9 +67,7 @@ object AudStream {
   def waveformStatsStreamed(spark: SparkSession, dir: String,
       statsStore: String): DataFrame =
     graft.multimodal.BinaryAudio.waveformStatsTail(spark, dir,
-      readStats(spark, statsStore)
-        .select("clip_id", "sample_rate", "n", "sum_sq", "peak",
-          "n_clipped"))
+      readStats(spark, statsStore))
 
   /** Fold the streamed batch dirs into the canonical dataset-bucketed
     * [[AudioStats]] table layout — after this, per-dataset roll-ups

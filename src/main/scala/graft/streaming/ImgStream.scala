@@ -122,16 +122,13 @@ object ImgStream {
     * one instead of waiting for a full-corpus build. Idempotency is
     * the same batch-scoped-overwrite discipline as [[landBatch]]: a
     * foreachBatch replay overwrites `batches/batch=<id>` with
-    * identical content — no registry, no settlement.
+    * identical content — no registry, no settlement. The decode
+    * spreads the rows first, so a micro-batch arriving as one source
+    * file does not decode on one thread.
     */
   def landStats(spark: SparkSession, batch: DataFrame,
       statsStore: String, batchId: Long): Unit =
-    graft.sources.FrameStats.decodeFrames(spark,
-      // row-spreading repartition, the decodeOnce rationale: frame
-      // rows are byte-small but the codec work is not — a micro-batch
-      // arriving as one source file must not decode on one thread
-      batch.repartition(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    graft.sources.FrameStats.decodeFrames(spark, batch)
       .write.mode(SaveMode.Overwrite)
       .parquet(s"$statsStore/batches/batch=$batchId")
 

@@ -59,11 +59,12 @@ class AudStreamSpec extends AnyFunSuite {
 
     // the streamed store serves the stored waveform tail decode-free
     val served = AudStream.waveformStatsStreamed(spark, sfDir, store)
-    assert(served.collect().toSeq
-      === BinaryAudio.waveformStats(spark, sfDir).collect().toSeq,
+    val inline = BinaryAudio.waveformStats(spark, sfDir)
+    assert(served.collect().toSeq === inline.collect().toSeq,
       "streamed stored twin drifted from the inline decode")
-    assert(!served.queryExecution.executedPlan.toString
-      .contains("SerializeFromObject"), "streamed twin still decodes")
+    assert(DecodeKernels.names(inline) === Set("clipStats"),
+      "inline plan lost its kernel")
+    assert(DecodeKernels.calls(served).isEmpty, "streamed twin still decodes")
   }
 
   test("compactStats folds the batch dirs into the canonical bucket " +

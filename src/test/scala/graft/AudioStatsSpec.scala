@@ -7,8 +7,8 @@ import graft.multimodal.BinaryAudio
 import graft.sources.AudioStats
 
 /** The decode-once AudioStats table: both audio QCs must read
-  * persisted per-clip integer moments (one WAV decode pass, fused
-  * kernels) with results identical to the inline decode operators,
+  * persisted per-clip integer moments (one WAV decode pass through the
+  * shared kernel) with results identical to the inline decode operators,
   * appends must stay O(batch), and per-dataset reads must ride the
   * bucket layout.
   */
@@ -43,11 +43,13 @@ class AudioStatsSpec extends AnyFunSuite {
           BinaryAudio.activityWindows(spark, sfDir)))) {
       assert(stored.collect().toSeq === inline.collect().toSeq,
         s"$name stored twin drifted from the inline decode")
-      // the stored plan must be decode-free: the typed mapPartitions
-      // kernel's signature (object serialization) never appears
-      val plan = stored.queryExecution.executedPlan.toString
-      assert(!plan.contains("SerializeFromObject"),
-        s"$name stored twin still decodes:\n$plan")
+      // the stored plan must be decode-free: the kernel the inline
+      // plan calls (positive control) never appears in it
+      assert(DecodeKernels.names(inline) === Set("clipStats"),
+        s"$name inline plan lost its kernel")
+      assert(DecodeKernels.calls(stored).isEmpty,
+        s"$name stored twin still decodes:\n" +
+          stored.queryExecution.optimizedPlan)
     }
   }
 

@@ -53,19 +53,48 @@ class FrameStatsSpec extends AnyFunSuite {
   }
 
   test("stored twins equal their inline decode operators") {
+    import graft.multimodal.BinaryFrames
     for ((name, stored, inline) <- Seq(
         ("payload_stats",
           FrameStats.payloadStatsStored(spark, sfDir),
-          graft.multimodal.BinaryFrames.payloadStats(spark, sfDir)),
+          BinaryFrames.payloadStats(spark, sfDir)),
+        ("drift",
+          FrameStats.intensityDriftStored(spark, sfDir),
+          BinaryFrames.intensityDrift(spark, sfDir)),
+        ("focus",
+          FrameStats.focusRankStored(spark, sfDir),
+          BinaryFrames.focusRank(spark, sfDir)),
+        ("crosstalk",
+          FrameStats.channelCrosstalkStored(spark, sfDir),
+          BinaryFrames.channelCrosstalk(spark, sfDir)),
+        ("rgb",
+          FrameStats.payloadStatsRgbStored(spark, sfDir),
+          BinaryFrames.payloadStatsRgb(spark, sfDir)),
+        ("histogram",
+          FrameStats.pixelHistogramStored(spark, sfDir),
+          BinaryFrames.pixelHistogram(spark, sfDir)),
         ("saturation",
           FrameStats.saturationQcStored(spark, sfDir),
-          graft.multimodal.BinaryFrames.saturationQc(spark, sfDir)),
+          BinaryFrames.saturationQc(spark, sfDir)),
+        ("z_profile",
+          FrameStats.zProfileStored(spark, sfDir),
+          BinaryFrames.zProfile(spark, sfDir)),
         ("scene_cuts",
           FrameStats.sceneCutsStored(spark, sfDir),
-          graft.multimodal.BinaryFrames.sceneCuts(spark, sfDir)))) {
+          BinaryFrames.sceneCuts(spark, sfDir)),
+        ("keyframes",
+          FrameStats.keyframesStored(spark, sfDir),
+          BinaryFrames.keyframes(spark, sfDir)))) {
       assert(stored.columns.toSeq === inline.columns.toSeq, name)
       assert(stored.collect().toSeq === inline.collect().toSeq,
         s"$name stored != inline")
+      // the stored twin is decode-free; its inline operator (positive
+      // control) calls a kernel
+      assert(DecodeKernels.calls(inline).nonEmpty,
+        s"$name inline plan lost its kernel")
+      assert(DecodeKernels.calls(stored).isEmpty,
+        s"$name stored twin still decodes:\n" +
+          stored.queryExecution.optimizedPlan)
     }
   }
 
@@ -177,6 +206,12 @@ class FrameStatsSpec extends AnyFunSuite {
     val drift = graft.streaming.ImgStream.statsDrift(TestSpark.spark, dir)
     assert(drift.filter(col("batch") === 0 && col("flag_drift").isNotNull)
       .count() === 0)
+    // the oracle-checked face reads the landed stats, never a payload
+    val driftFor = graft.streaming.ImgStream.statsDriftFor(TestSpark.spark,
+      sfDir)
+    assert(DecodeKernels.calls(driftFor).isEmpty,
+      "img_stats_drift still decodes:\n" +
+        driftFor.queryExecution.optimizedPlan)
   }
 
   test("streaming decode-once stats ingest matches the batch build, " +
@@ -228,6 +263,7 @@ class FrameStatsSpec extends AnyFunSuite {
   test("dataset QC summary: five metrics off one zero-exchange read, " +
       "all within their mathematical bounds") {
     val qc = FrameStats.datasetQcSummary(spark, sfDir)
+    assert(DecodeKernels.calls(qc).isEmpty, "QC summary still decodes")
     // the stored aggregate must ride the dataset_id bucket layout —
     // the whole point of composing five metrics over one read: no
     // hash exchange anywhere (broadcast/range exchanges excepted)

@@ -673,20 +673,21 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("decodeHist16 bins a uint16 frame by its own depth range") {
+  test("grayStats bins a uint16 frame by its own depth range") {
     import spark.implicits._
     import graft.multimodal.ImageCodec
     // planted 16-bit values spanning the range: bin = v >> 12
     val px16 = Array(0, 4095, 4096, 40000, 65535, 65535)
     val payload = ImageCodec.encodeGray16(px16, 3, 2)
     val framed = Seq((1L, payload)).toDF("frame_id", "payload")
-    val h = BinaryFrames.decodeHist16(spark, framed).collect()(0)
-    assert(h.n_px === 6)
-    assert(h.bins.sum === 6)
-    assert(h.bins(0) === 2)   // 0 and 4095
-    assert(h.bins(1) === 1)   // 4096
-    assert(h.bins(40000 >> 12) === 1)
-    assert(h.bins(15) === 2)  // the two saturated samples
+    val (nPx, bins) = BinaryFrames.decodeWith(framed, BinaryFrames.grayStats)
+      .select("n_px", "bins").as[(Int, Array[Long])].collect()(0)
+    assert(nPx === 6)
+    assert(bins.sum === 6)
+    assert(bins(0) === 2)   // 0 and 4095
+    assert(bins(1) === 1)   // 4096
+    assert(bins(40000 >> 12) === 1)
+    assert(bins(15) === 2)  // the two saturated samples
   }
 
   test("saturation QC agrees with the histogram's edge bins") {
@@ -774,7 +775,8 @@ class StreamingSpec extends AnyFunSuite {
     // the stats decode path consumes the generated payloads end to end
     val clips = graft.multimodal.BinaryAudio
       .withAudioPayload(spark, sfDir)
-    val feats = graft.multimodal.BinaryAudio.decodeClips(spark, clips)
+    val feats = BinaryFrames.decodeWith(clips,
+      graft.multimodal.BinaryAudio.clipStats)
     assert(feats.count() === clips.count())
     assert(feats.filter(col("n") =!= 256 || col("sample_rate") =!= 16000)
       .count() === 0)
