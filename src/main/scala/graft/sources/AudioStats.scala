@@ -28,18 +28,10 @@ object AudioStats {
 
   val DefaultBuckets = 32
 
-  private val built = scala.collection.concurrent.TrieMap.empty[String, Unit]
-
+  /** Build once per JVM ([[DocumentStore.buildOnce]]). */
   def ensureBuilt(spark: SparkSession, dir: String): String = {
     val table = DocumentStore.tableName("graft_audiostats", dir)
-    built.synchronized {
-      if (!built.contains(table)) {
-        DocumentStore.clearStale(spark, table)
-        write(spark, dir, table)
-        built.put(table, ())
-      }
-    }
-    table
+    DocumentStore.buildOnce(spark, table)(write(spark, dir, table))
   }
 
   /** The one decode pass: each clip's WAV payload round-trips the

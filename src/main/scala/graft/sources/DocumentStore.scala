@@ -22,15 +22,14 @@ object DocumentStore {
 
   val DefaultBuckets = 32
 
-  /** Tables this JVM has (re)built — the build-once guard behind
-    * [[dupGroupsFor]]. Session-scoped on purpose: a stale table from a
-    * previous JVM (the in-memory catalog forgets it, the warehouse
-    * directory survives) must be rebuilt, never trusted.
-    */
-  private val built = scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  private[sources] def tableName(prefix: String, dir: String): String =
+  private[graft] def tableName(prefix: String, dir: String): String =
     prefix + "_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** Where a managed table named `table` lives in the warehouse. */
+  private[graft] def warehouseDir(spark: SparkSession,
+      table: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
 
   /** Drop any catalog entry AND any leftover warehouse directory for
     * `table` — saveAsTable refuses a non-empty managed location it has
@@ -38,10 +37,35 @@ object DocumentStore {
     */
   private[graft] def clearStale(spark: SparkSession, table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val p = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
+    val p = warehouseDir(spark, table)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
+  }
+
+  /** Stores this JVM has (re)built — the build-once guard behind every
+    * store's `ensureBuilt*`. Session-scoped on purpose: a stale store
+    * from a previous JVM (the in-memory catalog forgets it, the
+    * warehouse directory survives) must be rebuilt, never trusted.
+    */
+  private val built = scala.collection.mutable.Set.empty[String]
+
+  /** Build `table` once per JVM: the first call clears `table` and its
+    * `companions` ([[clearStale]]) and runs `build`; later calls only
+    * return `table`. Synchronized, not a concurrent map's
+    * getOrElseUpdate: that may evaluate its thunk more than once under
+    * concurrency, and a doubled clear+build corrupts the build it
+    * guards.
+    */
+  private[graft] def buildOnce(spark: SparkSession, table: String,
+      companions: String*)(build: => Unit): String = {
+    built.synchronized {
+      if (!built.contains(table)) {
+        (table +: companions).foreach(clearStale(spark, _))
+        build
+        built += table
+      }
+    }
+    table
   }
 
   /** Build the bucketed store for `dir`'s planted-dup corpus once per
@@ -50,17 +74,8 @@ object DocumentStore {
     */
   def ensureBuilt(spark: SparkSession, dir: String): String = {
     val table = tableName("graft_docstore", dir)
-    // synchronized, not getOrElseUpdate: TrieMap may evaluate the
-    // update thunk more than once under concurrency, and a doubled
-    // clearStale+saveAsTable corrupts the build it guards
-    built.synchronized {
-      if (!built.contains(table)) {
-        clearStale(spark, table)
-        write(graft.ops.DedupOps.corpus(spark, dir), table)
-        built.put(table, ())
-      }
-    }
-    table
+    buildOnce(spark, table)(
+      write(graft.ops.DedupOps.corpus(spark, dir), table))
   }
 
   /** The driver-checked twin of `doc_exact_dedup` over the persisted
@@ -149,11 +164,9 @@ object DocumentStore {
     * a crash-replayed micro-batch re-appends its files to the doc
     * store while the registry-guarded census counts it once. This
     * pass compares per-bucket row counts (store vs census `sum(n)`)
-    * and rewrites ONLY the buckets that disagree — the
-    * [[TrainingExport.deleteDocs]] retire-aside-then-swap pattern at
-    * bucket-file granularity: disagreeing buckets' files are renamed
-    * aside, the full-row-distinct rewrite moves in, and only then is
-    * the retired copy dropped. Untouched buckets' part files are
+    * and rewrites ONLY the buckets that disagree: their part files
+    * swap for the full-row-distinct rewrite through
+    * [[rewriteAffectedBuckets]]. Untouched buckets' part files are
     * never opened for write (the spec proves their listings survive
     * byte-identical), so the pass is O(disagreeing buckets), not
     * O(corpus).
@@ -208,18 +221,15 @@ object DocumentStore {
     VacuumStats(affected.toSeq, before - after)
   }
 
-  /** The bucket-granular retire-aside-then-swap core every surgical
-    * pass here shares ([[vacuumKeyed]]'s settlement, the takedown
-    * family's [[deleteByIdKeyed]]): replace the contents of exactly
-    * `affected` buckets of a bucketed-by-`keyCol` table with
-    * `replacement` (the new rows for those buckets ONLY — a staged
-    * part file landing outside them fails loudly), touching no other
-    * bucket's files. Staging writes first, live files rename ASIDE
-    * (never delete-before-replace), staged files move in, and only
-    * then is the retired copy dropped — at no instant is an affected
-    * bucket's data absent from disk, and an interrupted pass leaves
-    * the retired copy recoverable. Returns (rows before, rows after)
-    * over the affected buckets.
+  /** The bucket-granular rewrite every surgical pass here shares
+    * ([[vacuumKeyed]]'s settlement, the takedown family's
+    * [[deleteByIdKeyed]]): replace the contents of exactly `affected`
+    * buckets of a bucketed-by-`keyCol` table with `replacement` (the
+    * new rows for those buckets ONLY — a staged part file landing
+    * outside them fails loudly), swapping those buckets' part files
+    * through [[PartitionSwap.swapTable]] and touching no other
+    * bucket's files. Returns (rows before, rows after) over the
+    * affected buckets.
     */
   private[graft] def rewriteAffectedBuckets(spark: SparkSession,
       table: String, keyCol: String, affected: Seq[Int],
@@ -227,49 +237,27 @@ object DocumentStore {
       nBuckets: Int = DefaultBuckets): (Long, Long) = {
     val affectedSet = affected.toSet
     val bucketOf = pmod(hash(col(keyCol)), lit(nBuckets))
-    val staging = table + "_vacuum_staging"
-    clearStale(spark, staging)
-    replacement
-      .repartition(nBuckets, col(keyCol))
-      .write.bucketBy(nBuckets, keyCol).sortBy(keyCol)
-      .mode("overwrite").saveAsTable(staging)
     val affectedRows = spark.table(table)
       .filter(bucketOf.isin(affected: _*)).count()
-    val stagedRows = spark.table(staging).count()
-
-    val conf = spark.sparkContext.hadoopConfiguration
-    // physical locations from the catalog — a db-qualified table may
-    // live under a custom database LOCATION, not warehouse/name
-    val storeDir = tableDir(spark, table)
-    val stagingDir = tableDir(spark, staging)
-    val retireDir = new org.apache.hadoop.fs.Path(
-      storeDir.getParent, storeDir.getName + "_vacuum_retired")
-    val fs = storeDir.getFileSystem(conf)
-    fs.mkdirs(retireDir)
     // the bucket id a bucketed writer stamps into its part-file name
     val bucketRe = "_(\\d{5})\\.".r
     def bucketIdOf(name: String): Option[Int] =
       bucketRe.findFirstMatchIn(name).map(_.group(1).toInt)
-    val staged = fs.listStatus(stagingDir)
-      .filter(_.getPath.getName.startsWith("part-"))
-    for (st <- staged; b <- bucketIdOf(st.getPath.getName))
-      require(affectedSet.contains(b),
-        s"staged file ${st.getPath.getName} outside affected buckets " +
-          s"$affectedSet — bucket expr / layout mismatch")
-    // retire aside, swap in, then drop — never delete-before-replace
-    for (st <- fs.listStatus(storeDir)
-         if st.getPath.getName.startsWith("part-")
-         if bucketIdOf(st.getPath.getName).exists(affectedSet.contains))
-      require(fs.rename(st.getPath,
-        new org.apache.hadoop.fs.Path(retireDir, st.getPath.getName)),
-        s"bucket retire failed: ${st.getPath}")
-    for (st <- staged)
-      require(fs.rename(st.getPath,
-        new org.apache.hadoop.fs.Path(storeDir, st.getPath.getName)),
-        s"bucket swap failed: ${st.getPath}")
-    clearStale(spark, staging)
-    fs.delete(retireDir, true)
-    spark.sql(s"REFRESH TABLE $table")
+    val stagedRows = PartitionSwap.swapTable(spark, table, "vacuum",
+        bucketIdOf(_).exists(affectedSet)) { staging =>
+      replacement
+        .repartition(nBuckets, col(keyCol))
+        .write.bucketBy(nBuckets, keyCol).sortBy(keyCol)
+        .mode("overwrite").saveAsTable(staging)
+      val stagingDir = tableDir(spark, staging)
+      val fs = stagingDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      for (st <- fs.listStatus(stagingDir);
+           b <- bucketIdOf(st.getPath.getName))
+        require(affectedSet.contains(b),
+          s"staged file ${st.getPath.getName} outside affected buckets " +
+            s"$affectedSet — bucket expr / layout mismatch")
+      spark.table(staging).count()
+    }
     (affectedRows, stagedRows)
   }
 
@@ -367,10 +355,8 @@ object DocumentStore {
     * bucket (`repartition(n, key)` is the same Murmur3-pmod hash as
     * `bucketBy`, so each task holds exactly one bucket and writes
     * exactly one file — layout and in-bucket sort order preserved,
-    * zero-exchange reads survive), then swaps at file granularity in
-    * the [[vacuumKeyed]] retire-aside-then-move order: at no instant
-    * is the table's data absent from disk, and an interrupted pass
-    * leaves the retired copy recoverable.
+    * zero-exchange reads survive), then swaps every part file through
+    * [[PartitionSwap.swapTable]].
     */
   private[graft] def compactBucketed(spark: SparkSession, table: String,
       keyCol: String, nBuckets: Int = DefaultBuckets): Unit = {
@@ -388,8 +374,6 @@ object DocumentStore {
         && s.numBuckets == nBuckets),
       s"compactBucketed($table, $keyCol, $nBuckets) must match the " +
         s"table's declared bucket/sort spec, got $spec")
-    val staging = table + "_compact_staging"
-    clearStale(spark, staging)
     val n0 = spark.table(table).count()
     // read the table's files RAW (schema pinned from the catalog):
     // a bucketed-table scan reports HashPartitioning(key, n), so
@@ -399,35 +383,15 @@ object DocumentStore {
     // partitioning, so the one-task-per-bucket exchange survives.
     val raw = spark.read.schema(spark.table(table).schema)
       .parquet(tableDir(spark, table).toString)
-    raw
-      .repartition(nBuckets, col(keyCol))
-      .write.bucketBy(nBuckets, keyCol).sortBy(keyCol)
-      .mode("overwrite").saveAsTable(staging)
-    val n1 = spark.table(staging).count()
-    require(n0 == n1,
-      s"compaction must preserve rows in $table: $n0 -> $n1")
-    val conf = spark.sparkContext.hadoopConfiguration
-    // resolve physical locations from the catalog — a table may live
-    // in a database with a custom LOCATION, not under warehouse/name
-    val storeDir = tableDir(spark, table)
-    val stagingDir = tableDir(spark, staging)
-    val retireDir = new org.apache.hadoop.fs.Path(
-      storeDir.getParent, storeDir.getName + "_compact_retired")
-    val fs = storeDir.getFileSystem(conf)
-    fs.mkdirs(retireDir)
-    for (st <- fs.listStatus(storeDir)
-         if st.getPath.getName.startsWith("part-"))
-      require(fs.rename(st.getPath,
-        new org.apache.hadoop.fs.Path(retireDir, st.getPath.getName)),
-        s"compact retire failed: ${st.getPath}")
-    for (st <- fs.listStatus(stagingDir)
-         if st.getPath.getName.startsWith("part-"))
-      require(fs.rename(st.getPath,
-        new org.apache.hadoop.fs.Path(storeDir, st.getPath.getName)),
-        s"compact swap failed: ${st.getPath}")
-    clearStale(spark, staging)
-    fs.delete(retireDir, true)
-    spark.sql(s"REFRESH TABLE $table")
+    PartitionSwap.swapTable(spark, table, "compact", _ => true) { staging =>
+      raw
+        .repartition(nBuckets, col(keyCol))
+        .write.bucketBy(nBuckets, keyCol).sortBy(keyCol)
+        .mode("overwrite").saveAsTable(staging)
+      val n1 = spark.table(staging).count()
+      require(n0 == n1,
+        s"compaction must preserve rows in $table: $n0 -> $n1")
+    }
   }
 
   /** Incremental census update: stored census ⟗ batch census on the

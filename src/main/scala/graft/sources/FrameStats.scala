@@ -35,21 +35,10 @@ object FrameStats {
 
   val DefaultBuckets = 32
 
-  /** Build-once guard, session-scoped like [[DocumentStore]]'s: a
-    * stale table from a previous JVM must be rebuilt, never trusted.
-    */
-  private val built = scala.collection.concurrent.TrieMap.empty[String, Unit]
-
+  /** Build once per JVM ([[DocumentStore.buildOnce]]). */
   def ensureBuilt(spark: SparkSession, dir: String): String = {
     val table = DocumentStore.tableName("graft_framestats", dir)
-    built.synchronized {
-      if (!built.contains(table)) {
-        DocumentStore.clearStale(spark, table)
-        write(spark, dir, table)
-        built.put(table, ())
-      }
-    }
-    table
+    DocumentStore.buildOnce(spark, table)(write(spark, dir, table))
   }
 
   /** The one decode pass over the whole frames fact. */

@@ -51,11 +51,10 @@ object ImagingStore {
     *  2. rewrite: survivors of ONLY the affected partitions anti-join
     *     the victim ids and stage under `store + "_delete_staging"`
     *     in the same partition layout and [[compact]] sort order;
-    *  3. swap: [[PartitionSwap.swap]]'s retire-aside-then-move — at
-    *     no instant is a partition's data absent from disk, an
-    *     interrupted pass recovers via the sweep that runs first,
-    *     and untouched projects' files are never opened (the spec
-    *     asserts their listings survive byte-identical).
+    *  3. swap: [[PartitionSwap.swap]], after the
+    *     [[PartitionSwap.recover]] sweep; untouched projects' files
+    *     are never opened (the spec asserts their listings survive
+    *     byte-identical).
     *
     * Idempotent: re-running with the same ids finds no victim rows
     * and is a no-op. Returns frame rows removed. Blob bytes are a

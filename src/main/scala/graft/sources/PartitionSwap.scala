@@ -1,61 +1,74 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Retire-aside-then-swap for DIRECTORY-partitioned parquet roots —
-  * the [[TrainingExport.deleteDocs]] shard-swap discipline factored
-  * out for arbitrary partition paths (`project=P`,
-  * `batch=3/project=P`), so the imaging-side takedown family
-  * ([[ImagingStore.deleteDatasets]],
-  * [[graft.streaming.ImgStream.deleteDatasets]]) shares one
-  * crash-safety argument with the text-side stores instead of
-  * re-deriving it per layout:
+/** Retire-aside-then-swap: the one way every persisted store replaces
+  * part of its data in place — takedowns, vacuum settlement and
+  * small-file compaction alike. An ENTRY is the store's unit of
+  * replacement: a partition directory (`shard=N`, `cell=N`,
+  * `project=P`, `batch=3/shard=N`) or a bucket part file.
   *
-  *  - the caller stages the affected partitions' SURVIVORS under
-  *    `staging/<relpath>` (same partition directory names the live
-  *    root uses), then calls [[swap]];
-  *  - each live partition renames ASIDE under `staging/retired/
-  *    <relpath>` (never delete-before-replace), the staged survivors
-  *    move in, and only then is the staging root dropped — at no
-  *    instant is a partition's data absent from disk;
-  *  - a partition emptied by the delete simply has no staged
-  *    directory: the retired copy is not replaced and the partition
-  *    vanishes from the root (the [[TrainingExport]] emptied-shard
-  *    case);
-  *  - an interrupted pass leaves the retired copy recoverable:
-  *    [[recover]] restores any retired partition whose live directory
-  *    is missing (the crash happened between the two renames, so the
-  *    retired copy is that partition's ONLY copy) and then clears the
-  *    staging root — run it before every pass, exactly like
-  *    [[TrainingExport.recoverStaging]].
+  *  - the caller stages the replacement entries first, under the
+  *    same names the live root uses;
+  *  - each selected live entry renames ASIDE into a retired root
+  *    (never delete-before-replace), then each staged entry moves in,
+  *    and only then are the staging and retired copies dropped — at
+  *    no instant is an entry's data absent from disk;
+  *  - a live entry with no staged twin (a partition the delete
+  *    emptied) is retired and not replaced, so it simply vanishes;
+  *  - entries whose name starts with `_` or `.` never move: commit
+  *    markers, checksums and store markers such as
+  *    [[TermIndexStore]]'s `_graft_m` stay where they are;
+  *  - an interrupted pass leaves the retired copy on disk. A retired
+  *    root that already holds files when a swap starts fails the swap
+  *    loudly instead of being dropped at its end (it may hold the
+  *    only copy of some rows). Path-based stores run [[recover]]
+  *    before every pass, which restores such copies first.
+  *
+  * Every rename reports failure as false — a silent false would
+  * either drop an entry or leave victims live, so each step requires.
   */
 private[graft] object PartitionSwap {
 
   private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Swap exactly `partDirs` (root-relative partition paths) from
-    * `staging` into `root`, retiring the live copies aside first.
-    * Every rename reports failure as false — a silent false would
-    * either drop a partition or leave victims live, so each step
-    * requires.
+  /** The movable entries directly under `dir`. */
+  private def entries(fs: FileSystem, dir: Path): Seq[String] =
+    fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
+
+  /** The core: retire `retire` (root-relative) from `live` into
+    * `retired`, move `moveIn` from `staged` into `live`, drop the
+    * retired copies. Missing entries on either side are skipped.
+    */
+  private def swapEntries(fs: FileSystem, live: Path, staged: Path,
+      retired: Path, retire: Seq[String], moveIn: Seq[String]): Unit = {
+    require(!(fs.exists(retired) && fs.listFiles(retired, true).hasNext),
+      s"$retired holds a retired copy left by an interrupted swap — " +
+        "it may be the only copy of those rows; restore or remove it " +
+        "before the next pass")
+    for (e <- retire; src = new Path(live, e) if fs.exists(src)) {
+      val aside = new Path(retired, e)
+      fs.mkdirs(aside.getParent)
+      require(fs.rename(src, aside), s"retire failed: $src")
+    }
+    for (e <- moveIn; src = new Path(staged, e) if fs.exists(src))
+      require(fs.rename(src, new Path(live, e)), s"swap failed: $src")
+    fs.delete(retired, true)
+  }
+
+  /** Swap exactly `partDirs` (root-relative partition paths) from the
+    * `staging` root into `root`; retired copies go under
+    * `staging/retired`, where [[recover]] finds them.
     */
   def swap(spark: SparkSession, root: String, staging: String,
       partDirs: Seq[String]): Unit = {
     val rootP = new Path(root)
     val fs = fsOf(spark, rootP)
-    val retired = new Path(staging, "retired")
-    for (d <- partDirs) {
-      val live = new Path(rootP, d)
-      val staged = new Path(staging, d)
-      val aside = new Path(retired, d)
-      fs.mkdirs(aside.getParent)
-      if (fs.exists(live))
-        require(fs.rename(live, aside), s"partition retire failed: $live")
-      if (fs.exists(staged))
-        require(fs.rename(staged, live), s"partition swap failed: $staged")
-    }
+    swapEntries(fs, rootP, new Path(staging), new Path(staging, "retired"),
+      partDirs, partDirs)
     fs.delete(new Path(staging), true)
     // the session-level FileStatusCache still holds the PRE-swap
     // listing for this root — a later read would chase retired part
@@ -96,5 +109,31 @@ private[graft] object PartitionSwap {
     }
     fs.delete(stagingP, true)
     spark.catalog.refreshByPath(root)
+  }
+
+  /** [[swapEntries]] for a catalog table: `stage` writes the
+    * replacement into the (cleared) staging table `<table>_<op>_staging`
+    * and runs the caller's checks; then the live entries `retire`
+    * selects rename aside into the sibling directory
+    * `<table dir>_<op>_retired`, every staged entry moves in, the
+    * staging table drops and the table refreshes. Returns what
+    * `stage` returned.
+    */
+  def swapTable[T](spark: SparkSession, table: String, op: String,
+      retire: String => Boolean)(stage: String => T): T = {
+    val staging = s"${table}_${op}_staging"
+    DocumentStore.clearStale(spark, staging)
+    val out = stage(staging)
+    // physical locations from the catalog — a db-qualified table may
+    // live under a custom database LOCATION, not warehouse/name
+    val storeDir = DocumentStore.tableDir(spark, table)
+    val stagingDir = DocumentStore.tableDir(spark, staging)
+    val fs = fsOf(spark, storeDir)
+    swapEntries(fs, storeDir, stagingDir,
+      new Path(storeDir.getParent, s"${storeDir.getName}_${op}_retired"),
+      entries(fs, storeDir).filter(retire), entries(fs, stagingDir))
+    DocumentStore.clearStale(spark, staging)
+    spark.sql(s"REFRESH TABLE $table")
+    out
   }
 }

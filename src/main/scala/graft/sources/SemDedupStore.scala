@@ -83,40 +83,19 @@ object SemDedupStore {
     * per-batch but cannot bound across batches). The settle pass
     * rewrites the store with one writer task per cell (same
     * `repartition(cell)` + `partitionBy(cell)` layout, so partition
-    * pruning survives), then swaps at cell-directory granularity in
-    * the retire-aside-then-move order — at no instant is a cell's
-    * data absent from disk.
+    * pruning survives), then swaps every `cell=` directory through
+    * [[PartitionSwap.swapTable]].
     */
   def compact(spark: SparkSession, table: String): Unit = {
-    val staging = table + "_compact_staging"
-    graft.sources.DocumentStore.clearStale(spark, staging)
     val n0 = spark.table(table).count()
-    spark.table(table)
-      .repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").saveAsTable(staging)
-    val n1 = spark.table(staging).count()
-    require(n0 == n1,
-      s"compaction must preserve rows in $table: $n0 -> $n1")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val storeDir = graft.sources.DocumentStore.tableDir(spark, table)
-    val stagingDir = graft.sources.DocumentStore.tableDir(spark, staging)
-    val retireDir = new org.apache.hadoop.fs.Path(
-      storeDir.getParent, storeDir.getName + "_compact_retired")
-    val fs = storeDir.getFileSystem(conf)
-    fs.mkdirs(retireDir)
-    for (st <- fs.listStatus(storeDir)
-         if st.getPath.getName.startsWith("cell="))
-      require(fs.rename(st.getPath,
-        new org.apache.hadoop.fs.Path(retireDir, st.getPath.getName)),
-        s"compact retire failed: ${st.getPath}")
-    for (st <- fs.listStatus(stagingDir)
-         if st.getPath.getName.startsWith("cell="))
-      require(fs.rename(st.getPath,
-        new org.apache.hadoop.fs.Path(storeDir, st.getPath.getName)),
-        s"compact swap failed: ${st.getPath}")
-    graft.sources.DocumentStore.clearStale(spark, staging)
-    fs.delete(retireDir, true)
-    spark.sql(s"REFRESH TABLE $table")
+    PartitionSwap.swapTable(spark, table, "compact", _ => true) { staging =>
+      spark.table(table)
+        .repartition(col("cell"))
+        .write.partitionBy("cell").mode("overwrite").saveAsTable(staging)
+      val n1 = spark.table(staging).count()
+      require(n0 == n1,
+        s"compaction must preserve rows in $table: $n0 -> $n1")
+    }
   }
 
   /** What a takedown pass did: cells rewritten, rows removed. */
@@ -129,13 +108,11 @@ object SemDedupStore {
     * (vec_id, cell) projection — cell is the partition column, so the
     * scan reads ONE skinny data column — and only those `cell=N`
     * directories are read (partition-pruned), anti-joined and
-    * rewritten, in the [[graft.sources.TrainingExport.deleteDocs]]
-    * retire-aside-then-swap order: the live directory renames ASIDE,
-    * the staged survivors move in, and only then is the retired copy
-    * dropped. A cell emptied by the delete stages nothing and its
-    * directory simply disappears — the pruned reads never ask for it
-    * again. The affected-cell collect is bounded by the victims'
-    * distinct primary cells (≤ min(|victims|, k)).
+    * swapped in through [[PartitionSwap.swapTable]]. A cell emptied by
+    * the delete stages nothing and its directory simply disappears —
+    * the pruned reads never ask for it again. The affected-cell
+    * collect is bounded by the victims' distinct primary cells
+    * (≤ min(|victims|, k)).
     *
     * Semantics match the from-scratch contract: the store holds
     * accepted survivors, survivors are mutually over-tau-free, so the
@@ -151,37 +128,17 @@ object SemDedupStore {
       .select("cell").distinct()
       .collect().map(_.getLong(0)).sorted
     if (cells.isEmpty) return DeleteStats(Nil, 0L)
-    val staging = table + "_delete_staging"
-    graft.sources.DocumentStore.clearStale(spark, staging)
-    val before = read(spark, table)
-      .filter(col("cell").isin(cells.toIndexedSeq: _*)).count()
-    read(spark, table)
+    val hit = read(spark, table)
       .filter(col("cell").isin(cells.toIndexedSeq: _*))
-      .join(victims, Seq("vec_id"), "left_anti")
-      .repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").saveAsTable(staging)
-    val after = spark.table(staging).count()
-    val conf = spark.sparkContext.hadoopConfiguration
-    val storeDir = graft.sources.DocumentStore.tableDir(spark, table)
-    val stagingDir = graft.sources.DocumentStore.tableDir(spark, staging)
-    val retireDir = new org.apache.hadoop.fs.Path(
-      storeDir.getParent, storeDir.getName + "_delete_retired")
-    val fs = storeDir.getFileSystem(conf)
-    fs.mkdirs(retireDir)
-    for (c <- cells) {
-      val live = new org.apache.hadoop.fs.Path(storeDir, s"cell=$c")
-      val staged = new org.apache.hadoop.fs.Path(stagingDir, s"cell=$c")
-      if (fs.exists(live))
-        require(fs.rename(live,
-          new org.apache.hadoop.fs.Path(retireDir, s"cell=$c")),
-          s"cell retire failed: $live")
-      // an emptied cell has no staged directory — it is simply gone
-      if (fs.exists(staged))
-        require(fs.rename(staged, live), s"cell swap failed: $staged")
+    val before = hit.count()
+    val cellDirs = cells.map(c => s"cell=$c").toSet
+    val after = PartitionSwap.swapTable(spark, table, "delete",
+        cellDirs) { staging =>
+      hit.join(victims, Seq("vec_id"), "left_anti")
+        .repartition(col("cell"))
+        .write.partitionBy("cell").mode("overwrite").saveAsTable(staging)
+      spark.table(staging).count()
     }
-    graft.sources.DocumentStore.clearStale(spark, staging)
-    fs.delete(retireDir, true)
-    spark.sql(s"REFRESH TABLE $table")
     DeleteStats(cells.toSeq, before - after)
   }
 
@@ -228,7 +185,7 @@ object SemDedupStore {
     // consumer (measured 3x the drain cost at 30x otherwise)
     val replays = probed.filter(col("prank") === 0)
       .join(stored.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      .select("vec_id")
+      .select("vec_id").distinct()
       .localCheckpoint(false)
     // stored-first: a newcomer within tau of ANY stored vector in its
     // probed cells drops, whatever the ids say (its own replayed row,
@@ -254,10 +211,10 @@ object SemDedupStore {
       .localCheckpoint(false)
     // r15 (guide §1.2, fewer sequential actions): one flag-join
     // aggregate instead of five ~20 ms count jobs of per-batch driver
-    // latency. vec_ids are unique by contract (prim / replays /
-    // vsStore / inBatch are all distinct id sets ⊆ prim), so the five
-    // numbers are identical by construction: per-row counts equal the
-    // old frame counts, appended = rows with no flag = the anti-join.
+    // latency. The flag frames (replays / vsStore / inBatch) are
+    // distinct id sets, so each left join keeps prim's rows one to
+    // one: a batch that repeats a vec_id counts it per row, never
+    // fanned out, and appended = rows with no flag = the anti-join.
     val statsRow = prim.select("vec_id")
       .join(replays.withColumn("r", lit(1)), Seq("vec_id"), "left")
       .join(vsStore.withColumn("v", lit(1)), Seq("vec_id"), "left")

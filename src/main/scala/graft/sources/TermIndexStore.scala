@@ -214,12 +214,11 @@ object TermIndexStore {
   def dfCensus(spark: SparkSession, table: String): DataFrame =
     postings(spark, table).groupBy("tok").agg(count(lit(1)).as("df"))
 
-  def clear(spark: SparkSession, table: String): Unit = {
-    DocumentStore.clearStale(spark, table)
-    DocumentStore.clearStale(spark, doclenTable(table))
-    DocumentStore.clearStale(spark, cappedTable(table))
-    DocumentStore.clearStale(spark, boundsTable(table))
-  }
+  private def companions(table: String): Seq[String] =
+    Seq(doclenTable(table), cappedTable(table), boundsTable(table))
+
+  def clear(spark: SparkSession, table: String): Unit =
+    (table +: companions(table)).foreach(DocumentStore.clearStale(spark, _))
 
   /** Takedown across all three layouts — the right-to-be-forgotten
     * pass for the retrieval index. Order is serve-stops-first:
@@ -422,21 +421,13 @@ object TermIndexStore {
     graft.ops.TextOps.bm25SearchText(capped, df_, dl, queryText, k)
   }
 
-  /** Build-once guard, session-scoped like [[FrameStats]]'s: a stale
-    * table from a previous JVM is rebuilt, never trusted.
+  /** Build once per JVM ([[DocumentStore.buildOnce]]), all four
+    * layouts cleared first.
     */
-  private val built = scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   def ensureBuilt(spark: SparkSession, dir: String): String = {
     val table = DocumentStore.tableName("graft_termidx", dir)
-    built.synchronized {
-      if (!built.contains(table)) {
-        clear(spark, table)
-        build(spark, dir, table)
-        built.put(table, ())
-      }
-    }
-    table
+    DocumentStore.buildOnce(spark, table, companions(table): _*)(
+      build(spark, dir, table))
   }
 
   /** The `doc_bm25_topk_stored` query twin: identical results (and

@@ -169,18 +169,11 @@ object TrainingExport {
     * full-corpus rewrite. The rewrite re-sorts the survivors, so
     * affected shards keep the packing stream order.
     *
-    * Swap order is crash-safe-by-staging: a shard's live directory is
-    * renamed ASIDE (never deleted first), the staged survivors move
-    * in, and only then is the old copy dropped — at no instant is a
-    * shard's data absent from disk, and an interrupted pass leaves
-    * the old copy recoverable under the staging root. A later pass
-    * RECOVERS that state before touching the staging root again
-    * ([[recoverStaging]]): any `retired_shard=N` whose live directory
-    * is missing is restored to the export (the interrupted swap never
-    * completed, so the retired copy is the shard's only copy), and
-    * only then is the root cleared — the old defect where the next
-    * pass's Overwrite silently destroyed the sole remaining copy is
-    * spec-pinned closed (TrainingExportSpec).
+    * The affected shards swap through [[PartitionSwap]] (staging
+    * root `<out>_delete_staging`), and [[PartitionSwap.recover]] runs
+    * first: a shard stranded under `retired/shard=N` by an
+    * interrupted pass is restored before the next pass overwrites the
+    * staging root (TrainingExportSpec pins it).
     *
     * The affected-shard collect is bounded by nShards (a layout
     * constant), never by corpus or victim count.
@@ -188,60 +181,21 @@ object TrainingExport {
   def deleteDocs(spark: SparkSession, out: String, ids: DataFrame,
       nShards: Int = 64): Unit = {
     val n = layoutShards(spark, out, nShards)
-    recoverStaging(spark, out)
+    val staging = out + "_delete_staging"
+    PartitionSwap.recover(spark, out, staging)
     val victims = ids.select(col("doc_id"))
       .withColumn("shard", TextOps.shardCol(n))
     val affected = victims.select("shard").distinct()
       .collect().map(_.getLong(0)).sorted
     if (affected.isEmpty) return
-    val tmp = out + "_delete_staging"
     resharded(spark.read.parquet(out)
         .filter(col("shard").isin(affected: _*))
         .join(victims.select("doc_id"), Seq("doc_id"), "left_anti"),
         affected.length)
       .write.mode(SaveMode.Overwrite)
-      .partitionBy("shard").parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(conf)
-    for (s <- affected) {
-      val live = new org.apache.hadoop.fs.Path(out, s"shard=$s")
-      val staged = new org.apache.hadoop.fs.Path(tmp, s"shard=$s")
-      val retired = new org.apache.hadoop.fs.Path(tmp, s"retired_shard=$s")
-      // rename reports failure as false — a silent false would either
-      // drop a shard or leave victims live, so every step requires
-      if (fs.exists(live))
-        require(fs.rename(live, retired), s"retire failed: $live")
-      // a shard emptied by the delete has no staged directory — the
-      // retired copy is simply not replaced
-      if (fs.exists(staged))
-        require(fs.rename(staged, live), s"shard swap failed: $staged")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-  }
-
-  /** Recovery sweep for an interrupted [[deleteDocs]] pass. A crash
-    * between rename(live→retired) and rename(staged→live) leaves a
-    * shard's ONLY copy under the staging root as `retired_shard=N`;
-    * each such copy whose live directory is absent is renamed back
-    * into the export (pre-pass state — a re-run of the delete then
-    * re-removes its victims). Retired copies whose live directory
-    * exists were already superseded by a completed swap and are
-    * dropped with the rest of the root. Idempotent; no-op when no
-    * staging root exists.
-    */
-  def recoverStaging(spark: SparkSession, out: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = new org.apache.hadoop.fs.Path(out + "_delete_staging")
-    val fs = tmp.getFileSystem(conf)
-    if (!fs.exists(tmp)) return
-    for (st <- fs.listStatus(tmp)
-         if st.getPath.getName.startsWith("retired_shard=")) {
-      val shard = st.getPath.getName.stripPrefix("retired_")
-      val live = new org.apache.hadoop.fs.Path(out, shard)
-      if (!fs.exists(live))
-        require(fs.rename(st.getPath, live), s"recover failed: $live")
-    }
-    fs.delete(tmp, true)
+      .partitionBy("shard").parquet(staging)
+    PartitionSwap.swap(spark, out, staging,
+      affected.toIndexedSeq.map(s => s"shard=$s"))
   }
 
   /** Post-write manifest: per-shard row counts straight off the

@@ -176,24 +176,10 @@ object VectorIndex {
     VectorOps.searchIndexOf(seeds, read(spark, table))
   }
 
-  /** Per-JVM build-once guard — same contract as
-    * [[DocumentStore.ensureBuilt]] (stale warehouse leftovers from a
-    * previous JVM are cleared and rebuilt, never trusted).
-    */
-  private val built = scala.collection.concurrent.TrieMap.empty[String, Unit]
-
+  /** Build once per JVM ([[DocumentStore.buildOnce]]). */
   def ensureBuilt(spark: SparkSession, dir: String): String = {
     val table = DocumentStore.tableName("graft_vecindex", dir)
-    // synchronized for the same reason as DocumentStore.ensureBuilt:
-    // TrieMap's update thunk may run twice under concurrency
-    built.synchronized {
-      if (!built.contains(table)) {
-        DocumentStore.clearStale(spark, table)
-        build(spark, dir, table)
-        built.put(table, ())
-      }
-    }
-    table
+    DocumentStore.buildOnce(spark, table)(build(spark, dir, table))
   }
 
   /** The driver-checked twin of `emb_knn_ivfpq` over the persisted
@@ -221,15 +207,8 @@ object VectorIndex {
     */
   def ensureBuiltRotated(spark: SparkSession, dir: String): String = {
     val table = DocumentStore.tableName("graft_vecindex_opq", dir)
-    built.synchronized {
-      if (!built.contains(table)) {
-        DocumentStore.clearStale(spark, table)
-        DocumentStore.clearStale(spark, planTable(table))
-        buildRotated(spark, dir, table)
-        built.put(table, ())
-      }
-    }
-    table
+    DocumentStore.buildOnce(spark, table, planTable(table))(
+      buildRotated(spark, dir, table))
   }
 
   /** The driver-checked twin `emb_knn_opq_indexed`: IVF+PQ search

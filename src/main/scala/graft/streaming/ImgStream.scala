@@ -233,30 +233,28 @@ object ImgStream {
       .orderBy("dataset_id", "batch")
   }
 
-  /** Build-once guard for the deterministic streamed stats store the
-    * oracle-checked `img_stats_drift` entry reads: frames split into
-    * `nBatches` arrival waves by `id % nBatches`, each landed through
-    * [[landStats]] (so every frame pays its decode exactly once, on
-    * arrival — the real ingest path, not a test shortcut). Session
-    * -scoped like [[graft.sources.FrameStats.ensureBuilt]].
+  /** The deterministic streamed stats store the oracle-checked
+    * `img_stats_drift` entry reads, built once per JVM
+    * ([[graft.sources.DocumentStore.buildOnce]]) under the warehouse
+    * directory: frames split into `nBatches` arrival waves by
+    * `id % nBatches`, each landed through [[landStats]] (so every
+    * frame pays its decode exactly once, on arrival — the real ingest
+    * path, not a test shortcut). Returns the store's path.
     */
-  private val driftStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def ensureStreamedStats(spark: SparkSession, dir: String,
-      nBatches: Int = 3): String =
-    driftStores.synchronized {
-      driftStores.getOrElseUpdate(s"$dir|$nBatches", {
-        val store = java.nio.file.Files
-          .createTempDirectory("graft_imgdrift").toString + "/stats"
-        val frames = graft.imaging.ImagingModel.frames(spark, dir)
-        (0 until nBatches).foreach { b =>
-          landStats(spark, frames.filter(col("id") % nBatches === b),
-            store, b.toLong)
-        }
-        store
-      })
+      nBatches: Int = 3): String = {
+    import graft.sources.DocumentStore
+    val name = DocumentStore.tableName(s"graft_imgdrift$nBatches", dir)
+    val store = DocumentStore.warehouseDir(spark, name).toString
+    DocumentStore.buildOnce(spark, name) {
+      val frames = graft.imaging.ImagingModel.frames(spark, dir)
+      (0 until nBatches).foreach { b =>
+        landStats(spark, frames.filter(col("id") % nBatches === b),
+          store, b.toLong)
+      }
     }
+    store
+  }
 
   /** [[statsDrift]] over the session's deterministic streamed store —
     * the `SparkEntry.queries` / DuckDB-oracle face of the drift

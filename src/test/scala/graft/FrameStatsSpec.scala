@@ -214,6 +214,16 @@ class FrameStatsSpec extends AnyFunSuite {
         driftFor.queryExecution.optimizedPlan)
   }
 
+  test("the streamed drift store lives under the warehouse, not in a " +
+      "fresh temp directory per JVM") {
+    // under the warehouse the next JVM's build clears it; a temp
+    // directory per JVM was never deleted
+    def local(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+    val dir = graft.streaming.ImgStream.ensureStreamedStats(spark, sfDir)
+    assert(local(dir).startsWith(
+      local(spark.conf.get("spark.sql.warehouse.dir")) + "/"), dir)
+  }
+
   test("streaming decode-once stats ingest matches the batch build, " +
       "replays idempotently, and compacts into the bucket layout") {
     val src = java.nio.file.Files.createTempDirectory("graft_fssrc").toString

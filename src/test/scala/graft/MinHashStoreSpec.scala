@@ -279,4 +279,37 @@ class MinHashStoreSpec extends AnyFunSuite {
       spark.sql("DROP DATABASE IF EXISTS graft_mh4")
     }
   }
+
+  test("compaction fails loudly on a retired copy an interrupted swap " +
+      "left behind, and keeps it") {
+    val tmp = java.nio.file.Files
+      .createTempDirectory("graft_mhstore5").toString
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_mh5 LOCATION '$tmp'")
+    val t = "graft_mh5.store"
+    try {
+      MinHashStore.build(spark, sfDir, t)
+      // a crash between the retire and move loops strands the retired
+      // part files: the table alone no longer holds those rows
+      val dir = graft.sources.DocumentStore.tableDir(spark, t)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val live = fs.listStatus(dir)
+        .filter(_.getPath.getName.startsWith("part-")).head.getPath
+      val retired = new org.apache.hadoop.fs.Path(dir.getParent,
+        dir.getName + "_compact_retired")
+      val stranded = new org.apache.hadoop.fs.Path(retired, live.getName)
+      fs.mkdirs(retired)
+      assert(fs.rename(live, stranded))
+      spark.sql(s"REFRESH TABLE $t")
+      val err = intercept[IllegalArgumentException](
+        MinHashStore.compact(spark, t))
+      assert(err.getMessage.contains(retired.getName), err.getMessage)
+      assert(fs.exists(stranded),
+        "the stranded retired copy must survive the refused pass")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"DROP TABLE IF EXISTS ${t}_bands")
+      spark.sql(s"DROP TABLE IF EXISTS ${t}_compact_staging")
+      spark.sql("DROP DATABASE IF EXISTS graft_mh5")
+    }
+  }
 }

@@ -192,4 +192,26 @@ class SemDedupStoreSpec extends AnyFunSuite {
       spark.sql("DROP DATABASE IF EXISTS graft_sd4")
     }
   }
+
+  test("ingest stats count a repeated replayed vec_id once per row, " +
+      "never fanned out") {
+    val tmp = java.nio.file.Files
+      .createTempDirectory("graft_sdstore5").toString
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_sd5 LOCATION '$tmp'")
+    val t = "graft_sd5.store"
+    try {
+      SemDedupStore.build(spark, sfDir, t)
+      // one stored vector delivered twice in one batch: both rows are
+      // replays of the stored row
+      val twice = graft.tables.Tables.embeddings(spark, sfDir)
+        .filter(col("vec_id") === 7L).select("vec_id", "embedding")
+      val s = SemDedupStore.ingest(spark, twice.unionByName(twice), t,
+        sfDir)
+      assert(s.nBatch === 2 && s.nReplayed === 2 && s.nAppended === 0,
+        s"$s")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql("DROP DATABASE IF EXISTS graft_sd5")
+    }
+  }
 }

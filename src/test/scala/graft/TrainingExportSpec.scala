@@ -227,12 +227,12 @@ class TrainingExportSpec extends AnyFunSuite {
     // aside and the pass died before the staged swap — the retired
     // copy under the staging root is the shard's ONLY copy
     val staging = java.nio.file.Paths.get(out + "_delete_staging")
-    Files.createDirectories(staging)
+    Files.createDirectories(staging.resolve("retired"))
     val live = java.nio.file.Paths.get(out, "shard=11")
     val shard11Rows = spark.read.parquet(out)
       .filter(col("shard") === 11).count()
     assert(shard11Rows > 0)
-    Files.move(live, staging.resolve("retired_shard=11"))
+    Files.move(live, staging.resolve("retired/shard=11"))
     assert(spark.read.parquet(out).count() === total - shard11Rows)
     // the next pass must restore shard 11 before touching the staging
     // root (the old Overwrite wiped the retired copy — rows vanished)
