@@ -346,6 +346,40 @@ object DocumentStore {
       spark.sessionState.catalog.getTableMetadata(ident).location)
   }
 
+  /** Record a store's layout integer as the marker file `dir/name`
+    * (TermIndexStore's impact cap, TrainingExport's shard modulus).
+    * Marker names start with `_`: [[PartitionSwap]] never moves them
+    * and Spark's readers skip them.
+    */
+  private[graft] def writeIntMarker(spark: SparkSession,
+      dir: org.apache.hadoop.fs.Path, name: String, value: Int): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir, name)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val os = fs.create(p, true)
+    try os.write(value.toString.getBytes("UTF-8")) finally os.close()
+  }
+
+  /** The layout integer recorded at `dir/name`, None without a marker.
+    * The marker is read to EOF (a single `read` may legally return "6"
+    * of "64"), and a marker that is not an int fails loudly, naming
+    * the marker: a default in its place would silently serve the
+    * wrong layout.
+    */
+  private[graft] def readIntMarker(spark: SparkSession,
+      dir: org.apache.hadoop.fs.Path, name: String): Option[Int] = {
+    val p = new org.apache.hadoop.fs.Path(dir, name)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val text = try new String(in.readAllBytes(), "UTF-8").trim
+        finally in.close()
+      Some(text.toIntOption.getOrElse(throw new IllegalStateException(
+        s"corrupt layout marker $p: '$text' is not an int — the layout " +
+          "it records is unknowable; restore the marker or rebuild")))
+    }
+  }
+
   /** Whole-table small-file compaction for a bucketed-by-`keyCol`
     * store: every ingest batch appends one-plus part files per bucket,
     * so a long-running stream degrades every later read through

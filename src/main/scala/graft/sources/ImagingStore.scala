@@ -36,60 +36,31 @@ object ImagingStore {
   def readProject(spark: SparkSession, store: String, project: String): DataFrame =
     spark.read.parquet(store).filter(col("project") === project)
 
+  /** The in-partition row order of every frame layout: per-dataset
+    * reads touch few row groups and min/max column stats stay tight.
+    */
+  private[graft] val FrameOrder = Seq("frames_global_id", "channel_idx",
+    "slice_idx", "time_idx", "pos_idx")
+
   /** Dataset takedown for the project-partitioned frame store — the
     * right-to-be-forgotten pass on the reference's own unit of
     * ownership (db_operations.py:145-166 `get_datasets`): a
     * compliance delete names DATASETS, and a dataset lives inside
     * exactly one project partition, so the pass is
-    * O(affected projects), never O(store):
+    * O(affected projects), never O(store). It runs through
+    * [[PartitionSwap.takedown]] with `project` as the partition
+    * column and [[FrameOrder]] as the sort order; the locate scan
+    * reads only (frames_global_id, project).
     *
-    *  1. locate: one column-pruned scan of (frames_global_id,
-    *     project) — two skinny columns, the payload-bearing frame
-    *     columns are never read — semi-joined with the victim ids;
-    *     the distinct-project collect is bounded by |projects|, a
-    *     facility-roster constant;
-    *  2. rewrite: survivors of ONLY the affected partitions anti-join
-    *     the victim ids and stage under `store + "_delete_staging"`
-    *     in the same partition layout and [[compact]] sort order;
-    *  3. swap: [[PartitionSwap.swap]], after the
-    *     [[PartitionSwap.recover]] sweep; untouched projects' files
-    *     are never opened (the spec asserts their listings survive
-    *     byte-identical).
-    *
-    * Idempotent: re-running with the same ids finds no victim rows
-    * and is a no-op. Returns frame rows removed. Blob bytes are a
+    * Idempotent. Returns frame rows removed. Blob bytes are a
     * separate store — [[FrameStorageApi.deleteManifest]] /
     * [[FrameStorageApi.deleteDatasetBlobs]] take the same victims to
     * the stored PNGs themselves.
     */
   def deleteDatasets(spark: SparkSession, store: String,
-      ids: DataFrame): Long = {
-    val staging = store + "_delete_staging"
-    PartitionSwap.recover(spark, store, staging)
-    val victims = ids.select(col("dataset_id").as("frames_global_id"))
-    val affected = spark.read.parquet(store)
-      .select("frames_global_id", "project")
-      .join(victims, Seq("frames_global_id"), "left_semi")
-      .select("project").distinct()
-      .collect().map(_.getString(0)).sorted
-    if (affected.isEmpty) return 0L
-    val hit = spark.read.parquet(store)
-      .filter(col("project").isin(affected.toIndexedSeq: _*))
-    val before = hit.count()
-    val survivors = hit
-      .join(victims, Seq("frames_global_id"), "left_anti")
-    val after = survivors.count()
-    survivors
-      .repartition(col("project"))
-      .sortWithinPartitions("project", "frames_global_id", "channel_idx",
-        "slice_idx", "time_idx", "pos_idx")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("project")
-      .parquet(staging)
-    PartitionSwap.swap(spark, store, staging,
-      affected.toIndexedSeq.map(p => s"project=$p"))
-    before - after
-  }
+      ids: DataFrame): Long =
+    PartitionSwap.takedown(spark, store, Seq("project"), "frames_global_id",
+      ids.select(col("dataset_id").as("frames_global_id")), FrameOrder)
 
   /** Compact a store in place-ish: rewrite each project partition into
     * ~`targetRows`-row files, sorted by (dataset, channel, slice, time,
@@ -112,8 +83,7 @@ object ImagingStore {
     // sizes splits by actual density, so a hot project gets more files
     // and each output file covers one project's contiguous datasets
     df.repartitionByRange(files, col("project"), col("frames_global_id"))
-      .sortWithinPartitions("project", "frames_global_id", "channel_idx",
-        "slice_idx", "time_idx", "pos_idx")
+      .sortWithinPartitions(("project" +: FrameOrder).map(col): _*)
       .write.mode(SaveMode.Overwrite)
       .partitionBy("project")
       .parquet(out)

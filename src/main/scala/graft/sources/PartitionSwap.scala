@@ -1,7 +1,9 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Retire-aside-then-swap: the one way every persisted store replaces
   * part of its data in place — takedowns, vacuum settlement and
@@ -25,6 +27,9 @@ import org.apache.spark.sql.SparkSession
   *    loudly instead of being dropped at its end (it may hold the
   *    only copy of some rows). Path-based stores run [[recover]]
   *    before every pass, which restores such copies first.
+  *
+  * Row takedowns over a path-partitioned root go through
+  * [[takedown]]; catalog tables through [[swapTable]].
   *
   * Every rename reports failure as false — a silent false would
   * either drop an entry or leave victims live, so each step requires.
@@ -109,6 +114,68 @@ private[graft] object PartitionSwap {
     }
     fs.delete(stagingP, true)
     spark.catalog.refreshByPath(root)
+  }
+
+  /** Row takedown for a path-partitioned parquet root: remove every
+    * row whose `key` is among `victims`' `key` column, rewriting only
+    * the partition directories that hold one. Returns the rows removed.
+    *
+    *  1. [[recover]] restores anything an interrupted pass stranded
+    *     under `<root>_delete_staging`;
+    *  2. locate: one scan pruned to `key` and `partCols` finds the
+    *     distinct partition tuples holding a victim (bounded by the
+    *     layout's partition count);
+    *  3. stage: a read pruned to exactly those partitions counts its
+    *     rows, anti-joins the victims, counts the survivors and writes
+    *     them to `<root>_delete_staging` in the same layout, sorted by
+    *     `partCols ++ sortCols`;
+    *  4. [[swap]] exactly those partition directories.
+    *
+    * Untouched partition directories are never opened. Directory names
+    * are built the way Spark writes them
+    * ([[ExternalCatalogUtils.getPartitionPathString]], so `lab%A` is
+    * `project=lab%25A`), and every located directory must exist before
+    * anything is staged. Idempotent: a re-run finds no victim rows.
+    */
+  def takedown(spark: SparkSession, root: String, partCols: Seq[String],
+      key: String, victims: DataFrame, sortCols: Seq[String]): Long = {
+    val staging = root + "_delete_staging"
+    recover(spark, root, staging)
+    val ids = victims.select(key)
+    val located = spark.read.parquet(root)
+      .select((key +: partCols).map(col): _*)
+      .join(ids, Seq(key), "left_semi")
+      .select(partCols.map(col): _*).distinct()
+      .collect().map(r => partCols.indices.map(r.get))
+    if (located.isEmpty) return 0L
+    val dirs = located.toIndexedSeq.map { vals =>
+      partCols.zip(vals).map { case (c, v) =>
+        ExternalCatalogUtils.getPartitionPathString(c,
+          Option(v).map(String.valueOf).orNull)
+      }.mkString("/")
+    }.sorted
+    val rootP = new Path(root)
+    val fs = fsOf(spark, rootP)
+    for (d <- dirs)
+      require(fs.exists(new Path(rootP, d)),
+        s"located partition $d is missing under $root")
+    // an OR of per-tuple equalities on the raw typed partition
+    // columns: equality on partition columns prunes the listing
+    val hit = spark.read.parquet(root).filter(located.toIndexedSeq
+      .map(vals => partCols.zip(vals)
+        .map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _))
+      .reduce(_ || _))
+    val before = hit.count()
+    val survivors = hit.join(ids, Seq(key), "left_anti")
+    val after = survivors.count()
+    survivors
+      .repartition(partCols.map(col): _*)
+      .sortWithinPartitions((partCols ++ sortCols).map(col): _*)
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy(partCols: _*)
+      .parquet(staging)
+    swap(spark, root, staging, dirs)
+    before - after
   }
 
   /** [[swapEntries]] for a catalog table: `stage` writes the

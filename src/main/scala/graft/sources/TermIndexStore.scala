@@ -60,54 +60,14 @@ object TermIndexStore {
     */
   private val MMarker = "_graft_m"
 
-  private def writeMMarker(spark: SparkSession, table: String,
-      m: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(
-      DocumentStore.tableDir(spark, table), MMarker)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(m.toString.getBytes("UTF-8")) finally os.close()
-  }
-
   /** The impact cap this store's capped companion was materialized
     * at, if recorded (pre-marker stores fall back to the compile-time
-    * default).
+    * default). Read it once per serving decision.
     */
-  def recordedM(spark: SparkSession, table: String): Option[Int] = {
-    if (!spark.catalog.tableExists(table)) return None
-    val p = new org.apache.hadoop.fs.Path(
+  def recordedM(spark: SparkSession, table: String): Option[Int] =
+    if (!spark.catalog.tableExists(table)) None
+    else DocumentStore.readIntMarker(spark,
       DocumentStore.tableDir(spark, table), MMarker)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        // read to EOF, never a single read(): InputStream.read may
-        // legally return a short read (e.g. "2" of "256"), which would
-        // misparse M and silently serve a wrong cap — the marker is
-        // <32 bytes, so loop until the stream is drained
-        val buf = new Array[Byte](32)
-        var off = 0
-        var r = in.read(buf, off, buf.length - off)
-        while (r > 0 && off + r < buf.length) {
-          off += r
-          r = in.read(buf, off, buf.length - off)
-        }
-        if (r > 0) off += r
-        val text = new String(buf, 0, off, "UTF-8").trim
-        // a corrupt marker must fail LOUDLY, not throw a bare
-        // NumberFormatException three frames deep or fall back to a
-        // default that silently diverges from the materialized caps
-        scala.util.Try(text.toInt).toOption match {
-          case some @ Some(_) => some
-          case None => throw new IllegalStateException(
-            s"corrupt $MMarker marker for $table: '$text' is not an " +
-              "int — the capped companion's layout M is unknowable; " +
-              "rebuild the store or restore the marker")
-        }
-      } finally in.close()
-    }
-  }
 
   private def layoutM(spark: SparkSession, table: String): Int =
     recordedM(spark, table).getOrElse(graft.ops.TextOps.Bm25M)
@@ -136,7 +96,8 @@ object TermIndexStore {
       .sortBy("doc_id").mode("overwrite").saveAsTable(doclenTable(table))
     tf.write.bucketBy(DocumentStore.DefaultBuckets, "tok")
       .sortBy("tok").mode("overwrite").saveAsTable(table)
-    writeMMarker(spark, table, m)
+    DocumentStore.writeIntMarker(spark,
+      DocumentStore.tableDir(spark, table), MMarker, m)
     materializeCapped(spark, table, m)
   }
 
@@ -359,12 +320,17 @@ object TermIndexStore {
     * the corpus.
     */
   def search(spark: SparkSession, table: String,
-      cap: Option[Int] = None): DataFrame = {
+      cap: Option[Int] = None): DataFrame =
+    scored(spark, table, cap, cap.flatMap(_ => recordedM(spark, table)))
+
+  /** [[search]] with the store's recorded M already read. */
+  private def scored(spark: SparkSession, table: String, cap: Option[Int],
+      recorded: Option[Int]): DataFrame = {
     val full = postings(spark, table).select("doc_id", "tok", "tf")
     val df_ = dfCensus(spark, table)
     val dl = docLens(spark, table)
     cap match {
-      case Some(m) if recordedM(spark, table).contains(m)
+      case Some(m) if recorded.contains(m)
           && spark.catalog.tableExists(cappedTable(table)) =>
         // serve off the MATERIALIZED impact-capped lists: the scoring
         // side scans M·|vocab| rows from the skinny companion table;
@@ -412,9 +378,10 @@ object TermIndexStore {
     val full = postings(spark, table).select("doc_id", "tok", "tf")
     val df_ = dfCensus(spark, table)
     val dl = docLens(spark, table)
-    val m = layoutM(spark, table)
+    val recorded = recordedM(spark, table)
+    val m = recorded.getOrElse(graft.ops.TextOps.Bm25M)
     val capped =
-      if (recordedM(spark, table).contains(m)
+      if (recorded.isDefined
           && spark.catalog.tableExists(cappedTable(table)))
         spark.table(cappedTable(table)).select("doc_id", "tok", "tf")
       else graft.ops.TextOps.cappedPostings(full, dl, m)
@@ -449,7 +416,9 @@ object TermIndexStore {
     */
   def searchPrunedFor(spark: SparkSession, dir: String): DataFrame = {
     val table = ensureBuilt(spark, dir)
-    search(spark, table, cap = Some(layoutM(spark, table)))
+    val recorded = recordedM(spark, table)
+    scored(spark, table,
+      Some(recorded.getOrElse(graft.ops.TextOps.Bm25M)), recorded)
   }
 
   /** The `doc_bm25_maxscore_stored` twin: EXACT top-5 via MaxScore
@@ -483,7 +452,7 @@ object TermIndexStore {
     */
   private def companionBounds(spark: SparkSession,
       table: String): Option[DataFrame] =
-    if (!recordedM(spark, table).contains(layoutM(spark, table))) None
+    if (recordedM(spark, table).isEmpty) None
     else if (spark.catalog.tableExists(boundsTable(table)))
       Some(spark.table(boundsTable(table)).select("tok", "ub"))
     else if (spark.catalog.tableExists(cappedTable(table)))

@@ -38,47 +38,17 @@ object TrainingExport {
 
   /** Record the export's shard modulus next to its data. */
   private def writeMarker(spark: SparkSession, out: String,
-      nShards: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(out, Marker)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(nShards.toString.getBytes("UTF-8")) finally os.close()
-  }
+      nShards: Int): Unit =
+    DocumentStore.writeIntMarker(spark,
+      new org.apache.hadoop.fs.Path(out), Marker, nShards)
 
   /** The modulus this export was written with, if the marker exists
     * (exports written before the marker era fall back to the caller's
     * parameter).
     */
-  def shardCount(spark: SparkSession, out: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(out, Marker)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        // drain to EOF, never a single read() — the same legal-short-
-        // read defect the r13 ADVICE flagged on TermIndexStore's M
-        // marker: "6" of "64" would silently route every append and
-        // takedown to the wrong shard directories
-        val buf = new Array[Byte](32)
-        var off = 0
-        var r = in.read(buf, off, buf.length - off)
-        while (r > 0 && off + r < buf.length) {
-          off += r
-          r = in.read(buf, off, buf.length - off)
-        }
-        if (r > 0) off += r
-        val text = new String(buf, 0, off, "UTF-8").trim
-        scala.util.Try(text.toInt).toOption match {
-          case some @ Some(_) => some
-          case None => throw new IllegalStateException(
-            s"corrupt $Marker marker under $out: '$text' is not an " +
-              "int — the export's shard modulus is unknowable; " +
-              "restore the marker or re-export")
-        }
-      } finally in.close()
-    }
-  }
+  def shardCount(spark: SparkSession, out: String): Option[Int] =
+    DocumentStore.readIntMarker(spark, new org.apache.hadoop.fs.Path(out),
+      Marker)
 
   private def layoutShards(spark: SparkSession, out: String,
       fallback: Int): Int = shardCount(spark, out).getOrElse(fallback)
@@ -259,12 +229,6 @@ object TrainingExport {
   def readStreamed(spark: SparkSession, out: String): DataFrame =
     spark.read.parquet(s"$out/batches")
 
-  /** Fold a streamed export's batch directories into one canonical
-    * sharded layout at `dest` ([[exportCorpus]] semantics: one writer
-    * task per shard, stream order rebuilt across batches). `dest`
-    * must differ from `out`; the batch directories survive until the
-    * caller deletes them, so a crash mid-compact loses nothing.
-    */
   /** True when one path contains (or is) the other after URI
     * normalization — the guard both streamed-compaction passes use:
     * an Overwrite of a destination inside the source would delete the
@@ -279,6 +243,12 @@ object TrainingExport {
     na == nb || na.startsWith(nb + "/") || nb.startsWith(na + "/")
   }
 
+  /** Fold a streamed export's batch directories into one canonical
+    * sharded layout at `dest` ([[exportCorpus]] semantics: one writer
+    * task per shard, stream order rebuilt across batches). `dest`
+    * must differ from `out`; the batch directories survive until the
+    * caller deletes them, so a crash mid-compact loses nothing.
+    */
   def compactStreamed(spark: SparkSession, out: String, dest: String,
       nShards: Int = 64): Unit = {
     require(!pathsOverlap(out, dest),
@@ -290,50 +260,17 @@ object TrainingExport {
   }
 
   /** Takedown for the streamed LANDING dirs — the export-side twin of
-    * [[graft.streaming.ImgStream.deleteStatsDatasets]], closing the
-    * same gap: [[deleteDocs]] covers the canonical `shard=N` layout,
-    * but a victim document that streamed in still has rows under
-    * every `batches/batch=<id>/shard=N` directory that landed it.
-    * Affected (batch, shard) pairs are located by one column-pruned
-    * (doc_id, batch, shard) scan (bounded by batches × shards, both
-    * layout constants); survivors of ONLY those partition directories
-    * stage in the packing order and swap through
-    * [[PartitionSwap]] (retire-aside-then-move, recover-first).
-    * Untouched batch/shard dirs are never opened. Idempotent.
-    * Returns rows removed.
+    * [[graft.streaming.ImgStream.deleteStatsDatasets]]: [[deleteDocs]]
+    * covers the canonical `shard=N` layout, but a victim document that
+    * streamed in still has rows under every `batches/batch=<id>/shard=N`
+    * directory that landed it. [[PartitionSwap.takedown]] over `batches`
+    * with (batch, shard) as the partition columns, survivors staged in
+    * the packing order. Idempotent. Returns rows removed.
     */
   def deleteStreamedDocs(spark: SparkSession, out: String,
-      ids: DataFrame): Long = {
-    val root = s"$out/batches"
-    val staging = s"$out/batches_delete_staging"
-    PartitionSwap.recover(spark, root, staging)
-    val victims = ids.select("doc_id")
-    val affected = spark.read.parquet(root)
-      .select("doc_id", "batch", "shard")
-      .join(victims, Seq("doc_id"), "left_semi")
-      .select(col("batch"), col("shard")).distinct()
-      .collect().map(r => (r.get(0), r.get(1)))
-      .sortBy { case (b, sh) => (String.valueOf(b), String.valueOf(sh)) }
-    if (affected.isEmpty) return 0L
-    val pairCond = affected.toIndexedSeq
-      .map { case (b, sh) =>
-        col("batch") === lit(b) && col("shard") === lit(sh) }
-      .reduce(_ || _)
-    val hit = spark.read.parquet(root).filter(pairCond)
-    val before = hit.count()
-    val survivors = hit.join(victims, Seq("doc_id"), "left_anti")
-    val after = survivors.count()
-    survivors
-      .repartition(col("batch"), col("shard"))
-      .sortWithinPartitions("batch", "shard", "ord", "doc_id")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("batch", "shard")
-      .parquet(staging)
-    PartitionSwap.swap(spark, root, staging,
-      affected.toIndexedSeq.map { case (b, sh) =>
-        s"batch=${String.valueOf(b)}/shard=${String.valueOf(sh)}" })
-    before - after
-  }
+      ids: DataFrame): Long =
+    PartitionSwap.takedown(spark, s"$out/batches", Seq("batch", "shard"),
+      "doc_id", ids, Seq("ord", "doc_id"))
 
   /** One JSONL shard parsed back to rows — partition-pruned like
     * [[readShard]]; `schema` is the document schema the export was

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Spread
 import graft.sources.AudioStats
@@ -17,12 +16,15 @@ import graft.sources.AudioStats
   * read is decode-free from day one instead of waiting for a
   * full-corpus [[AudioStats.write]] build.
   *
-  * Exactly-once discipline is the batch-scoped-overwrite one
+  * The loop drains through [[MicroBatch.drain]]. Exactly-once
+  * discipline is the batch-scoped-overwrite one
   * ([[ImgStream.landStats]]): each micro-batch owns
-  * `batches/batch=<id>` and a foreachBatch replay overwrites that
-  * directory with identical content (the moments are deterministic
-  * per clip payload) — idempotency lives in the path, no registry,
-  * no settlement pass. [[compactStats]] periodically folds the batch
+  * `batches/batch=<id>` and a replay overwrites that directory with
+  * identical content (the moments are deterministic per clip
+  * payload) — idempotency lives in the path, no registry, no
+  * settlement pass. The batch-dir stats layout is the imaging one, so
+  * reads, compaction and takedown delegate to [[ImgStream]].
+  * [[compactStats]] periodically folds the batch
   * dirs into the canonical dataset-bucketed [[AudioStats]] table
   * (zero-exchange per-dataset roll-ups); re-appended clips in the
   * folded table settle through [[AudioStats.vacuum]].
@@ -45,19 +47,14 @@ object AudStream {
     */
   def ingestStats(spark: SparkSession, source: DataFrame,
       statsStore: String, checkpoint: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landStats(spark, batch, statsStore, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.drain(source, checkpoint)(landStats(spark, _, statsStore, _))
 
   /** Every stats row landed so far (readers see the [[AudioStats]]
-    * schema; the `batch` partition column is dropped).
+    * schema): the batch-dir stats layout is the imaging one
+    * ([[ImgStream.readStats]]).
     */
   def readStats(spark: SparkSession, statsStore: String): DataFrame =
-    spark.read.parquet(s"$statsStore/batches").drop("batch")
+    ImgStream.readStats(spark, statsStore)
 
   /** The stored QC twins served straight off the streamed store — the
     * same aggregation tails the batch-built table reuses, so a
@@ -72,22 +69,15 @@ object AudStream {
   /** Fold the streamed batch dirs into the canonical dataset-bucketed
     * [[AudioStats]] table layout — after this, per-dataset roll-ups
     * read with zero exchanges, exactly like the batch-built table
-    * (the small-files settlement an append-per-acquisition stats
-    * store needs, [[ImgStream.compactStats]]'s contract).
+    * ([[ImgStream.compactStats]]).
     */
   def compactStats(spark: SparkSession, statsStore: String,
       table: String,
-      nBuckets: Int = AudioStats.DefaultBuckets): Unit = {
-    graft.sources.DocumentStore.clearStale(spark, table)
-    readStats(spark, statsStore)
-      .write.bucketBy(nBuckets, "dataset_id").sortBy("dataset_id")
-      .mode(SaveMode.Overwrite).saveAsTable(table)
-  }
+      nBuckets: Int = AudioStats.DefaultBuckets): Unit =
+    ImgStream.compactStats(spark, statsStore, table, nBuckets)
 
-  /** Dataset takedown for the streamed audio stats dirs — identical
-    * layout (batches/batch=N, dataset_id column) and identical pass
-    * to the imaging one; delegating keeps ONE implementation of the
-    * batch-dir swap per layout shape.
+  /** Dataset takedown for the streamed audio stats dirs — the imaging
+    * batch-dir stats layout, so the imaging pass.
     */
   def deleteStatsDatasets(spark: SparkSession, statsStore: String,
       ids: DataFrame): Long =

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.DocumentStore
 
@@ -15,95 +15,39 @@ import graft.sources.DocumentStore
   * is the whole contract: dedup state stays current at ingest rate,
   * not at corpus-rescan rate.
   *
-  * Failure discipline (foreachBatch is at-least-once):
-  *  - the census is VERSIONED — batch N merges `<base>_v<prevId>`
-  *    into a fresh `<base>_v<batchId>`; no table is ever dropped or
-  *    renamed before its successor exists, so there is no crash
-  *    window in which the accumulated state is lost;
-  *  - a replayed micro-batch (same batchId) is skipped outright via
-  *    the applied-batch registry, so the census never double-counts;
-  *  - the registry is DURABLE: the applied batchId is encoded in the
-  *    census version's own table name, and the warehouse directory
-  *    (unlike the in-memory catalog) survives a JVM restart — on
-  *    first touch of a base, [[recover]] scans the warehouse for
-  *    committed `<base>_v<id>` directories (`_SUCCESS`-validated, so
-  *    a crash mid-write never resurrects a partial census),
-  *    re-registers the newest as a bucketed table, and prunes the
-  *    rest. Replay idempotency therefore survives a driver restart:
-  *    the stream's checkpoint replays from the last committed offset
-  *    and every batchId at or below the recovered one is a no-op.
-  *    The checkpoint and the warehouse are ONE unit of state — retain
-  *    them together or discard them together; restarting against the
-  *    checkpoint with an emptied warehouse would re-bootstrap the
-  *    census from the replay point only;
-  *  - the doc-store append itself remains at-least-once: a crash
-  *    between the append and the census commit can leave a replayed
-  *    batch's rows twice in the STORE (never in the census, which is
-  *    rebuilt from the batch DataFrame, not the store). The census is
-  *    the authoritative dedup state; the duplicate store files are
-  *    settled by the census-guided [[DocumentStore.vacuum]], which
-  *    rewrites only the buckets whose counts disagree.
-  *
-  * The stream side is `foreachBatch`: the dedup merge is a batch plan
-  * over bucketed tables (none of the stateful-operator machinery fits
-  * a saveAsTable sink), and `Trigger.AvailableNow` drains and
-  * terminates, so the same entry point serves continuous ingest and
-  * catch-up backfill.
+  * Every entry point drains through [[MicroBatch.drain]]. The census
+  * is a [[MicroBatch.VersionedRegistry]] bucketed by `h`, so a
+  * recovered census keeps the zero-exchange merge; its settle step is
+  * the census-guided [[DocumentStore.vacuum]], which rewrites only the
+  * buckets whose counts disagree. The census is the authoritative
+  * dedup state: it is rebuilt from the batch DataFrame, never from the
+  * store, so a replayed append can duplicate store rows but never
+  * census counts.
   */
 object DocsStream {
 
-  /** censusBase → (last applied batchId, current census table). A
-    * cache over the durable name-encoded registry, not the registry
-    * itself — [[recover]] rebuilds it from the warehouse.
-    */
-  private val applied =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
-  /** Bases whose registry entry came from [[recover]] and whose doc
-    * store has not yet been settled (VERDICT r5 #5): a crash between
-    * `DocumentStore.append` and the census advance leaves the store
-    * one replayed append ahead of the census after the batch is
-    * redelivered. The debt only MATERIALIZES once the replay
-    * re-appends, so settlement runs at the END of the first
-    * post-recovery [[absorbBatch]], not inside recovery itself.
-    */
-  private val recoveredPending =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  /** Per-base monitors: ingest into UNRELATED census bases must not
-    * serialize on one global lock (TrieMap.getOrElseUpdate is atomic,
-    * so concurrent first touches agree on one monitor object).
-    */
-  private val locks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-  private def lockFor(censusBase: String): Object =
-    locks.getOrElseUpdate(censusBase, new Object)
+  private val registry = new MicroBatch.VersionedRegistry(
+    bucketKey = Some("h"), settleColdStart = false)
 
   /** The current census table for a base, if any batch has landed in
     * this JVM (see [[currentCensus(spark:*]] for the recovery-aware
     * variant a fresh JVM uses).
     */
   def currentCensus(censusBase: String): Option[String] =
-    applied.get(censusBase).map(_._2)
+    registry.current(censusBase)
 
   /** Recovery-aware census lookup: consults the durable registry when
     * this JVM has no in-memory entry.
     */
   def currentCensus(spark: SparkSession,
       censusBase: String): Option[String] =
-    lockFor(censusBase).synchronized {
-      lastApplied(spark, censusBase).map(_._2)
-    }
+    registry.current(spark, censusBase)
 
   /** Drop the IN-MEMORY registry state for a base — what a JVM
-    * restart does to the cache. The durable name-encoded registry in
-    * the warehouse is untouched, which is exactly what the
-    * restart-idempotency spec exercises.
+    * restart does to the cache; the durable registry is untouched.
     */
-  private[graft] def reset(censusBase: String): Unit = {
-    applied.remove(censusBase)
-    recoveredPending.remove(censusBase)
-  }
+  private[graft] def reset(censusBase: String): Unit =
+    registry.reset(censusBase)
 
   /** Start the ingest loop over a streaming `source` of documents
     * (any plan with `doc_id` and `text` columns). Each micro-batch:
@@ -112,202 +56,80 @@ object DocsStream {
     *  2. collapses to a batch census (one batch-sized shuffle — the
     *     only exchange in the loop);
     *  3. merges it with the current census version into
-    *     `<base>_v<batchId>` (zero-exchange bucketed merge), then
-    *     advances the registry and prunes the superseded version.
+    *     `<base>_v<batchId>` (zero-exchange bucketed merge).
     */
   def ingestDedup(spark: SparkSession, source: DataFrame,
       docTable: String, censusBase: String,
       checkpoint: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        absorbBatch(spark, batch, docTable, censusBase, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.drain(source, checkpoint) { (batch, batchId) =>
+      absorbBatch(spark, batch, docTable, censusBase, batchId)
+    }
 
   /** Streaming NEAR-dup ingest: each micro-batch flows through
     * [[graft.sources.MinHashStore.ingest]] — signature pass, band-
     * index probe, exact-Jaccard confirmation, survivor append.
-    * Idempotency under foreachBatch's at-least-once delivery is the
-    * store's id-based replay discipline (no registry, and a crash
+    * Idempotency is the store's id-based replay discipline (a crash
     * between the doc and band appends heals on redelivery via the
-    * store's band-repair anti-join), so this wrapper is just the
-    * drain loop.
+    * store's band-repair anti-join), so there is no registry.
     */
   def ingestNearDedup(spark: SparkSession, source: DataFrame,
       storeTable: String, checkpoint: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.MinHashStore.ingest(spark, batch, storeTable)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.drain(source, checkpoint) { (batch, _) =>
+      graft.sources.MinHashStore.ingest(spark, batch, storeTable)
+      ()
+    }
 
   /** Streaming retrieval-index ingest: each micro-batch flows through
     * [[graft.sources.TermIndexStore.ingest]] — batch-sized tokenize,
-    * doclen-then-postings bucket-layout appends. Idempotency under
-    * foreachBatch's at-least-once delivery is the store's id-based
-    * replay skip (plus its postings-repair anti-join for the append
-    * crash window), so this wrapper is just the drain loop.
+    * doclen-then-postings bucket-layout appends. Idempotency is the
+    * store's id-based replay skip (plus its postings-repair anti-join
+    * for the append crash window), so there is no registry.
     */
   def ingestTermIndex(spark: SparkSession, source: DataFrame,
       storeTable: String, checkpoint: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.TermIndexStore.ingest(spark, batch, storeTable)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** The registry entry for a base: the in-memory cache, else the
-    * durable warehouse scan (cached on hit). Call under the base's
-    * lock.
-    */
-  private def lastApplied(spark: SparkSession,
-      censusBase: String): Option[(Long, String)] =
-    applied.get(censusBase).orElse {
-      val r = recover(spark, censusBase)
-      r.foreach { v =>
-        applied.update(censusBase, v)
-        recoveredPending.update(censusBase, ())
-      }
-      r
+    MicroBatch.drain(source, checkpoint) { (batch, _) =>
+      graft.sources.TermIndexStore.ingest(spark, batch, storeTable)
+      ()
     }
-
-  /** Rebuild the registry entry from the warehouse after a restart:
-    * every committed `<base>_v<id>` directory is a candidate (the
-    * batchId lives in the name — the registry needs no side file and
-    * therefore no multi-file atomicity). `_SUCCESS` gates commit: a
-    * census whose write crashed mid-flight has no marker and is
-    * pruned, never trusted. The newest committed version is
-    * re-registered as a bucketed table (the in-memory catalog forgot
-    * it; the bucket ids survive in the part-file names, so the
-    * re-registered table keeps the zero-exchange merge — the spec
-    * asserts the recovered merge plan has no Exchange); superseded
-    * versions are pruned exactly as the happy path prunes them.
-    */
-  private def recover(spark: SparkSession,
-      censusBase: String): Option[(Long, String)] = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val whPath = new org.apache.hadoop.fs.Path(wh)
-    val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(whPath)) return None
-    val pat = (java.util.regex.Pattern.quote(censusBase.toLowerCase)
-      + "_v(\\d+)").r
-    val candidates = fs.listStatus(whPath).toSeq
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        st.getPath.getName match {
-          case pat(id) => Some((id.toLong, st.getPath))
-          case _ => None
-        }
-      }
-    val committed = candidates.filter { case (_, p) =>
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
-    }
-    if (committed.isEmpty) None
-    else {
-      val (maxId, dir) = committed.maxBy(_._1)
-      val table = s"${censusBase}_v$maxId"
-      if (!spark.catalog.tableExists(table)) {
-        val schema = spark.read.parquet(dir.toString).schema.toDDL
-        spark.sql(
-          s"""CREATE TABLE $table ($schema)
-             |USING PARQUET
-             |CLUSTERED BY (h) SORTED BY (h)
-             |INTO ${DocumentStore.DefaultBuckets} BUCKETS
-             |LOCATION '$dir'""".stripMargin)
-      }
-      // partial writes and superseded versions both go
-      candidates.filter(_._1 != maxId).foreach { case (id, _) =>
-        DocumentStore.clearStale(spark, s"${censusBase}_v$id")
-      }
-      Some((maxId, table))
-    }
-  }
 
   /** Streaming TRAINING-EXPORT ingest — the terminal sink of the
     * continuous corpus build: micro-batches of (cleaned, deduped)
     * documents land directly in the sharded training-export layout
-    * via [[graft.sources.TrainingExport.exportBatch]]. Exactly-once
-    * without any registry: each batch overwrites its own
-    * `batches/batch=<id>` directory, so foreachBatch's at-least-once
-    * replay is byte-idempotent by construction. Pair with
-    * [[ingestDedup]] upstream (census-gated keepers) and
+    * via [[graft.sources.TrainingExport.exportBatch]], which overwrites
+    * its own `batches/batch=<id>` directory, so a replay is
+    * byte-idempotent without a registry. Pair with [[ingestDedup]]
+    * upstream (census-gated keepers) and
     * [[graft.sources.TrainingExport.compactStreamed]] downstream (the
     * periodic small-files settlement a trainer-facing layout runs).
     */
   def ingestExport(spark: SparkSession, source: DataFrame,
       out: String, checkpoint: String,
       nShards: Int = 64): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.TrainingExport
-          .exportBatch(spark, batch, out, batchId, nShards)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.drain(source, checkpoint) { (batch, batchId) =>
+      graft.sources.TrainingExport
+        .exportBatch(spark, batch, out, batchId, nShards)
+    }
 
   /** One ingest step — also the batch-mode entry (a backfill driver
     * can call it directly, supplying its own monotonic batch ids).
-    * Replay-idempotent ACROSS restarts: a batchId at or below the
-    * last applied one — recovered from the durable registry when the
-    * in-memory cache is cold — is a no-op.
+    * Replay-idempotent across restarts ([[MicroBatch.VersionedRegistry]]).
+    * The first batch's census is the state itself; later batches
+    * write a bucketed batch census and merge it with the current one.
     */
   def absorbBatch(spark: SparkSession, batch: DataFrame,
       docTable: String, censusBase: String, batchId: Long): Unit =
-    lockFor(censusBase).synchronized {
-      // auto-settlement of recovery debt: after the first
-      // post-recovery batch lands (replayed or fresh), compare the
-      // per-bucket store counts against the census (≤ nBuckets rows)
-      // and distinct-rewrite only disagreeing buckets — a restarted
-      // ingest loop needs no manual vacuum call
-      def settleIfRecovered(): Unit =
-        if (recoveredPending.remove(censusBase).isDefined)
-          applied.get(censusBase).foreach { case (_, cur) =>
-            DocumentStore.vacuum(spark, docTable, cur)
-          }
-      val prev = lastApplied(spark, censusBase)
-      if (prev.exists(batchId <= _._1)) {
-        // replayed no-op: the registry already covers this batch, but
-        // an EARLIER crash may still have left settleable debt
-        settleIfRecovered()
-        return
-      }
+    registry.absorb(spark, censusBase, batchId,
+        DocumentStore.vacuum(spark, docTable, _)) { prev =>
       DocumentStore.append(batch, docTable)
-      val batchCensus = s"${censusBase}_batch"
-      DocumentStore.clearStale(spark, batchCensus)
-      batch
+      val batchCensus = batch
         .withColumn("h", md5(lower(trim(col("text")))))
         .groupBy("h")
         .agg(count(lit(1)).as("n"), min("doc_id").as("keeper"))
-        .write.bucketBy(DocumentStore.DefaultBuckets, "h").sortBy("h")
-        .mode("overwrite").saveAsTable(batchCensus)
-      val target = s"${censusBase}_v$batchId"
-      DocumentStore.clearStale(spark, target)
-      prev match {
-        case None =>
-          // bootstrap: the first batch's census IS the state (rename,
-          // not copy — batchCensus is rebuilt from scratch next batch)
-          spark.sql(s"ALTER TABLE $batchCensus RENAME TO $target")
-        case Some((_, cur)) =>
-          DocumentStore.mergedCensus(spark, cur, batchCensus)
-            .write.bucketBy(DocumentStore.DefaultBuckets, "h").sortBy("h")
-            .mode("overwrite").saveAsTable(target)
+      prev.fold(batchCensus) { cur =>
+        val batchTable = s"${censusBase}_batch"
+        DocumentStore.clearStale(spark, batchTable)
+        registry.write(batchCensus, batchTable)
+        DocumentStore.mergedCensus(spark, cur, batchTable)
       }
-      applied.update(censusBase, (batchId, target))
-      // prune ONLY after the registry points at the successor
-      // (clearStale, not bare DROP: a recovered census is an external
-      // table whose files a DROP alone would leave behind)
-      prev.foreach { case (_, old) =>
-        DocumentStore.clearStale(spark, old)
-      }
-      settleIfRecovered()
     }
 }

@@ -2,7 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.sources.ImagingStore.FrameOrder
+import graft.sources.PartitionSwap
 
 /** Streaming frame ingest — the microscope-facing loop of a
   * continuously-acquiring facility: micro-batches of freshly-split
@@ -12,11 +15,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * [[DocsStream.ingestDedup]] (documents) and
   * [[VecStream.ingestIndex]] (vectors).
   *
-  * Exactly-once discipline is the batch-scoped-overwrite one
+  * Both ingest loops drain through [[MicroBatch.drain]]. Exactly-once
+  * discipline is the batch-scoped-overwrite one
   * ([[graft.sources.TrainingExport.exportBatch]]): each micro-batch
-  * owns `batches/batch=<id>/project=P/...` and a foreachBatch replay
-  * overwrites that directory with identical content — idempotency
-  * lives in the path, no registry, no settlement pass. A reader
+  * owns `batches/batch=<id>/project=P/...` and a replay overwrites
+  * that directory with identical content — idempotency lives in the
+  * path, no registry, no settlement pass. Takedowns run through
+  * [[graft.sources.PartitionSwap.takedown]]. A reader
   * filtering on `project` partition-prunes across every batch
   * directory; [[compactStreamed]] periodically folds the batch dirs
   * into the canonical [[graft.sources.ImagingStore]] layout (the
@@ -33,8 +38,7 @@ object ImgStream {
       batchId: Long): Unit =
     batch
       .repartition(col("project"))
-      .sortWithinPartitions("project", "frames_global_id",
-        "channel_idx", "slice_idx", "time_idx", "pos_idx")
+      .sortWithinPartitions(("project" +: FrameOrder).map(col): _*)
       .write.mode(SaveMode.Overwrite)
       .partitionBy("project")
       .parquet(s"$store/batches/batch=$batchId")
@@ -42,13 +46,7 @@ object ImgStream {
   /** Start the ingest loop over a streaming `source` of frame rows. */
   def ingestFrames(spark: SparkSession, source: DataFrame,
       store: String, checkpoint: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landBatch(spark, batch, store, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.drain(source, checkpoint)(landBatch(spark, _, store, _))
 
   /** Everything landed so far (partition columns `batch`, `project`
     * from the directory layout).
@@ -67,52 +65,15 @@ object ImgStream {
     * compliance delete would otherwise fall through: a victim dataset
     * deleted from the canonical [[graft.sources.ImagingStore]] layout
     * still has rows under every `batches/batch=N/project=P` directory
-    * that landed it. Same shape as
-    * [[graft.sources.ImagingStore.deleteDatasets]] lifted to the
-    * two-level partition layout: locate the affected (batch, project)
-    * pairs by one column-pruned scan (bounded by batches × projects,
-    * both layout constants), stage survivors of ONLY those partition
-    * directories, swap through [[graft.sources.PartitionSwap]]
-    * (retire-aside-then-move, recover-first). Untouched batch/project
-    * dirs are never opened. Idempotent. Returns rows removed.
+    * that landed it. [[graft.sources.PartitionSwap.takedown]] over
+    * `batches` with (batch, project) as the partition columns.
+    * Idempotent. Returns rows removed.
     */
   def deleteDatasets(spark: SparkSession, store: String,
-      ids: DataFrame): Long = {
-    val root = s"$store/batches"
-    val staging = s"$store/batches_delete_staging"
-    graft.sources.PartitionSwap.recover(spark, root, staging)
-    val victims = ids.select(col("dataset_id").as("frames_global_id"))
-    val affected = spark.read.parquet(root)
-      .select("frames_global_id", "batch", "project")
-      .join(victims, Seq("frames_global_id"), "left_semi")
-      .select(col("batch"), col("project"))
-      .distinct()
-      .collect().map(r => (r.get(0), r.getString(1)))
-      .sortBy { case (b, p) => (String.valueOf(b), p) }
-    if (affected.isEmpty) return 0L
-    // an OR of per-pair equalities on the RAW typed partition columns
-    // (bounded by batches × projects): plain equality on partition
-    // columns PRUNES — untouched partition directories never scan
-    val pairCond = affected.toIndexedSeq
-      .map { case (b, p) =>
-        col("batch") === lit(b) && col("project") === p }
-      .reduce(_ || _)
-    val hit = spark.read.parquet(root).filter(pairCond)
-    val before = hit.count()
-    val survivors = hit.join(victims, Seq("frames_global_id"), "left_anti")
-    val after = survivors.count()
-    survivors
-      .repartition(col("batch"), col("project"))
-      .sortWithinPartitions("batch", "project", "frames_global_id",
-        "channel_idx", "slice_idx", "time_idx", "pos_idx")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("batch", "project")
-      .parquet(staging)
-    graft.sources.PartitionSwap.swap(spark, root, staging,
-      affected.toIndexedSeq
-        .map { case (b, p) => s"batch=${String.valueOf(b)}/project=$p" })
-    before - after
-  }
+      ids: DataFrame): Long =
+    PartitionSwap.takedown(spark, s"$store/batches", Seq("batch", "project"),
+      "frames_global_id",
+      ids.select(col("dataset_id").as("frames_global_id")), FrameOrder)
 
   /** Decode-once ON ARRIVAL: land one micro-batch of frame rows as
     * persisted [[graft.sources.FrameStats]] sufficient statistics —
@@ -137,13 +98,7 @@ object ImgStream {
     */
   def ingestStats(spark: SparkSession, source: DataFrame,
       statsStore: String, checkpoint: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landStats(spark, batch, statsStore, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.drain(source, checkpoint)(landStats(spark, _, statsStore, _))
 
   /** Every stats row landed so far (the `batch` partition column from
     * the directory layout is dropped — readers see the
@@ -154,40 +109,16 @@ object ImgStream {
 
   /** Dataset takedown for the streamed STATS dirs — the QC moments of
     * a deleted dataset reconstruct per-frame exposure facts about it,
-    * so they leave with the frames. Layout here is one level
-    * (`batches/batch=N` holds stats rows directly), so the affected
-    * unit is the batch directory: locate by one column-pruned
-    * (dataset_id, batch) scan, stage survivors of only those batches,
-    * swap through [[graft.sources.PartitionSwap]]. Idempotent.
-    * Returns rows removed.
+    * so they leave with the frames. The layout is one level
+    * (`batches/batch=N` holds stats rows directly), so the takedown
+    * unit is the batch directory
+    * ([[graft.sources.PartitionSwap.takedown]]). Idempotent. Returns
+    * rows removed.
     */
   def deleteStatsDatasets(spark: SparkSession, statsStore: String,
-      ids: DataFrame): Long = {
-    val root = s"$statsStore/batches"
-    val staging = s"$statsStore/batches_delete_staging"
-    graft.sources.PartitionSwap.recover(spark, root, staging)
-    val victims = ids.select("dataset_id")
-    val affected = spark.read.parquet(root)
-      .select("dataset_id", "batch")
-      .join(victims, Seq("dataset_id"), "left_semi")
-      .select(col("batch")).distinct()
-      .collect().map(_.get(0)).sortBy(String.valueOf(_))
-    if (affected.isEmpty) return 0L
-    val hit = spark.read.parquet(root)
-      .filter(affected.toIndexedSeq.map(b => col("batch") === lit(b))
-        .reduce(_ || _))
-    val before = hit.count()
-    val survivors = hit.join(victims, Seq("dataset_id"), "left_anti")
-    val after = survivors.count()
-    survivors
-      .repartition(col("batch"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("batch")
-      .parquet(staging)
-    graft.sources.PartitionSwap.swap(spark, root, staging,
-      affected.toIndexedSeq.map(b => s"batch=${String.valueOf(b)}"))
-    before - after
-  }
+      ids: DataFrame): Long =
+    PartitionSwap.takedown(spark, s"$statsStore/batches", Seq("batch"),
+      "dataset_id", ids, Nil)
 
   /** Acquisition-drift report over the streamed stats store — the
     * monitoring read an imaging facility runs after every ingest
@@ -292,8 +223,7 @@ object ImgStream {
         s"(got store=$store dest=$dest)")
     readStreamed(spark, store).drop("batch")
       .repartition(col("project"))
-      .sortWithinPartitions("project", "frames_global_id",
-        "channel_idx", "slice_idx", "time_idx", "pos_idx")
+      .sortWithinPartitions(("project" +: FrameOrder).map(col): _*)
       .write.mode(SaveMode.Overwrite)
       .partitionBy("project")
       .parquet(dest)

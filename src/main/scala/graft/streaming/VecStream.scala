@@ -2,62 +2,39 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.{DocumentStore, VectorIndex}
+import graft.sources.VectorIndex
 
-/** Streaming vector ingest wired into the persisted IVF+PQ index —
-  * the ANN twin of [[DocsStream]]: micro-batches of new embeddings
-  * route and PQ-encode against the FROZEN codebooks of the original
-  * corpus ([[VectorIndex.append]], the FAISS `index.add()` path) and
-  * land in the cell-bucketed index layout. Per micro-batch cost is
-  * O(batch); the stored index is never rescanned and search plans are
-  * unchanged — the index stays current at ingest rate.
+/** Streaming vector ingest wired into the persisted IVF+PQ index:
+  * micro-batches of new embeddings route and PQ-encode against the
+  * FROZEN codebooks of the original corpus ([[VectorIndex.append]], the
+  * FAISS `index.add()` path) and land in the cell-bucketed index
+  * layout. Per micro-batch cost is O(batch); the stored index is never
+  * rescanned and search plans are unchanged — the index stays current
+  * at ingest rate.
   *
-  * Failure discipline (foreachBatch is at-least-once), mirroring
-  * [[DocsStream]] exactly:
-  *  - the REGISTRY is versioned — batch N writes the cumulative
-  *    per-cell row census `(cell, n)` to `<base>_v<batchId>`; no
-  *    registry version is dropped before its successor exists;
-  *  - a replayed batchId (at or below the registered one) is a no-op;
-  *  - the registry is DURABLE: batchId lives in the table name, the
-  *    warehouse survives a restart, and [[recover]] re-registers the
-  *    newest `_SUCCESS`-committed version on first touch — replay
-  *    idempotency survives the driver dying;
-  *  - the index append itself remains at-least-once: a crash between
-  *    the append and the registry advance leaves a replayed batch's
-  *    rows twice in the INDEX (never in the registry, which is
-  *    rebuilt from the batch DataFrame). Duplicate index rows are
-  *    real corruption for search (a duplicated vector occupies two
-  *    top-k slots), so recovery AUTO-SETTLES: the end of the first
-  *    post-recovery batch runs [[VectorIndex.settle]] — the
-  *    bucket-granular distinct rewrite against the registry counts,
-  *    O(disagreeing buckets), shared with [[DocumentStore.vacuum]].
+  * Every entry point drains through [[MicroBatch.drain]]. The index
+  * path keeps the cumulative per-cell row census `(cell, n)` as a
+  * [[MicroBatch.VersionedRegistry]] of plain parquet (≤ nCells rows,
+  * no bucket layout to preserve). Duplicate index rows are real
+  * corruption for search (a duplicated vector occupies two top-k
+  * slots), so its settle step, [[VectorIndex.settle]] — the
+  * bucket-granular distinct rewrite against the registry counts — also
+  * runs after the first batch of a base with no committed version.
   */
 object VecStream {
 
-  /** registryBase → (last applied batchId, current registry table). */
-  private val applied =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
-  private val recoveredPending =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  private val locks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-  private def lockFor(base: String): Object =
-    locks.getOrElseUpdate(base, new Object)
+  private val registry = new MicroBatch.VersionedRegistry(
+    bucketKey = None, settleColdStart = true)
 
   def currentRegistry(base: String): Option[String] =
-    applied.get(base).map(_._2)
+    registry.current(base)
 
   /** Drop in-memory registry state — what a JVM restart does. The
-    * durable name-encoded registry in the warehouse is untouched.
+    * durable registry in the warehouse is untouched.
     */
-  private[graft] def reset(base: String): Unit = {
-    applied.remove(base)
-    recoveredPending.remove(base)
-  }
+  private[graft] def reset(base: String): Unit = registry.reset(base)
 
   /** Start the ingest loop over a streaming `source` of embeddings
     * (`vec_id`, `embedding`, `label`). Each micro-batch appends
@@ -67,141 +44,53 @@ object VecStream {
   def ingestIndex(spark: SparkSession, source: DataFrame,
       indexTable: String, registryBase: String, codebookDir: String,
       checkpoint: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        absorbBatch(spark, batch, indexTable, registryBase, codebookDir,
-          batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    MicroBatch.drain(source, checkpoint) { (batch, batchId) =>
+      absorbBatch(spark, batch, indexTable, registryBase, codebookDir,
+        batchId)
+    }
 
   /** Streaming SEMANTIC-dedup ingest over the cell-partitioned
     * [[graft.sources.SemDedupStore]] — the vector twin of
     * [[DocsStream.ingestDedup]]: each micro-batch routes against the
     * frozen codebook, drops within-tau newcomers (stored-first, then
     * in-batch keep-first) and appends survivors to their cells'
-    * partitions. Unlike the index path there is NO registry: the
-    * store's replay idempotency is id-based
-    * ([[graft.sources.SemDedupStore.ingest]]'s crash discipline), so
-    * a re-delivered micro-batch is a stored-state no-op by
-    * construction and this wrapper stays a plain foreachBatch loop.
+    * partitions. There is NO registry: the store's replay idempotency
+    * is id-based ([[graft.sources.SemDedupStore.ingest]]'s crash
+    * discipline), so a re-delivered micro-batch is a stored-state
+    * no-op by construction.
     */
   def ingestDedup(spark: SparkSession, source: DataFrame,
       storeTable: String, codebookDir: String,
       checkpoint: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.SemDedupStore.ingest(spark, batch, storeTable,
-          codebookDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  private def lastApplied(spark: SparkSession,
-      base: String): Option[(Long, String)] =
-    applied.get(base).orElse {
-      val r = recover(spark, base)
-      r.foreach { v =>
-        applied.update(base, v)
-        recoveredPending.update(base, ())
-      }
-      r
+    MicroBatch.drain(source, checkpoint) { (batch, _) =>
+      graft.sources.SemDedupStore.ingest(spark, batch, storeTable,
+        codebookDir)
+      ()
     }
-
-  /** Rebuild the registry entry from the warehouse after a restart:
-    * same `_SUCCESS`-gated max-id scan as [[DocsStream.recover]]. The
-    * registry is ≤ nCells rows — re-registration is a plain parquet
-    * external table, no bucket layout to preserve.
-    */
-  private def recover(spark: SparkSession,
-      base: String): Option[(Long, String)] = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val whPath = new org.apache.hadoop.fs.Path(wh)
-    val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(whPath)) return None
-    val pat = (java.util.regex.Pattern.quote(base.toLowerCase)
-      + "_v(\\d+)").r
-    val candidates = fs.listStatus(whPath).toSeq
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        st.getPath.getName match {
-          case pat(id) => Some((id.toLong, st.getPath))
-          case _ => None
-        }
-      }
-    val committed = candidates.filter { case (_, p) =>
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
-    }
-    if (committed.isEmpty) None
-    else {
-      val (maxId, dir) = committed.maxBy(_._1)
-      val table = s"${base}_v$maxId"
-      if (!spark.catalog.tableExists(table)) {
-        val schema = spark.read.parquet(dir.toString).schema.toDDL
-        spark.sql(s"""CREATE TABLE $table ($schema)
-           |USING PARQUET
-           |LOCATION '$dir'""".stripMargin)
-      }
-      candidates.filter(_._1 != maxId).foreach { case (id, _) =>
-        DocumentStore.clearStale(spark, s"${base}_v$id")
-      }
-      Some((maxId, table))
-    }
-  }
 
   /** One ingest step — also the batch-mode entry. Replay-idempotent
-    * across restarts; see the object doc for the crash discipline.
+    * across restarts ([[MicroBatch.VersionedRegistry]]). The next
+    * registry version is the previous one plus this batch's cell
+    * counts (≤ nCells rows a side — trivial by construction).
     */
   def absorbBatch(spark: SparkSession, batch: DataFrame,
       indexTable: String, registryBase: String, codebookDir: String,
       batchId: Long): Unit =
-    lockFor(registryBase).synchronized {
-      def settleIfRecovered(): Unit =
-        if (recoveredPending.remove(registryBase).isDefined)
-          applied.get(registryBase).foreach { case (_, reg) =>
-            VectorIndex.settle(spark, indexTable, reg)
-          }
-      val prev = lastApplied(spark, registryBase)
-      if (prev.exists(batchId <= _._1)) {
-        settleIfRecovered()
-        return
-      }
+    registry.absorb(spark, registryBase, batchId,
+        VectorIndex.settle(spark, indexTable, _)) { prev =>
       VectorIndex.append(spark, batch, indexTable, codebookDir)
-      // cumulative per-cell census: previous registry + this batch's
-      // cell counts (≤ nCells rows a side — trivial by construction)
       val cb = graft.tables.Tables.embeddings(spark, codebookDir)
       val batchCounts = graft.ops.VectorOps
         .coarseCellsOf(batch, cb)
         .groupBy("cell").agg(count(lit(1)).as("n"))
-      val merged = prev match {
-        case None => batchCounts
-        case Some((_, reg)) =>
-          spark.table(reg)
-            .select(col("cell"), col("n").as("n_a"))
-            .join(batchCounts.select(col("cell"), col("n").as("n_b")),
-              Seq("cell"), "full_outer")
-            .select(col("cell"),
-              (coalesce(col("n_a"), lit(0L))
-                + coalesce(col("n_b"), lit(0L))).as("n"))
+      prev.fold(batchCounts) { reg =>
+        spark.table(reg)
+          .select(col("cell"), col("n").as("n_a"))
+          .join(batchCounts.select(col("cell"), col("n").as("n_b")),
+            Seq("cell"), "full_outer")
+          .select(col("cell"),
+            (coalesce(col("n_a"), lit(0L))
+              + coalesce(col("n_b"), lit(0L))).as("n"))
       }
-      val target = s"${registryBase}_v$batchId"
-      DocumentStore.clearStale(spark, target)
-      // localCheckpoint-free materialization: merged reads the prev
-      // registry table, which outlives this write (pruned only after
-      // the successor is registered)
-      merged.write.mode("overwrite").saveAsTable(target)
-      applied.update(registryBase, (batchId, target))
-      prev.foreach { case (_, old) =>
-        DocumentStore.clearStale(spark, old)
-      }
-      // bootstrap special case: with NO committed registry version, a
-      // pre-crash append of this same batch is invisible to recovery
-      // (there is nothing to recover) — settle unconditionally against
-      // the fresh v0 census; a clean bootstrap is a count-agree no-op
-      if (prev.isEmpty) VectorIndex.settle(spark, indexTable, target)
-      settleIfRecovered()
     }
 }

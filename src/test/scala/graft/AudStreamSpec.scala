@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,14 +14,14 @@ import graft.streaming.AudStream
   * layout — the [[graft.streaming.ImgStream.ingestStats]] triple on
   * the audio modality.
   */
-class AudStreamSpec extends AnyFunSuite {
+class AudStreamSpec extends AnyFunSuite with TempDirs {
   import TestSpark.{sfDir, spark}
 
   private def clips() = BinaryAudio.withAudioPayload(spark, sfDir)
 
   test("streamed ingest decodes on arrival; rows equal the batch " +
       "build; replay of a landed batch is idempotent") {
-    val base = Files.createTempDirectory("graft_audstream")
+    val base = tempDir("graft_audstream")
     val src = base.resolve("src").toString
     val ckpt = base.resolve("ckpt").toString
     val store = base.resolve("st").toString
@@ -69,14 +67,14 @@ class AudStreamSpec extends AnyFunSuite {
 
   test("compactStats folds the batch dirs into the canonical bucket " +
       "layout; takedown reaches the streamed dirs") {
-    val base = Files.createTempDirectory("graft_audcompact")
+    val base = tempDir("graft_audcompact")
     val store = base.resolve("st").toString
     val c = clips()
     (0 until 3).foreach { b =>
       AudStream.landStats(spark,
         c.filter(expr("clip_id div 10") % 3 === b), store, b.toLong)
     }
-    val tmp = Files.createTempDirectory("graft_audcanon").toString
+    val tmp = tempDir("graft_audcanon").toString
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_audc LOCATION '$tmp'")
     val t = "graft_audc.stats"
     val t2 = "graft_audc.stats_batch"

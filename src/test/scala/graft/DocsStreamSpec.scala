@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.DocumentStore
 import graft.streaming.DocsStream
 
-class DocsStreamSpec extends AnyFunSuite {
+class DocsStreamSpec extends AnyFunSuite with TempDirs {
   import TestSpark.{sfDir, spark}
 
   private def censusOf(base: String) = spark.table(
@@ -16,8 +14,8 @@ class DocsStreamSpec extends AnyFunSuite {
 
   test("streaming ingest keeps the dedup census equal to the batch " +
       "census of everything ingested") {
-    val src = Files.createTempDirectory("graft_docsrc").toString
-    val ckpt = Files.createTempDirectory("graft_docckpt").toString
+    val src = tempDir("graft_docsrc").toString
+    val ckpt = tempDir("graft_docckpt").toString
     val docTable = "graft_stream_docs"
     val censusBase = "graft_stream_census"
     DocsStream.reset(censusBase)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,7 +19,7 @@ import graft.streaming.ImgStream
   * store equals a from-scratch build of the kept set; (c) re-running
   * the same delete is a no-op.
   */
-class ModalityTakedownSpec extends AnyFunSuite {
+class ModalityTakedownSpec extends AnyFunSuite with TempDirs {
   import TestSpark.{sfDir, spark}
 
   /** Recursive file snapshot of a directory: relative path ->
@@ -73,7 +71,7 @@ class ModalityTakedownSpec extends AnyFunSuite {
 
   test("FrameStats.deleteDatasets rewrites only victim buckets and " +
       "equals a fresh build of the kept frames") {
-    val tmp = Files.createTempDirectory("graft_tkd_fs").toString
+    val tmp = tempDir("graft_tkd_fs").toString
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_tkd_fs LOCATION '$tmp'")
     val t = "graft_tkd_fs.stats"
     val t2 = "graft_tkd_fs.stats_fresh"
@@ -110,7 +108,7 @@ class ModalityTakedownSpec extends AnyFunSuite {
 
   test("AudioStats.deleteDatasets forgets victim clips' moments; " +
       "vacuum settles a re-appended batch") {
-    val tmp = Files.createTempDirectory("graft_tkd_au").toString
+    val tmp = tempDir("graft_tkd_au").toString
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_tkd_au LOCATION '$tmp'")
     val t = "graft_tkd_au.stats"
     try {
@@ -156,7 +154,7 @@ class ModalityTakedownSpec extends AnyFunSuite {
 
   test("ImagingStore.deleteDatasets rewrites only the victims' " +
       "project partitions; an interrupted swap recovers") {
-    val store = Files.createTempDirectory("graft_tkd_is").toString + "/st"
+    val store = tempDir("graft_tkd_is").toString + "/st"
     ImagingStore.writeFrames(spark, sfDir, store)
     val all = spark.read.parquet(store)
     // victims: one dataset from the project with the most datasets
@@ -215,7 +213,7 @@ class ModalityTakedownSpec extends AnyFunSuite {
 
   test("ImgStream.deleteDatasets purges the landing dirs batch-" +
       "partition by batch-partition") {
-    val store = Files.createTempDirectory("graft_tkd_ims").toString + "/st"
+    val store = tempDir("graft_tkd_ims").toString + "/st"
     val d = ImagingModel.dataSet(spark, sfDir)
       .select(col("id").as("ds_id"),
         expr("split_part(dataset_serial, '-', 1)").as("project"))
@@ -252,7 +250,7 @@ class ModalityTakedownSpec extends AnyFunSuite {
   }
 
   test("ImgStream.deleteStatsDatasets forgets the streamed QC moments") {
-    val store = Files.createTempDirectory("graft_tkd_imq").toString + "/q"
+    val store = tempDir("graft_tkd_imq").toString + "/q"
     val frames = ImagingModel.frames(spark, sfDir)
     // arrival waves split by DATASET (not frame) so a victim dataset
     // lands in one batch and the untouched-batch check has teeth
@@ -285,4 +283,49 @@ class ModalityTakedownSpec extends AnyFunSuite {
     assert(ImgStream.deleteStatsDatasets(spark, store,
       dsIds(victim)) === 0L)
   }
+
+  test("path takedowns reach partitions whose names Spark escapes") {
+    import spark.implicits._
+    val frames = ImagingModel.frames(spark, sfDir)
+    val ids = frames.select("frames_global_id").distinct()
+      .orderBy("frames_global_id").limit(6)
+      .collect().map(_.getLong(0)).toSeq
+    assert(ids.size === 6, "need 6 datasets")
+    // two datasets per project, so every affected partition keeps
+    // survivors; the first three datasets (one per project) are victims
+    val projects = Seq("lab%A", "lab=A", "lab:A")
+    val owner = ids.zipWithIndex
+      .map { case (id, i) => (id, projects(i % 3)) }
+      .toDF("ds_id", "project")
+    val rows = frames
+      .join(broadcast(owner), col("frames_global_id") === col("ds_id"))
+      .drop("ds_id")
+    val victims = ids.take(3)
+    def check(what: String, read: () => DataFrame,
+        delete: () => Long): Unit = {
+      val nVictimRows = read()
+        .filter(col("frames_global_id").isin(victims: _*)).count()
+      val allCount = read().count()
+      assert(nVictimRows > 0)
+      val removed = delete()
+      val kept = read()
+      assert(kept.filter(col("frames_global_id").isin(victims: _*))
+        .count() === 0, s"$what left victim rows readable")
+      assert(removed === nVictimRows && kept.count() === allCount - removed,
+        s"$what: returned count must equal the rows actually gone")
+    }
+    val store = tempDir("graft_tkd_esc").toString + "/st"
+    rows.write.partitionBy("project").parquet(store)
+    check("ImagingStore.deleteDatasets", () => spark.read.parquet(store),
+      () => ImagingStore.deleteDatasets(spark, store, dsIds(victims: _*)))
+    val landed = tempDir("graft_tkd_esc_ims").toString + "/st"
+    (0 until 2).foreach { b =>
+      ImgStream.landBatch(spark,
+        rows.filter(col("frames_global_id") % 2 === b), landed, b.toLong)
+    }
+    check("ImgStream.deleteDatasets",
+      () => ImgStream.readStreamed(spark, landed),
+      () => ImgStream.deleteDatasets(spark, landed, dsIds(victims: _*)))
+  }
 }
+

@@ -381,4 +381,22 @@ class TermIndexStoreSpec extends AnyFunSuite {
       spark.sql("DROP DATABASE IF EXISTS graft_tit")
     }
   }
+
+  test("a non-integer impact-cap marker fails loudly, naming the " +
+      "marker") {
+    val t = "graft_ti_badmarker"
+    graft.sources.DocumentStore.clearStale(spark, t)
+    try {
+      spark.range(1).write.saveAsTable(t)
+      val marker = new java.io.File(
+        graft.sources.DocumentStore.tableDir(spark, t).toUri.getPath,
+        "_graft_m")
+      java.nio.file.Files.write(marker.toPath, "6x".getBytes("UTF-8"))
+      val e = intercept[IllegalStateException](
+        TermIndexStore.recordedM(spark, t))
+      assert(e.getMessage.contains("_graft_m") &&
+        e.getMessage.contains("'6x'"), e.getMessage)
+    } finally graft.sources.DocumentStore.clearStale(spark, t)
+  }
 }
+

@@ -19,3 +19,24 @@ object TestSpark {
     s
   }
 }
+
+/** Temp directories scoped to one suite: [[tempDir]] makes one (as
+  * `Files.createTempDirectory` does) and `afterAll` deletes every
+  * directory the suite made.
+  */
+trait TempDirs extends org.scalatest.BeforeAndAfterAll {
+  this: org.scalatest.Suite =>
+
+  private val made =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    made.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try made.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    finally super.afterAll()
+}

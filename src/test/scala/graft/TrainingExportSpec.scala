@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.TextOps
 import graft.sources.TrainingExport
 
-class TrainingExportSpec extends AnyFunSuite {
+class TrainingExportSpec extends AnyFunSuite with TempDirs {
   import TestSpark.{sfDir, spark}
 
   test("pruning manifest drives the export: drops excluded, weights " +
@@ -34,7 +34,7 @@ class TrainingExportSpec extends AnyFunSuite {
     assert(pruned.filter(col("weight") <= 0.0).count() === 0)
 
     // export the pruned frame; the shipped corpus matches the manifest
-    val out = Files.createTempDirectory("graft_pruned").toString
+    val out = tempDir("graft_pruned").toString
     TrainingExport.exportCorpus(spark, pruned, out, nShards = 8)
     val shipped = spark.read.parquet(out)
     assert(shipped.count() === expectKept)
@@ -44,7 +44,7 @@ class TrainingExportSpec extends AnyFunSuite {
 
     // takedown path: export EVERYTHING, then deleteDocs the dropped
     // ids — the final layout equals the manifest's kept set
-    val out2 = Files.createTempDirectory("graft_pruned2").toString
+    val out2 = tempDir("graft_pruned2").toString
     TrainingExport.exportCorpus(spark, docs, out2, nShards = 8)
     val droppedIds = docs.select("doc_id")
       .except(pruned.select("doc_id"))
@@ -107,7 +107,7 @@ class TrainingExportSpec extends AnyFunSuite {
 
   test("export round-trips, matches the shardStats census, and is " +
       "deterministic") {
-    val out = Files.createTempDirectory("graft_export").toString
+    val out = tempDir("graft_export").toString
     TrainingExport.export(spark, sfDir, out)
 
     val total = graft.tables.Tables.documents(spark, sfDir).count()
@@ -123,7 +123,7 @@ class TrainingExportSpec extends AnyFunSuite {
     assert(manifest === census)
 
     // deterministic: a second export lands the identical assignment
-    val out2 = Files.createTempDirectory("graft_export2").toString
+    val out2 = tempDir("graft_export2").toString
     TrainingExport.export(spark, sfDir, out2)
     val m2 = TrainingExport.manifest(spark, out2).collect()
       .map(r => r.getInt(0).toLong -> r.getLong(1)).toMap
@@ -132,7 +132,7 @@ class TrainingExportSpec extends AnyFunSuite {
 
   test("appendCorpus lands a batch in the existing shard layout " +
       "without rewriting it") {
-    val out = Files.createTempDirectory("graft_export_app").toString
+    val out = tempDir("graft_export_app").toString
     TrainingExport.export(spark, sfDir, out)
     val before = TrainingExport.manifest(spark, out).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -154,8 +154,8 @@ class TrainingExportSpec extends AnyFunSuite {
   }
 
   test("compactShards settles append debt and preserves the stream") {
-    val out = Files.createTempDirectory("graft_export_frag").toString
-    val compacted = Files.createTempDirectory("graft_export_comp").toString
+    val out = tempDir("graft_export_frag").toString
+    val compacted = tempDir("graft_export_comp").toString
     TrainingExport.export(spark, sfDir, out)
     // two append batches → up to three files per shard directory
     for (off <- Seq(6000000L, 7000000L))
@@ -185,7 +185,7 @@ class TrainingExportSpec extends AnyFunSuite {
   }
 
   test("deleteDocs rewrites only the affected shards") {
-    val out = Files.createTempDirectory("graft_export_del").toString
+    val out = tempDir("graft_export_del").toString
     TrainingExport.export(spark, sfDir, out)
     val total = spark.read.parquet(out).count()
     // victims: three specific docs — their shards are knowable from
@@ -220,7 +220,7 @@ class TrainingExportSpec extends AnyFunSuite {
 
   test("deleteDocs recovers a shard stranded by an interrupted pass " +
       "instead of destroying its only copy") {
-    val out = Files.createTempDirectory("graft_export_crash").toString
+    val out = tempDir("graft_export_crash").toString
     TrainingExport.export(spark, sfDir, out)
     val total = spark.read.parquet(out).count()
     // simulate the crash window: shard 11's live directory was retired
@@ -248,7 +248,7 @@ class TrainingExportSpec extends AnyFunSuite {
 
   test("mutating passes obey the export's recorded shard modulus, " +
       "not the caller's") {
-    val out = Files.createTempDirectory("graft_export_mod").toString
+    val out = tempDir("graft_export_mod").toString
     // written with a NON-default modulus…
     TrainingExport.exportCorpus(spark,
       graft.tables.Tables.documents(spark, sfDir), out, 32)
@@ -266,7 +266,7 @@ class TrainingExportSpec extends AnyFunSuite {
   }
 
   test("readShard prunes partitions at the scan") {
-    val out = Files.createTempDirectory("graft_export_prune").toString
+    val out = tempDir("graft_export_prune").toString
     TrainingExport.export(spark, sfDir, out)
     val one = TrainingExport.readShard(spark, out, 7)
     assert(one.count() > 0)
@@ -277,8 +277,8 @@ class TrainingExportSpec extends AnyFunSuite {
 
   test("JSONL export round-trips per shard with the parquet layout") {
     val docs = graft.tables.Tables.documents(spark, sfDir)
-    val outP = Files.createTempDirectory("graft_export_pq").toString
-    val outJ = Files.createTempDirectory("graft_export_jsonl").toString
+    val outP = tempDir("graft_export_pq").toString
+    val outJ = tempDir("graft_export_jsonl").toString
     TrainingExport.export(spark, sfDir, outP)
     TrainingExport.exportJsonl(spark, docs, outJ)
     assert(TrainingExport.shardCount(spark, outJ) === Some(64))
@@ -299,9 +299,9 @@ class TrainingExportSpec extends AnyFunSuite {
 
   test("streaming export drains into batch dirs, replays are " +
       "byte-idempotent, compact folds to the canonical layout") {
-    val src = Files.createTempDirectory("graft_expsrc").toString
-    val ckpt = Files.createTempDirectory("graft_expckpt").toString
-    val out = Files.createTempDirectory("graft_expstream").toString + "/ex"
+    val src = tempDir("graft_expsrc").toString
+    val ckpt = tempDir("graft_expckpt").toString
+    val out = tempDir("graft_expstream").toString + "/ex"
     val docs = graft.tables.Tables.documents(spark, TestSpark.sfDir)
       .select("doc_id", "text", "source")
     docs.filter(col("doc_id") < 250).coalesce(1)
@@ -337,7 +337,7 @@ class TrainingExportSpec extends AnyFunSuite {
     assert(TrainingExport.readStreamed(spark, out).count() === before)
 
     // compact folds every batch into one canonical export
-    val dest = Files.createTempDirectory("graft_expcompact").toString + "/c"
+    val dest = tempDir("graft_expcompact").toString + "/c"
     TrainingExport.compactStreamed(spark, out, dest)
     val canon = spark.read.parquet(dest)
     assert(canon.count() === docs.count())
@@ -349,7 +349,7 @@ class TrainingExportSpec extends AnyFunSuite {
   }
 
   test("a shard file carries the packing stream order") {
-    val out = Files.createTempDirectory("graft_export_ord").toString
+    val out = tempDir("graft_export_ord").toString
     TrainingExport.export(spark, sfDir, out)
     // within one shard directory the rows were written sorted by the
     // md5 stream order; reading the single file back preserves it
@@ -361,7 +361,7 @@ class TrainingExportSpec extends AnyFunSuite {
 
   test("streamed-landing takedown rewrites only the victims' " +
       "batch/shard dirs and leaves no trace") {
-    val out = Files.createTempDirectory("graft_exptkd").toString + "/ex"
+    val out = tempDir("graft_exptkd").toString + "/ex"
     val docs = graft.tables.Tables.documents(spark, TestSpark.sfDir)
       .select("doc_id", "text", "source")
     TrainingExport.exportBatch(spark,
@@ -407,11 +407,26 @@ class TrainingExportSpec extends AnyFunSuite {
     assert(kept.filter(col("doc_id").isin(victims: _*)).count() === 0)
     assert(kept.count() === allCount - nVictimRows)
     // the fold to the canonical layout serves only survivors
-    val dest = Files.createTempDirectory("graft_exptkd2").toString + "/c"
+    val dest = tempDir("graft_exptkd2").toString + "/c"
     TrainingExport.compactStreamed(spark, out, dest)
     assert(spark.read.parquet(dest)
       .filter(col("doc_id").isin(victims: _*)).count() === 0)
     assert(TrainingExport.deleteStreamedDocs(spark, out,
       victims.toDF("doc_id")) === 0L)
   }
+
+  test("a non-integer shard-modulus marker fails loudly, naming the " +
+      "marker, before any mutating pass runs") {
+    val out = tempDir("graft_export_badmarker")
+    Files.write(out.resolve("_graft_nshards"), "6x".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](
+      TrainingExport.shardCount(spark, out.toString))
+    assert(e.getMessage.contains("_graft_nshards") &&
+      e.getMessage.contains("'6x'"), e.getMessage)
+    val victims = graft.tables.Tables.documents(spark, sfDir)
+      .filter(col("doc_id") === 5L).select("doc_id")
+    intercept[IllegalStateException](
+      TrainingExport.deleteDocs(spark, out.toString, victims))
+  }
 }
+

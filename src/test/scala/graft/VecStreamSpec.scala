@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{DocumentStore, VectorIndex}
 import graft.streaming.VecStream
 
-class VecStreamSpec extends AnyFunSuite {
+class VecStreamSpec extends AnyFunSuite with TempDirs {
   import TestSpark.{sfDir, spark}
 
   private def indexSet(table: String) =
@@ -22,8 +20,8 @@ class VecStreamSpec extends AnyFunSuite {
     tables.foreach(DocumentStore.clearStale(spark, _))
 
   test("streamed index equals the batch build and searches identically") {
-    val src = Files.createTempDirectory("graft_vecsrc").toString
-    val ckpt = Files.createTempDirectory("graft_vecckpt").toString
+    val src = tempDir("graft_vecsrc").toString
+    val ckpt = tempDir("graft_vecckpt").toString
     val table = "graft_stream_vecindex"
     val base = "graft_stream_vecreg"
     VecStream.reset(base)
