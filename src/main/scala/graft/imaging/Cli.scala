@@ -30,8 +30,9 @@ import graft.sources.{FrameStorage, FrameStorageApi}
   *    local-storage mount point, local_storage.py:30-44) it MOVES THE
   *    BYTES: every manifest frame is copied from
   *    `M/raw_frames/SERIAL/` into `OUT/SERIAL/frames/` through
-  *    [[graft.sources.FrameStorage.downloadManifest]] — a distributed
-  *    semi-join copy, no driver-side file list.
+  *    [[graft.sources.FrameStorage.downloadManifest]] — one Spark job
+  *    that copies each manifest name by key inside its partition, with
+  *    no listing and no driver-side file list.
   *  - `upload --csv F --config F --store OUT` — the uploader contract
   *    (data_uploader.py:19-58): csv rows (dataset_id, file_name,
   *    description), config JSON with upload_type/frames_format;
@@ -44,7 +45,9 @@ import graft.sources.{FrameStorage, FrameStorageApi}
   * exports one dataset; upload registers the csv's datasets). An
   * upload parses the csv on the driver, then splits every file once in
   * one job that also stores the frames (`--mount`) and writes
-  * `frames.parquet`; `global_meta.parquet` aggregates that table.
+  * `frames.parquet`; a second, shuffle-free job aggregates that table
+  * into `global_meta.parquet`. A `tif_id` upload runs these two jobs
+  * only.
   */
 object Cli {
 
@@ -191,9 +194,9 @@ object Cli {
         sliceIds = ints("slices"), timeIds = ints("times"),
         posIds = ints("positions")).cache()
       // real byte movement when the storage mount is given
-      // (data_downloader.py's fetch loop): manifest frames copy from
-      // the dataset's raw_frames directory into OUT/frames via the
-      // distributed semi-join — no driver-side file list
+      // (data_downloader.py's fetch loop): manifest frames copy by
+      // name from the dataset's raw_frames directory into OUT/frames
+      // in one job — no listing, no driver-side file list
       s.get("mount").foreach { mount =>
         val st = new FrameStorage(mount, s"raw_frames/$id")
         val n = st.downloadManifest(spark,

@@ -12,8 +12,9 @@ import graft.multimodal.{ImageCodec, TiffCodec}
   * (db_operations.py:145-215) writes.
   *
   * At 100 TB this is the ingest shape: the listing is a dataframe (from
-  * object-store inventory), parsing is pure column work, and the only
-  * shuffle is the per-dataset metadata aggregate.
+  * object-store inventory), parsing is pure column work, and the
+  * per-dataset metadata aggregate runs over one upload's payload-free
+  * rows in one partition, with no shuffle.
   */
 object SplitterIngest {
 
@@ -76,16 +77,26 @@ object SplitterIngest {
   /** The global metadata the splitter assembles per dataset
     * (file_splitter.py set_global_meta): frame counts and per-dimension
     * cardinalities, validated the way meta_utils.validate_global_meta
-    * requires every field present.
+    * requires every field present. A cardinality counts the distinct
+    * non-null indices, as `countDistinct` does.
+    *
+    * One upload's payload-free frames rows are bounded by what its
+    * operator uploads (the csv's datasets times their pages), so they
+    * are aggregated in ONE partition: the grouping needs no exchange and
+    * each cardinality is the size of a per-group set rather than a
+    * distinct aggregate, which Spark would plan as an Expand plus two
+    * exchanges. The aggregate adds no job to the one that writes it.
     */
-  def globalMetaFromFrames(parsed: DataFrame): DataFrame =
-    parsed.groupBy("dataset_serial")
+  def globalMetaFromFrames(parsed: DataFrame): DataFrame = {
+    def cardinality(c: String) = size(collect_set(col(c))).cast("long")
+    parsed.coalesce(1).groupBy("dataset_serial")
       .agg(
         count(lit(1)).as("nbr_frames"),
-        countDistinct(col("slice_idx")).as("nbr_slices"),
-        countDistinct(col("channel_idx")).as("nbr_channels"),
-        countDistinct(col("time_idx")).as("nbr_timepoints"),
-        countDistinct(col("pos_idx")).as("nbr_positions"))
+        cardinality("slice_idx").as("nbr_slices"),
+        cardinality("channel_idx").as("nbr_channels"),
+        cardinality("time_idx").as("nbr_timepoints"),
+        cardinality("pos_idx").as("nbr_positions"))
+  }
 
   /** Full ingest: listing → parsed frames + global meta, with the
     * insert-time uniqueness check (assert_unique_id) as an audit

@@ -1,7 +1,8 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{FileSystems, Files, Paths, StandardCopyOption}
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -14,9 +15,13 @@ import graft.multimodal.ImageCodec
   * per-dataset process/thread pool (data_storage.py:161,
   * s3_storage.py:102); here the same role is played by executor
   * parallelism — uploads are a `mapPartitions` writer loop over the
-  * frame DataFrame and reads come back through Spark's `binaryFile`
-  * source, so a 1000-executor cluster moves 1000 frames at a time with
-  * no coordinator loop, identically for every backend.
+  * frame DataFrame, manifest copies and deletes a `mapPartitions`
+  * walk that gets or deletes each named object by key, and whole-set
+  * reads come back through Spark's `binaryFile` source, so a
+  * 1000-executor cluster moves 1000 frames at a time with no
+  * coordinator loop, identically for every backend. Each byte path is
+  * one shuffle-free Spark job whose per-partition counts the driver
+  * adds up.
   *
   * Backends supply only the reference's true per-backend seams:
   * existence semantics (directory checks for local_storage.py,
@@ -85,23 +90,26 @@ trait FrameStorageApi extends Serializable {
     * real object under the dataset base; existing names are skipped per
     * the reference's overwrite guard. Returns (written, skipped) —
     * the reference prints skips; a Spark job surfaces them as data.
-    * The writes run in [[FrameStorageApi.putAll]], the one writer loop.
+    * The writes run in [[FrameStorageApi.putAll]], the one writer loop;
+    * each partition returns its two counts and the driver adds them up,
+    * so the upload is one job with no shuffle.
     */
   def uploadFrames(framed: DataFrame): (Long, Long) = {
     prepareUpload()
     val self = this
     val spark = framed.sparkSession
     import spark.implicits._
-    val flags = framed.select(col("file_name"), col("payload"))
+    framed.select(col("file_name"), col("payload"))
       .as[(String, Array[Byte])]
-      .mapPartitions(rows => FrameStorageApi.putAll(rows)(
-        _ => self, _._1, _._2)((_, written) => written))
-      .toDF("written")
-      .agg(
-        coalesce(sum(when(col("written"), 1L).otherwise(0L)), lit(0L)),
-        coalesce(sum(when(col("written"), 0L).otherwise(1L)), lit(0L)))
-      .head()
-    (flags.getLong(0), flags.getLong(1))
+      .mapPartitions { rows =>
+        val written = FrameStorageApi.putAll(rows)(
+          _ => self, _._1, _._2)((_, w) => w)
+        var (w, s) = (0L, 0L)
+        written.foreach(if (_) w += 1 else s += 1)
+        Iterator.single((w, s))
+      }
+      .collect()
+      .foldLeft((0L, 0L)) { case ((w, s), (pw, ps)) => (w + pw, s + ps) }
   }
 
   /** Single-image upload with the overwrite guard (upload_im,
@@ -176,33 +184,32 @@ trait FrameStorageApi extends Serializable {
     else downloadManifest(spark, fileNames.toDF("file_name"), destDir)
   }
 
-  /** Manifest-driven download with NO driver-side file list: the stored
-    * frame NAMES ([[listFrames]], no payload read) semi-join the
-    * manifest DataFrame on file_name, and each match is copied from its
-    * storage path inside its partition — so only the copied frames are
-    * read, and manifests scale past what a driver could hold. Returns
-    * files copied.
+  /** Manifest-driven download with NO driver-side file list and no
+    * listing: each manifest name is copied by key from its storage path
+    * inside the manifest's own partition ([[walkManifest]]), so only
+    * the named frames are read, and manifests scale past what a driver
+    * could hold. A name repeated across partitions is copied and
+    * counted by one task only: the first to claim it in a per-call
+    * claims directory under `destDir`, which the driver removes when
+    * the job ends. Returns files copied.
     */
   def downloadManifest(spark: SparkSession, manifest: DataFrame,
       destDir: String): Long = {
     Files.createDirectories(Paths.get(destDir))
+    val claims = Files.createDirectory(
+      Paths.get(destDir, s".claims-${java.util.UUID.randomUUID}"))
+    val claimsDir = claims.toString
     val self = this
-    import spark.implicits._
-    listFrames(spark)
-      .join(broadcast(manifest.select("file_name").distinct()),
-        Seq("file_name"), "left_semi")
-      .as[String]
-      .mapPartitions { names =>
-        FrameStorage.assertMounted(destDir)
-        names.map { name =>
-          Files.copy(Paths.get(self.getStoragePath(name)),
-            Paths.get(destDir, name), StandardCopyOption.REPLACE_EXISTING)
-          1L
-        }
+    try walkManifest(manifest) { () =>
+      self.checkVisible()
+      FrameStorage.assertMounted(destDir)
+    } { name =>
+      FrameStorageApi.claim(claimsDir, name) && {
+        Files.copy(Paths.get(self.getStoragePath(name)),
+          Paths.get(destDir, name), StandardCopyOption.REPLACE_EXISTING)
+        true
       }
-      .toDF("n")
-      .agg(coalesce(sum("n"), lit(0L)))
-      .head().getLong(0)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(claims.toFile)
   }
 
   /** Single-file download, unopened (download_file,
@@ -217,9 +224,9 @@ trait FrameStorageApi extends Serializable {
   /** Stored frame NAMES as a DataFrame — the listing-only projection
     * of [[readFrames]]: the binaryFile source prunes the `content`
     * column when it isn't selected, so this is a distributed file
-    * LISTING, no payload bytes move. The delete path reads this, not
-    * [[readFrames]] — downloading a frame to delete it would be
-    * paying the takedown's dominant cost for nothing.
+    * LISTING, no payload bytes move. The manifest paths
+    * ([[downloadManifest]], [[deleteManifest]]) never list: they act
+    * on the manifest's names by key.
     */
   def listFrames(spark: SparkSession): DataFrame =
     spark.read.format("binaryFile")
@@ -228,28 +235,43 @@ trait FrameStorageApi extends Serializable {
       .select(element_at(split(col("path"), "/"), -1).as("file_name"))
 
   /** Manifest-driven distributed blob delete — [[downloadManifest]]'s
-    * shape in reverse, and the piece a takedown legally targets: the
-    * stored PNG BYTES of the victim frames. The stored names semi-join
-    * the manifest on file_name and each match unlinks inside its
-    * partition — no driver-side file list, scaling to manifests a
-    * driver couldn't hold (a victim dataset's frame roster comes
-    * straight off the metadata store as a DataFrame). Idempotent:
+    * walk with an unlink in place of the copy, and the piece a takedown
+    * legally targets: the stored PNG BYTES of the victim frames. Each
+    * manifest name is deleted by key inside its partition — no listing
+    * and no driver-side file list, scaling to manifests a driver
+    * couldn't hold (a victim dataset's frame roster comes straight off
+    * the metadata store as a DataFrame). The unlink is atomic, so a
+    * name repeated across partitions counts once. Idempotent:
     * already-gone names count zero. Returns blobs deleted.
     */
   def deleteManifest(spark: SparkSession, manifest: DataFrame): Long = {
     val self = this
-    import spark.implicits._
-    listFrames(spark)
-      .join(broadcast(manifest.select("file_name").distinct()),
-        Seq("file_name"), "left_semi")
-      .as[String]
-      .mapPartitions { rows =>
-        self.checkVisible()
-        rows.map(name => if (self.deleteObject(name)) 1L else 0L)
-      }
-      .toDF("n")
-      .agg(coalesce(sum("n"), lit(0L)))
-      .head().getLong(0)
+    walkManifest(manifest)(() => self.checkVisible())(self.deleteObject)
+  }
+
+  /** The one by-name walker of the manifest byte paths: one job over
+    * `manifest`'s `file_name` column, no listing and no shuffle. Each
+    * partition runs `check` once, then `act` once per distinct name
+    * that is a plain frame name ([[FrameStorageApi.isFrameName]]) and
+    * is stored as a regular file directly under [[idStoragePath]];
+    * `act` is true when it copied or deleted that object. The driver
+    * adds up the partitions' counts. Null, unsafe and missing names
+    * count 0; a name repeated across partitions counts once only if
+    * `act` itself is exactly-once across tasks.
+    */
+  private def walkManifest(manifest: DataFrame)(check: () => Unit)(
+      act: String => Boolean): Long = {
+    val root = idStoragePath
+    manifest.select(col("file_name").cast("string"))
+      .as[String](Encoders.STRING)
+      .mapPartitions { names =>
+        check()
+        val seen = scala.collection.mutable.HashSet.empty[String]
+        Iterator.single(names.count(name =>
+          FrameStorageApi.isFrameName(name) && seen.add(name) &&
+            Files.isRegularFile(Paths.get(root, name)) && act(name)).toLong)
+      }(Encoders.scalaLong)
+      .collect().sum
   }
 
   /** Bulk dataset takedown: remove EVERY stored object under the
@@ -288,6 +310,36 @@ object FrameStorageApi {
     * copy and delete both; a PNG decode of a `.raw` payload fails.
     */
   val FrameGlob = "*.{png,raw}"
+
+  /** A manifest name the byte paths act on: one path element (no `/`,
+    * no NUL), not hidden (no leading `.` or `_`, the names Spark's file
+    * sources skip, `..` among them) and matching [[FrameGlob]] — the
+    * names a listing of the dataset base could return.
+    */
+  private def isFrameName(name: String): Boolean =
+    name != null && !name.exists(c => c == '/' || c == '\u0000') &&
+      !name.startsWith(".") && !name.startsWith("_") &&
+      frameGlob.matches(Paths.get(name))
+
+  private lazy val frameGlob =
+    FileSystems.getDefault.getPathMatcher(s"glob:$FrameGlob")
+
+  /** The cross-task dedup of a manifest copy: true iff this task's
+    * partition owns `name` in `claimsDir`. The first task to claim a
+    * name creates a symbolic link named after it whose target is the
+    * task's partition index (one atomic create, so two partitions never
+    * both win); a retried attempt of the owning partition reads its own
+    * index back and owns the name again.
+    */
+  private def claim(claimsDir: String, name: String): Boolean = {
+    val owner = Paths.get(TaskContext.getPartitionId().toString)
+    val link = Paths.get(claimsDir, name)
+    try { Files.createSymbolicLink(link, owner); true }
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        Files.readSymbolicLink(link) == owner
+    }
+  }
 
   /** The one executor-side writer loop of every distributed upload.
     * Each row's payload goes to its `storage` through the atomic

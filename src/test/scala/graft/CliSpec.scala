@@ -13,7 +13,7 @@ import graft.imaging.Cli
   * subcommand produces the same artifacts as the underlying library
   * call it wraps.
   */
-class CliSpec extends AnyFunSuite {
+class CliSpec extends AnyFunSuite with TempDirs {
   private val spark = TestSpark.spark
   private val sfDir = TestSpark.sfDir
 
@@ -71,7 +71,7 @@ class CliSpec extends AnyFunSuite {
   test("download writes metadata export + filtered manifest") {
     val serial = graft.imaging.ImagingDb.getDatasets(spark, sfDir)
       .select("dataset_serial").head().getString(0)
-    val dest = Files.createTempDirectory("cli_dl").toString
+    val dest = tempDir("cli_dl").toString
     assert(Cli.run(spark, Seq("download", "--dir", sfDir,
       "--id", serial, "--dest", dest, "-c", "DAPI", "GFP")) == 0)
     assert(Files.exists(Paths.get(s"$dest/$serial/global_metadata.json")))
@@ -93,7 +93,7 @@ class CliSpec extends AnyFunSuite {
       .filter(col("frames"))
       .select("dataset_serial").head().getString(0)
     // populate local storage for that dataset (the upload side)
-    val mount = Files.createTempDirectory("cli_mount").toString
+    val mount = tempDir("cli_mount").toString
     val framed = graft.multimodal.BinaryFrames.withPayload(spark, sfDir)
       .join(graft.imaging.ImagingModel.dataSet(spark, sfDir)
         .filter(col("dataset_serial") === serial)
@@ -102,7 +102,7 @@ class CliSpec extends AnyFunSuite {
     val st = new graft.sources.FrameStorage(mount, s"raw_frames/$serial")
     st.uploadFrames(framed)
     // CLI download with the mount: bytes must land under dest/frames
-    val dest = Files.createTempDirectory("cli_dl3").toString
+    val dest = tempDir("cli_dl3").toString
     assert(Cli.run(spark, Seq("download", "--dir", sfDir,
       "--id", serial, "--dest", dest, "--mount", mount)) == 0)
     val out = Paths.get(s"$dest/$serial/frames")
@@ -132,7 +132,7 @@ class CliSpec extends AnyFunSuite {
   test("download --no-download/--no-metadata skip their artifacts") {
     val serial = graft.imaging.ImagingDb.getDatasets(spark, sfDir)
       .select("dataset_serial").head().getString(0)
-    val dest = Files.createTempDirectory("cli_dl2").toString
+    val dest = tempDir("cli_dl2").toString
     assert(Cli.run(spark, Seq("download", "--dir", sfDir,
       "--id", serial, "--dest", dest, "--no-download")) == 0)
     assert(Files.exists(Paths.get(s"$dest/$serial/global_metadata.json")))
@@ -140,7 +140,7 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("upload runs the splitter twin over the csv's listings") {
-    val tmp = Files.createTempDirectory("cli_up")
+    val tmp = tempDir("cli_up")
     val listing = tmp.resolve("frames.txt")
     Files.writeString(listing,
       (for (c <- 0 to 1; z <- 0 to 2; t <- 0 to 1)
@@ -165,7 +165,7 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("upload dispatches ome_tiff listings to the metadata splitter") {
-    val tmp = Files.createTempDirectory("cli_up_ome")
+    val tmp = tempDir("cli_up_ome")
     val listing = tmp.resolve("pages.txt")
     Files.writeString(listing,
       (for (c <- 0 to 1; z <- 0 to 1) yield
@@ -191,7 +191,7 @@ class CliSpec extends AnyFunSuite {
 
   test("upload config: frames_format defaults to sms_name and values " +
       "lower-case; malformed JSON is an error") {
-    val tmp = Files.createTempDirectory("cli_up_cfg")
+    val tmp = tempDir("cli_up_cfg")
     val listing = tmp.resolve("frames.txt")
     Files.writeString(listing,
       (0 to 2).map(z => f"im_c000_z$z%03d_t000_p000.png").mkString("\n"))
@@ -218,7 +218,7 @@ class CliSpec extends AnyFunSuite {
 
   test("upload csv columns are found by header name; a quoted field may " +
       "hold a comma") {
-    val tmp = Files.createTempDirectory("cli_up_csv")
+    val tmp = tempDir("cli_up_csv")
     val listing = tmp.resolve("frames.txt")
     Files.writeString(listing,
       (0 to 3).map(z => f"im_c000_z$z%03d_t000_p000.png").mkString("\n"))
@@ -241,7 +241,7 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("upload csv without a file_name column or data rows is an error") {
-    val tmp = Files.createTempDirectory("cli_up_nocol")
+    val tmp = tempDir("cli_up_nocol")
     val cfg = Files.writeString(tmp.resolve("config.json"),
       """{"upload_type": "frames", "frames_format": "sms_name"}""")
     def upload(body: String): Int = {
@@ -259,7 +259,7 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("upload rejects formats the CLI cannot honestly run") {
-    val tmp = Files.createTempDirectory("cli_up_bad")
+    val tmp = tempDir("cli_up_bad")
     val listing = tmp.resolve("l.txt")
     Files.writeString(listing, "whatever.tif")
     val csv = tmp.resolve("u.csv")

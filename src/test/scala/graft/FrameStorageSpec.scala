@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.graft.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
@@ -17,14 +19,13 @@ import graft.sources.{FrameStorage, FrameStorageApi, S3FrameStorage}
   * reference's DataStorage subclasses promise exactly this
   * substitutability between local_storage and s3_storage).
   */
-abstract class FrameStorageContract extends AnyFunSuite {
+abstract class FrameStorageContract extends AnyFunSuite with TempDirs {
   import TestSpark.{sfDir, spark}
 
   def backend: String
   def mkStorage(root: String, storageDir: String): FrameStorageApi
 
-  private def mount() =
-    Files.createTempDirectory(s"graft_${backend}_mount").toString
+  private def mount() = tempDir(s"graft_${backend}_mount").toString
 
   /** One dataset's frames with real PNG payloads + grid indices —
     * smallest dataset that still has ≥6 frames (the download test
@@ -140,7 +141,7 @@ abstract class FrameStorageContract extends AnyFunSuite {
     val st = mkStorage(m, s"raw_frames/$dsId")
     st.uploadFrames(framed)
     val names = framed.select("file_name").collect().map(_.getString(0))
-    val dest = Files.createTempDirectory("graft_dl").toString
+    val dest = tempDir("graft_dl").toString
     val n = st.downloadFiles(spark, names.take(3).toSeq, dest)
     assert(n === 3L)
     for (name <- names.take(3)) {
@@ -151,7 +152,7 @@ abstract class FrameStorageContract extends AnyFunSuite {
     // manifest-driven (no driver list): semi-join copy of 2 names
     import spark.implicits._
     val manifest = names.slice(3, 5).toSeq.toDF("file_name")
-    val dest2 = Files.createTempDirectory("graft_dl2").toString
+    val dest2 = tempDir("graft_dl2").toString
     assert(st.downloadManifest(spark, manifest, dest2) === 2L)
     assert(Files.list(Paths.get(dest2)).count() === 2L)
   }
@@ -168,7 +169,7 @@ abstract class FrameStorageContract extends AnyFunSuite {
       .sum
     import spark.implicits._
     val manifest = names.toDF("file_name")
-    val dest = Files.createTempDirectory("graft_dl_read").toString
+    val dest = tempDir("graft_dl_read").toString
     val sc = spark.sparkContext
     TestBus.drain(sc)
     val read = new java.util.concurrent.atomic.AtomicLong
@@ -186,6 +187,37 @@ abstract class FrameStorageContract extends AnyFunSuite {
       s"fetching 4 frames ($copied bytes) read ${read.get} input bytes")
     for (n <- names) assert(Files.readAllBytes(Paths.get(dest, n)).toSeq ===
       Files.readAllBytes(Paths.get(st.getStoragePath(n))).toSeq)
+  }
+
+  test(s"[$backend] manifest copy and delete act on stored plain names " +
+      "only, each once, and touch nothing outside the dataset base") {
+    val m = mount()
+    val st = mkStorage(m, "raw_frames/ds")
+    val png = ImageCodec.encodeGray8(new Array[Byte](4), 2, 2)
+    for (n <- Seq("a.png", "b.png", "c.png")) assert(st.uploadIm(n, png))
+    // decoys each unsafe name would reach: a sibling of the dataset
+    // base, a nested object and a non-frame object
+    val base = Paths.get(st.idStoragePath)
+    val decoys = Seq(base.resolveSibling("x.png"), base.resolve("sub/x.png"),
+      base.resolve("x.tif"))
+    for (d <- decoys) {
+      Files.createDirectories(d.getParent)
+      Files.write(d, png)
+    }
+    import spark.implicits._
+    val names = Seq("a.png", "../x.png", "sub/x.png", "b.png",
+      "x.tif", "missing.png", null, "a.png")
+    val rdd = spark.sparkContext.parallelize(names, 2)
+    assert(rdd.glom().collect().count(_.contains("a.png")) === 2)
+    val manifest = rdd.toDF("file_name")
+    val dest = tempDir("graft_dl_safe")
+    assert(st.downloadManifest(spark, manifest, dest.toString) === 2L)
+    assert(Files.list(dest).iterator.asScala.map(_.getFileName.toString)
+      .toSet === Set("a.png", "b.png"))
+    assert(st.deleteManifest(spark, manifest) === 2L)
+    assert(Files.list(base).iterator.asScala.map(_.getFileName.toString)
+      .toSet === Set("c.png", "sub", "x.tif"))
+    for (d <- decoys) assert(Files.readAllBytes(d).toSeq === png.toSeq, d)
   }
 
   test(s"[$backend] takedown deletes exactly the manifest's blobs; " +
@@ -234,7 +266,7 @@ class S3FrameStorageSpec extends FrameStorageContract {
   def mkStorage(root: String, dir: String) = new S3FrameStorage(root, dir)
 
   test("[s3] existence is a string-prefix listing, not a directory stat") {
-    val bucket = Files.createTempDirectory("graft_s3_bucket").toString
+    val bucket = tempDir("graft_s3_bucket").toString
     val st1 = new S3FrameStorage(bucket, "raw_frames/ds1")
     assert(st1.uploadIm("a.png", ImageCodec.encodeGray8(new Array[Byte](4), 2, 2)))
     // key-granular check: an exact key that exists vs one that doesn't
@@ -246,7 +278,7 @@ class S3FrameStorageSpec extends FrameStorageContract {
     // `raw_frames/ds10/b.png` — the twin reproduces the API's
     // behavior rather than papering over it (callers scope with a
     // trailing separator, exactly as against the real service)
-    val bucket2 = Files.createTempDirectory("graft_s3_bucket2").toString
+    val bucket2 = tempDir("graft_s3_bucket2").toString
     val st10 = new S3FrameStorage(bucket2, "raw_frames/ds10")
     assert(st10.uploadIm("b.png", ImageCodec.encodeGray8(new Array[Byte](4), 2, 2)))
     intercept[IllegalArgumentException] {

@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.imaging.{ImagingModel, ImagingOps, SplitterIngest}
 
-class ImagingSpec extends AnyFunSuite {
+class ImagingSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import TestSpark.{sfDir, spark}
 
   test("entry returns rows") {
@@ -91,6 +93,57 @@ class ImagingSpec extends AnyFunSuite {
         parsed.select("dataset_serial", "file_name")))
     assert(gMeta.except(gName).count() === 0)
     assert(gName.except(gMeta).count() === 0)
+  }
+
+  test("globalMetaFromFrames keeps the countDistinct rows and schema " +
+      "with no Expand or exchange") {
+    import spark.implicits._
+    // the distinct-aggregate form the aggregate replaced
+    def reference(parsed: DataFrame) = parsed.groupBy("dataset_serial")
+      .agg(
+        count(lit(1)).as("nbr_frames"),
+        countDistinct(col("slice_idx")).as("nbr_slices"),
+        countDistinct(col("channel_idx")).as("nbr_channels"),
+        countDistinct(col("time_idx")).as("nbr_timepoints"),
+        countDistinct(col("pos_idx")).as("nbr_positions"))
+    // wrapped indices: 40 pages over 2 channels x 3 slices; more than
+    // 64 distinct values: 100 slices
+    val tifId = SplitterIngest.parseTifId(Seq(
+        ("wrap", 40, "channels=2\nslices=3", 1, 16),
+        ("wide", 200, "channels=2\nslices=100", 1, 8))
+      .toDF("dataset_serial", "nbr_frames", "im_description",
+        "samples_per_pixel", "bits_per_sample"))
+    // null indices: an ome_tiff listing whose pages lack Slice (all of
+    // one dataset, some of another) or PositionIndex
+    def page(c: Int, z: Option[Int], t: Int, p: Option[Int]) =
+      "{\"MicroManagerMetadata\":{" + (Seq(s"\"ChannelIndex\":$c",
+        s"\"FrameIndex\":$t", "\"Channel\":\"DAPI\"") ++
+        z.map(v => s"\"Slice\":$v") ++
+        p.map(v => s"\"PositionIndex\":$v")).mkString(",") + "}}"
+    val ome = SplitterIngest.parseMetadata(Seq(
+        ("noslice", page(0, None, 0, Some(0))),
+        ("noslice", page(1, None, 1, Some(0))),
+        ("some", page(0, Some(0), 0, None)),
+        ("some", page(0, None, 0, Some(2))),
+        ("some", page(1, Some(3), 0, Some(2))))
+      .toDF("dataset_serial", "metadata_json"))
+    for (parsed <- Seq(tifId, ome)) {
+      val got = SplitterIngest.globalMetaFromFrames(parsed)
+      val want = reference(parsed)
+      assert(got.schema === want.schema)
+      assert(got.orderBy("dataset_serial").collect().toSeq ===
+        want.orderBy("dataset_serial").collect().toSeq)
+      val plan = got.queryExecution.executedPlan
+      assert(collect(plan) {
+        case e: org.apache.spark.sql.execution.ExpandExec => e
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }.isEmpty, plan.toString)
+    }
+    assert(SplitterIngest.globalMetaFromFrames(tifId)
+      .orderBy("dataset_serial").collect().map(_.toSeq).toSeq === Seq(
+        Seq("wide", 200L, 100L, 2L, 1L, 1L), Seq("wrap", 40L, 3L, 2L, 1L, 1L)))
+    assert(SplitterIngest.globalMetaFromFrames(ome)
+      .filter(col("dataset_serial") === "noslice").head().getLong(2) === 0L)
   }
 
   test("frame info from summary follows the GRAY/RGB and bit-depth rules") {

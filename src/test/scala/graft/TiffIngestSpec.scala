@@ -21,7 +21,7 @@ import graft.sources.FrameStorage
   * reader — and the Cli upload path drives it end to end into frame
   * storage.
   */
-class TiffIngestSpec extends AnyFunSuite {
+class TiffIngestSpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
 
   /** channels=2 × slices=2 × frames(time)=2 gray16 stack with
@@ -279,8 +279,8 @@ class TiffIngestSpec extends AnyFunSuite {
   }
 
   test("Cli upload tif_id: real TIFF -> store parquet + storage PNGs") {
-    val dir = Files.createTempDirectory("graft_tifup")
-    val mount = Files.createTempDirectory("graft_tifmount").toString
+    val dir = tempDir("graft_tifup")
+    val mount = tempDir("graft_tifmount").toString
     val store = uploadTifId(dir,
       Seq("TIFF-2026-02" -> plantedTiff(lzw = true, predictor = 2)), mount)
     // registered frames: 8 rows, the generated db names, global meta
@@ -307,8 +307,8 @@ class TiffIngestSpec extends AnyFunSuite {
 
   test("Cli upload tif_id: two serials -> each dataset's storage holds " +
       "exactly its own PNGs; a re-run writes nothing") {
-    val dir = Files.createTempDirectory("graft_tifup2")
-    val mount = Files.createTempDirectory("graft_tifmount2").toString
+    val dir = tempDir("graft_tifup2")
+    val mount = tempDir("graft_tifmount2").toString
     val serials = Seq("TIFF-2026-A", "TIFF-2026-B")
     // each serial's stack carries its own pixels (page keys 8k..8k+7),
     // so a frame routed to the other serial's storage shows
@@ -355,8 +355,8 @@ class TiffIngestSpec extends AnyFunSuite {
           Array.tabulate(64 * 64)(i => (i * 31 + (8 * k + p) * 977) % 65536))),
       description = Some("channels=2\nslices=2\nframes=2"))
     val stacks = Seq("READ-2026-A" -> stack(0), "READ-2026-B" -> stack(1))
-    val dir = Files.createTempDirectory("graft_tifread")
-    val mount = Files.createTempDirectory("graft_tifreadmount").toString
+    val dir = tempDir("graft_tifread")
+    val mount = tempDir("graft_tifreadmount").toString
     val sc = spark.sparkContext
     TestBus.drain(sc)
     val read = new AtomicLong
@@ -379,8 +379,8 @@ class TiffIngestSpec extends AnyFunSuite {
 
   test("float tif_id frames (.raw) download, list and delete by manifest; " +
       "a PNG decode of them fails loudly") {
-    val dir = Files.createTempDirectory("graft_tifupf")
-    val mount = Files.createTempDirectory("graft_tifmountf").toString
+    val dir = tempDir("graft_tifupf")
+    val mount = tempDir("graft_tifmountf").toString
     val serial = "TIFF-F-2026-02"
     val store = uploadTifId(dir, Seq(serial -> plantedFloatTiff()), mount)
     val st = new FrameStorage(mount, s"raw_frames/$serial")
@@ -390,7 +390,7 @@ class TiffIngestSpec extends AnyFunSuite {
     assert(names.size === 4 && names.forall(_.endsWith(".raw")))
     assert(st.listFrames(spark).collect().map(_.getString(0)).toSet
       === names)
-    val dest = Files.createTempDirectory("graft_tifdlf").toString
+    val dest = tempDir("graft_tifdlf").toString
     assert(st.downloadManifest(spark, manifest, dest) === 4L)
     for (n <- names)
       assert(Files.readAllBytes(Paths.get(dest, n)).toSeq ===
@@ -407,7 +407,7 @@ class TiffIngestSpec extends AnyFunSuite {
 
   test("Cli upload tif_folder: folder of single-page tifs -> store " +
       "parquet + storage PNGs") {
-    val dir = Files.createTempDirectory("graft_tiffolder")
+    val dir = tempDir("graft_tiffolder")
     val folder = dir.resolve("acq")
     Files.createDirectory(folder)
     // 2 channels × 2 slices, SMS-style names; DAPI sorts before phase
@@ -431,7 +431,7 @@ class TiffIngestSpec extends AnyFunSuite {
     Files.writeString(cfg,
       """{"upload_type": "frames", "frames_format": "tiff_folder"}""")
     val store = dir.resolve("store").toString
-    val mount = Files.createTempDirectory("graft_foldermount").toString
+    val mount = tempDir("graft_foldermount").toString
     assert(Cli.run(spark, Seq("upload", "--csv", csv.toString,
       "--config", cfg.toString, "--store", store,
       "--mount", mount)) === 0)
